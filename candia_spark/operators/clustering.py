@@ -37,15 +37,13 @@ engines). Overflow margins are CHECKED at runtime, not just documented
 materialized centroid table bounds the worst per-term |n*x - s| against
 the decimal(18,0) cast limit and the dim-term decimal(38,0) accumulator,
 and caps cluster size where n*n must stay in bigint — a violation raises
-loudly instead of wrapping silently (see _check_overflow_margins; ~1e13
+loudly instead of wrapping silently (see _raise_overflow_margin; ~1e13
 members of headroom at scale=1000 with unit-norm embeddings).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -161,7 +159,7 @@ def _recenter(assign: DataFrame, keys: list[str]) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         # overflow-guard statistics (ADVICE r5): largest |component| seen
         # in this centroid's members — a free extra column on an agg that
-        # shuffles anyway, consumed by _check_overflow_margins
+        # shuffles anyway, consumed by _raise_overflow_margin
         F.max(F.abs("v")).alias("m"),
     )
     return sums.groupBy(*keys).agg(
@@ -198,7 +196,7 @@ def _validate_quantization_margins(
     q: DataFrame, materialize: bool, iters: int
 ) -> tuple:
     """Up-front overflow validation (advice r6 #3): the per-iteration
-    :func:`_check_overflow_margins` runs only AFTER a re-centering on a
+    :func:`_raise_overflow_margin` runs only AFTER a re-centering on a
     materialized centroid table, so an ``iters=1`` run (no re-centering),
     the first assignment against the n=1 seed table, and every iteration
     of a ``materialize=False`` run used to execute unchecked. One corpus
@@ -222,8 +220,8 @@ def _validate_quantization_margins(
 
 def _quantization_stat_aggs() -> list:
     """The three aggregates the up-front margin validation reads —
-    shared by the standalone collect form and the Observation that
-    rides the quantized corpus's materialization job."""
+    shared by the standalone collect form and the quantized corpus's
+    cut."""
     return [
         F.count(F.lit(1)).alias("n_rows"),
         F.max(
@@ -263,27 +261,28 @@ def _raise_quantization_margins(
         )
 
 
-def _check_overflow_margins(cent: DataFrame) -> None:
-    """Raise before a silent wrap can happen: bound the worst per-term
-    |n*x - s| by nmax * global max|qv| + max|s| (all exact python ints
-    from one k-row collect) and require it under BOTH the decimal(18,0)
-    term cast (1e18, which also covers the bigint intermediate) and the
-    decimal(38,0) accumulator with dim terms; separately cap n where n*n
-    must stay in bigint. Margins are astronomically wide at defaults
-    (~1e13 members at scale=1000 for unit-norm embeddings), so this fires
-    only on genuinely unsafe scale/k choices."""
-    row = cent.agg(
+def _overflow_margin_aggs() -> list:
+    """The k-row aggregates over a re-centered centroid table that bound
+    the worst per-term |n*x - s| (see :func:`_raise_overflow_margin`);
+    they ride the table's own cut."""
+    return [
         F.max("n").alias("n"),
         F.max("__qmax").alias("q"),
         F.max("__smax").alias("s"),
         F.max(F.size("sv")).alias("dim"),
-    ).collect()[0]
-    _raise_overflow_margin(row["n"], row["q"], row["s"], row["dim"])
+    ]
 
 
 def _raise_overflow_margin(n, q, s, dim) -> None:
-    """The raise logic of :func:`_check_overflow_margins`, shared with
-    the Observation-riding form (:func:`_materialize_checked`)."""
+    """Raise before a silent wrap can happen: bound the worst per-term
+    |n*x - s| by nmax * global max|qv| + max|s| (all exact python ints
+    from :func:`_overflow_margin_aggs`) and require it under BOTH the
+    decimal(18,0) term cast (1e18, which also covers the bigint
+    intermediate) and the decimal(38,0) accumulator with dim terms;
+    separately cap n where n*n must stay in bigint. Margins are
+    astronomically wide at defaults (~1e13 members at scale=1000 for
+    unit-norm embeddings), so this fires only on genuinely unsafe
+    scale/k choices."""
     if n is None:
         return
     nmax = int(n)
@@ -300,35 +299,6 @@ def _raise_overflow_margin(n, q, s, dim) -> None:
             "non-ANSI arithmetic. Reduce `scale` or increase `k` "
             "(smaller clusters) — see the module docstring margins."
         )
-
-
-def _materialize_checked(cent: DataFrame) -> DataFrame:
-    """Materialize a re-centered centroid table with the overflow-margin
-    inputs riding the SAME eager-checkpoint job as an Observation (the
-    graph.py round-9 device, verified Spark 4.1) — one job per
-    iteration, guard included, instead of a materialize job plus a
-    separate k-row collect job. The reliable-mode persist() path is
-    lazy (no action to fire the metrics), so it keeps the explicit
-    aggregate; the check itself is unchanged either way."""
-    from candia_spark.operators.dedup import _materialize
-
-    if os.environ.get("CANDIA_SPARK_RELIABLE"):
-        cent = _materialize(cent)
-        _check_overflow_margins(cent)
-        return cent
-    obs = Observation()
-    cent = _materialize(
-        cent.observe(
-            obs,
-            F.max("n").alias("n"),
-            F.max("__qmax").alias("q"),
-            F.max("__smax").alias("s"),
-            F.max(F.size("sv")).alias("dim"),
-        )
-    )
-    got = obs.get
-    _raise_overflow_margin(got["n"], got["q"], got["s"], got["dim"])
-    return cent
 
 
 def _farthest_point_seeds(
@@ -455,28 +425,22 @@ def _assignments(
         raise ValueError(
             f"seeding must be 'min_id' or 'farthest', got {seeding!r}"
         )
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     q = _quantized(df, scale, vec_col, id_col)
-    if materialize and not os.environ.get("CANDIA_SPARK_RELIABLE"):
+    if materialize:
         # ONE corpus pass serves both: the up-front margin validation
-        # rides the quantized corpus's own eager-checkpoint job as an
-        # Observation (replacing a separate validation aggregate job),
-        # and every later pass — the seed scan and all `iters`
-        # assignment passes — reads stored integer rows instead of
-        # re-deriving the quantize transform from the source scan. The
-        # re-scans are what grow with the corpus; the one-time cut does
-        # not.
-        vobs = Observation()
-        # checkpoint (__vid, qv) only: n2 is re-derived lazily from the
-        # stored qv below, so consumers that never select it still pay
+        # rides the quantized corpus's own cut (replacing a separate
+        # validation aggregate job), and every later pass — the seed
+        # scan and all `iters` assignment passes — reads stored integer
+        # rows instead of re-deriving the quantize transform from the
+        # source scan. The re-scans are what grow with the corpus; the
+        # one-time cut does not.
+        # Cut (__vid, qv) only: n2 is re-derived lazily from the stored
+        # qv below, so consumers that never select it still pay
         # nothing — and an absurd quantization scale cannot overflow the
         # eager n2 squares before the margin validation gets to raise
-        q = _materialize(
-            q.select("__vid", "qv").observe(
-                vobs, *_quantization_stat_aggs()
-            )
-        )
+        q, got = cut(q.select("__vid", "qv"), *_quantization_stat_aggs())
         q = q.withColumn(
             "n2",
             F.aggregate(
@@ -485,14 +449,10 @@ def _assignments(
                 lambda a, v: a + v,
             ),
         )
-        got = vobs.get
         stats = (got["n_rows"], got["qmax"], got["dim"])
         _raise_quantization_margins(*stats, materialize, iters)
     else:
         stats = _validate_quantization_margins(q, materialize, iters)
-        if materialize:
-            # reliable mode: persist() (lazy) still caps the re-scans
-            q = _materialize(q)
     # the static whole-trajectory gate for the bigint distance branch —
     # derived from the same stats the margin validation already
     # collected, so the fast arithmetic costs zero extra jobs and falls
@@ -573,13 +533,14 @@ def _assignments(
                 # iteration i's broadcast re-derives every earlier
                 # iteration from lineage: O(iters^2) corpus scans); the
                 # overflow-margin check rides the same job
-                cent = _materialize_checked(cent)
+                cent, got = cut(cent, *_overflow_margin_aggs())
+                _raise_overflow_margin(**got)
     if not keep_vectors:
         assign = assign.select("__vid", "cluster")
     if materialize:
         # the final assignment feeds the size aggregate, the output join,
         # and the pair-scan self-joins — cut once, reuse the stored rows
-        assign = _materialize(assign)
+        assign, _ = cut(assign)
     if _return_both:
         return assign, cent_out
     return assign
@@ -791,7 +752,7 @@ def _in_cluster_pairs(
     :func:`kmeans_hierarchical` leaves at corpus scale, or an IVF/LSH
     bucket id. The vectors are quantized once and joined to it.
     """
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     if clusters is None:
         a = _assignments(
@@ -810,7 +771,7 @@ def _in_cluster_pairs(
         # directly, and scale=0 would silently zero every vector
         if scale <= 0:
             raise ValueError(f"scale must be positive, got {scale}")
-        a = _materialize(
+        a, _ = cut(
             _quantized(df, scale, vec_col, id_col).join(
                 clusters.select(
                     F.col(id_col).alias("__vid"), F.col("cluster")
@@ -1026,7 +987,7 @@ def kmeans_hierarchical(
     """
     if k2 <= 0 or iters2 <= 0:
         raise ValueError(f"k2 and iters2 must be positive, got {k2}/{iters2}")
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     stats: dict = {}
     sup = _assignments(
@@ -1070,8 +1031,11 @@ def kmeans_hierarchical(
             "__vid", "super", "qv", best["sub"].alias("sub")
         )
         if it < iters2 - 1:
-            cent = _materialize_checked(_recenter(assign, ["super", "sub"]))
-    out = _materialize(
+            cent, got = cut(
+                _recenter(assign, ["super", "sub"]), *_overflow_margin_aggs()
+            )
+            _raise_overflow_margin(**got)
+    out, _ = cut(
         assign.select(
             "__vid",
             "super",

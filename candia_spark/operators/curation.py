@@ -366,7 +366,7 @@ def score_percentiles(
     """
     if buckets <= 0:
         raise ValueError(f"buckets must be positive, got {buckets}")
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     # the (id, bucket) table feeds BOTH the census and the final join —
     # cut it so the (possibly expensive) score expression evaluates over
@@ -386,7 +386,7 @@ def score_percentiles(
             )
         )
     )
-    scored = _materialize(df.select(F.col(id_col), bucket.alias("bucket")))
+    scored, _ = cut(df.select(F.col(id_col), bucket.alias("bucket")))
     census = scored.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_in_bucket")
     )
@@ -674,7 +674,7 @@ def bpe_train(
       TakeOrdered(1) argmax (collected to the driver, the k-means
       trajectory device: the merge must become a literal in the next
       round's replace) + one pure-map rewrite, re-materialized per
-      round (the _materialize doctrine: without the cut, round i
+      round (the cut doctrine: without the cut, round i
       replays every earlier round's rewrite from lineage). Per-round
       cost tracks |vocab|, not the corpus (SCALING_r10 bpe leg) — but
       it is floored by Spark job-scheduling latency (~230 ms/round),
@@ -697,7 +697,7 @@ def bpe_train(
 
     Weights are bounded by corpus character count (~1e14 at 100 TB,
     far inside bigint)."""
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     if rounds <= 0:
         raise ValueError(f"rounds must be positive, got {rounds}")
@@ -719,7 +719,7 @@ def bpe_train(
     chars = F.expr(
         "transform(sequence(1, length(word)), i -> substr(word, i, 1))"
     )
-    vocab = _materialize(
+    vocab, _ = cut(
         words.select(
             F.concat(
                 F.lit(" "), F.array_join(chars, "  "), F.lit(" ")
@@ -773,7 +773,7 @@ def bpe_train(
             break  # vocabulary fully merged — nothing left to count
         l, r, w = best[0]["l"], best[0]["r"], int(best[0]["weight"])
         merges.append((rnd, l, r, l + r, w))
-        vocab = _materialize(
+        vocab, _ = cut(
             vocab.select(
                 F.replace(
                     F.col("sym_str"),
@@ -1017,7 +1017,7 @@ def dsir_select(
     target census, and one per-doc aggregation carrying 24-byte rows.
     The corpus-mean flag broadcasts a 1-row aggregate against the
     materialized per-doc table."""
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     bits = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
     feats = _dsir_features(text_col, ngram, buckets)
@@ -1036,7 +1036,7 @@ def dsir_select(
             "tok_score"
         ),
     )
-    scored = _materialize(
+    scored, _ = cut(
         toks.join(costs, "tok")
         .groupBy(id_col)
         .agg(
@@ -1083,7 +1083,7 @@ def dsir_reference_costs(
     row-for-row (the contamination_stream stance). ``ngram``/``buckets``
     freeze the same hashed-n-gram feature space as
     :func:`dsir_select` — the scorer must be handed matching values."""
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     bits = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
     feats = _dsir_features(text_col, ngram, buckets)
@@ -1094,7 +1094,7 @@ def dsir_reference_costs(
         .groupBy("tok")
         .agg(bits(F.count(F.lit(1))).alias("tgt_bits"))
     )
-    costs = _materialize(
+    costs, _ = cut(
         src.join(tgt, "tok", "left").select(
             "tok",
             (F.coalesce("tgt_bits", F.lit(0)) - F.col("src_bits")).alias(
@@ -1592,7 +1592,7 @@ def bigram_assoc(
     broadcast it when a real corpus's bigram table turns out small. The
     per-doc aggregation then carries 32-byte rows. No UDF anywhere;
     bin/length/element_at are all codegen expressions."""
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     bits = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
     toks = df.select(F.col(id_col), tokens(text_col).alias("__t"))
@@ -1655,7 +1655,7 @@ def bigram_assoc(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.sum(assoc).cast("bigint").alias("total_assoc"),
     )
-    scored = _materialize(scored)
+    scored, _ = cut(scored)
     corpus = scored.agg(
         F.sum("n_pairs").cast("decimal(38,0)").alias("c_pairs"),
         F.sum("total_assoc").cast("decimal(38,0)").alias("c_assoc"),
@@ -1705,7 +1705,7 @@ def unigram_rarity(
     The corpus-mean comparison broadcasts a 1-row aggregate against the
     materialized per-doc table (one corpus pass, localCheckpoint-shared
     by both consumers)."""
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     bits = F.length(F.bin(F.col("cnt"))).cast("bigint")
     if broadcast_vocab:
@@ -1746,7 +1746,7 @@ def unigram_rarity(
                 F.sum("bits").cast("bigint").alias("total_bits"),
             )
         )
-    scored = _materialize(scored)
+    scored, _ = cut(scored)
     corpus = scored.agg(
         F.sum("n_tokens").cast("decimal(38,0)").alias("c_toks"),
         F.sum("total_bits").cast("decimal(38,0)").alias("c_bits"),
@@ -1841,9 +1841,9 @@ def multiclass_classifier_weights(
             bits(F.count(F.lit(1))).alias("__bits"),
         )
     )
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
-    cen = _materialize(cen)  # feeds toks/labels/totals/dense join
+    cen, _ = cut(cen)  # feeds toks/labels/totals/dense join
     toks_d = cen.select("tok").distinct()
     # per-class token totals and their bits (the NB rate normalizer);
     # S = Σ_c bits(total_c) rides the same model-sized table
@@ -2420,7 +2420,7 @@ def perplexity_buckets(
 
     Output one row per scored document: (id, lang, n_tokens,
     total_bits, bucket)."""
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     if engine not in ("rank", "approx"):
         raise ValueError(f"unknown engine {engine!r}")
@@ -2503,7 +2503,7 @@ def perplexity_buckets(
             label(ix).alias("bucket"),
         )
     # approx: per-language thresholds, then a pure-map bucket
-    s = _materialize(
+    s, _ = cut(
         scored.select(F.col(id_col), "lang", "n_tokens", "total_bits", score)
     )
     cuts = s.groupBy("lang").agg(

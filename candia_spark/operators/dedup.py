@@ -20,8 +20,6 @@ Scale design (the 100 TB story):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -30,48 +28,6 @@ from pyspark.sql.types import StructField, StructType
 # on single spaces, drop empties.
 def tokens_col(text_col: str = "text"):
     return F.filter(F.split(F.lower(F.col(text_col)), " "), lambda t: t != "")
-
-
-def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Cut the plan so a subtree consumed by several downstream branches is
-    computed once, not once per branch (Catalyst does not reuse a non-cached
-    exchange across differing aliases).
-
-    Default is ``localCheckpoint``: blocks are executor-local and freed by
-    the ContextCleaner when the DataFrame is garbage-collected — no per-call
-    cache leak into the session. The tradeoff: lineage is TRUNCATED and the
-    blocks are unreplicated, so losing an executor (including a
-    dynamic-allocation decommission on a real cluster) fails the job instead
-    of recomputing from lineage. On local[*] and stable static clusters
-    that is the right trade; under dynamic allocation / preemptible
-    executors set ``CANDIA_SPARK_RELIABLE=1`` to use ``persist()`` instead,
-    which keeps lineage (recompute on loss) at the cost of the cache
-    outliving the call until the cleaner drops it.
-    """
-    if os.environ.get("CANDIA_SPARK_RELIABLE"):
-        return df.persist()
-    return df.localCheckpoint(eager=eager)
-
-
-def _materialize_counted(df: DataFrame) -> DataFrame:
-    """`_materialize`, additionally stashing the materialized row count on
-    the returned DataFrame as ``_candia_rows`` (verdict r16 next #4: never
-    pay a job for a statistic a prior job already computed). The count
-    rides the eager localCheckpoint's own job as an ``Observation`` —
-    zero extra actions; downstream routing gates read the attribute
-    instead of running ``count()`` over the stored blocks. The reliable
-    (persist) leg is lazy, so no metric can ride it: the attribute is
-    absent there and consumers keep their explicit fallback."""
-    if os.environ.get("CANDIA_SPARK_RELIABLE"):
-        return df.persist()
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
-    out._candia_rows = int(obs.get["n"])  # collected by the eager action
-    return out
 
 
 def exact_dedup(
@@ -185,35 +141,61 @@ def shingle_index(
     bound — Σ_{df<=cap} df² <= cap * index_rows, linear in the corpus by
     construction. At corpus scale pass both (they compose as a LEAST).
     """
-    base = _materialize_counted(word_ngram_hashes(df, n, text_col, id_col))
-    capped, _ = _cap_hot_keys(
-        base, "shingle", id_col, max_shingle_df, max_shingle_frac
+    return _counted_shingle_index(
+        df, n, text_col, id_col, max_shingle_df, max_shingle_frac
+    )[0]
+
+
+def _counted_shingle_index(
+    df: DataFrame,
+    n: int = 2,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_shingle_df: int | None = None,
+    max_shingle_frac: float | None = None,
+) -> tuple[DataFrame, int]:
+    """:func:`shingle_index` plus its row count, observed on the index's
+    own materialization jobs (no extra action)."""
+    from candia_spark.operators.materialize import cut
+
+    base, stats = cut(
+        word_ngram_hashes(df, n, text_col, id_col),
+        F.count(F.lit(1)).alias("n"),
     )
-    return capped
+    capped, _, rows = _cap_hot_keys(
+        base, stats["n"], "shingle", id_col, max_shingle_df, max_shingle_frac
+    )
+    return capped, rows
 
 
 def _cap_hot_keys(
     base: DataFrame,
+    base_rows: int | None,
     key_col: str,
     id_col: str,
     max_df: int | None,
     max_frac: float | None,
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, int, int | None]:
     """The shared hot-key capping device (shingle_index's historical
     inline form, reused by the winnowed-fingerprint index — advice/
     verdict r7 #2): census the MATERIALIZED inverted index, anti-join
     away keys whose document frequency exceeds the cap, and return
-    ``(capped_index, n_hot)``. The fractional cap is measured against
-    the documents PRESENT IN THE INDEX, so it is scale-invariant and
-    needs no second corpus scan.
+    ``(capped_index, n_hot, capped_rows)``. The fractional cap is
+    measured against the documents PRESENT IN THE INDEX, so it is
+    scale-invariant and needs no second corpus scan. ``capped_rows`` is
+    ``base_rows`` (the caller's count of ``base``, None if unknown) when
+    nothing is capped, else the count observed on the capped cut.
 
     The cap usually doesn't bite (hot keys are pathological by
-    definition): the over-cap set is counted first — one tiny job over
-    the already-materialized base — and when it's empty the base is
-    returned untouched with no second materialization.
+    definition): the over-cap set is cut first — one tiny job over the
+    already-materialized base, its size observed on that same job — and
+    when it's empty the base is returned untouched with no second
+    materialization.
     """
     if max_df is None and max_frac is None:
-        return base, 0
+        return base, 0, base_rows
+    from candia_spark.operators.materialize import cut
+
     cap: Column = F.lit(max_df).cast("double")
     if max_frac is not None:
         ndocs = base.select(F.count_distinct(F.col(id_col)).alias("__ndocs"))
@@ -226,16 +208,18 @@ def _cap_hot_keys(
         )
     else:
         census = base.groupBy(key_col).agg(F.count(F.lit(1)).alias("__df"))
-    hot = _materialize(census.filter(F.col("__df") > cap).select(key_col))
-    n_hot = hot.count()
-    if n_hot == 0:
-        return base, 0
-    return (
-        _materialize_counted(
-            base.join(F.broadcast(hot), key_col, "left_anti")
-        ),
-        n_hot,
+    hot, stats = cut(
+        census.filter(F.col("__df") > cap).select(key_col),
+        F.count(F.lit(1)).alias("n"),
     )
+    n_hot = stats["n"]
+    if n_hot == 0:
+        return base, 0, base_rows
+    capped, stats = cut(
+        base.join(F.broadcast(hot), key_col, "left_anti"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    return capped, n_hot, stats["n"]
 
 
 # Telemetry from the most recent standalone ngram_jaccard_pairs mode
@@ -504,6 +488,8 @@ def ngram_jaccard_pairs(
             "prefix_filter applies to standalone (self-join) mode only; "
             "it has no effect when a candidates list is supplied"
         )
+    from candia_spark.operators.materialize import cut
+
     if index is None:
         index = shingle_index(
             df, n, text_col, id_col, max_shingle_df, max_shingle_frac
@@ -591,14 +577,14 @@ def ngram_jaccard_pairs(
         # one census + one ordered-set build, MATERIALIZED: three
         # consumers read it (the prefix explode and both sides of the
         # verify join) — without the cut each would re-run the census
-        # join and the per-doc sort (see _materialize for the tradeoff)
+        # join and the per-doc sort
         dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
         osets = sh.join(dfc, "shingle").groupBy(id_col).agg(
             F.sort_array(F.collect_list(F.struct("__df", "shingle"))).alias(
                 "__oset"
             )
         )
-        sets = _materialize(
+        sets, _ = cut(
             osets.select(
                 F.col(id_col),
                 F.transform("__oset", lambda x: x["shingle"]).alias("__set"),
@@ -823,14 +809,15 @@ def minhash_lsh_pairs(
         raise ValueError(
             f"bands ({bands}) must evenly divide num_hashes ({num_hashes})"
         )
+    from candia_spark.operators.materialize import cut
+
     if index is None:
         index = shingle_index(df, n, text_col, id_col)
     # Materialize the signature table: the expensive 32-hash + groupBy-min
     # shuffle runs once; both self-join sides, the bucket census, the
     # hot-bucket representative lookup, and the post-agg est_jaccard joins
     # all read the materialized blocks.
-    # (See _materialize for the fault-tolerance tradeoff.)
-    agg = _materialize(_minhash_agg(index, num_hashes, id_col))
+    agg, _ = cut(_minhash_agg(index, num_hashes, id_col))
     # band hash straight off the bigint minhash columns (no string concat).
     # The banded table carries ONLY (id, band_idx, band_hash) — signatures
     # are joined back AFTER the pair aggregation, so the bucket self-join
@@ -848,18 +835,20 @@ def minhash_lsh_pairs(
         # hot-bucket census is tiny (only buckets over the cap, with their
         # min-id representative) — broadcast, no extra shuffle of banded.
         # The cap usually doesn't bite (hot buckets are pathological by
-        # definition), so materialize+count the over-cap set first — one
-        # small job over the materialized signatures — and keep the plain
-        # self-join plan (no anti-joins, no star branch, no union) when it
-        # is empty. Same eager-census trick as shingle_index's hot set;
-        # measured ~2s of per-call broadcast/anti-join overhead at sf0.1.
-        hot = _materialize(
+        # definition), so cut the over-cap set first — one small job over
+        # the materialized signatures, its size observed on that job —
+        # and keep the plain self-join plan (no anti-joins, no star
+        # branch, no union) when it is empty. Same eager-census trick as
+        # shingle_index's hot set; measured ~2s of per-call
+        # broadcast/anti-join overhead at sf0.1.
+        hot, stats = cut(
             banded.groupBy("band_idx", "band_hash")
             .agg(F.count(F.lit(1)).alias("__n"), F.min(id_col).alias("__rep"))
             .filter(F.col("__n") > max_bucket_size)
-            .select("band_idx", "band_hash", "__rep")
+            .select("band_idx", "band_hash", "__rep"),
+            F.count(F.lit(1)).alias("n"),
         )
-        if hot.count() == 0:
+        if stats["n"] == 0:
             hot = None
     if hot is not None:
         hot_keys = F.broadcast(hot.select("band_idx", "band_hash"))
@@ -1341,34 +1330,26 @@ def connected_components(
     distributed path untouched; pass ``small_graph_max_edges=None`` to
     force it.
     """
-    from pyspark.sql import Observation
+    from candia_spark.operators.materialize import cut
 
-    def _materialize_observed(df: DataFrame, obs: Observation) -> DataFrame:
-        """One Spark job per round: the convergence fingerprint rides the
-        materialization pass as observed metrics instead of a second agg
-        job over the checkpointed edges."""
-        observed = df.observe(
-            obs,
+    def _cut_fingerprinted(df: DataFrame) -> tuple[DataFrame, tuple]:
+        """One Spark job per round: the convergence fingerprint (count,
+        xor-hash) rides the cut's own job instead of a second agg job
+        over the stored edges."""
+        out, stats = cut(
+            df,
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(a, b))").alias("h"),
         )
-        if os.environ.get("CANDIA_SPARK_RELIABLE"):
-            out = observed.persist()
-            out.count()  # materialize the cache (persist alone is lazy)
-            return out
-        return observed.localCheckpoint(eager=True)
+        return out, (stats["n"], stats["h"])
 
-    obs0 = Observation("cc_input")
-    e = _materialize_observed(
+    e, (n_edges, _) = _cut_fingerprinted(
         pairs.select(
             F.least(id_a, id_b).alias("a"), F.greatest(id_a, id_b).alias("b")
         )
         .filter(F.col("a") < F.col("b"))
-        .distinct(),
-        obs0,
+        .distinct()
     )
-
-    n_edges = obs0.get["n"]
     if small_graph_max_edges is not None and n_edges <= small_graph_max_edges:
         # Arrow-columnar collect (toPandas), NOT .collect(): 2 longs/edge
         # on the wire instead of a pyspark Row object per edge.
@@ -1419,10 +1400,8 @@ def connected_components(
         small = _superstep(e)
         # bit_xor: order-insensitive over the (distinct) edge set and
         # cannot overflow (ANSI mode makes a plain sum of hashes throw)
-        obs = Observation(f"cc_round_{it}")
-        e = _materialize_observed(small, obs)
+        e, fp = _cut_fingerprinted(small)
         rounds = it + 1
-        fp = (obs.get["n"], obs.get["h"])
         if prev_fp == fp:
             break
         prev_fp = fp
@@ -1641,7 +1620,9 @@ def canonical_docs(
         if quality is not None
         else F.size(tokens_col(text_col)).cast("bigint")
     )
-    members = _materialize(
+    from candia_spark.operators.materialize import cut
+
+    members, _ = cut(
         df.select(F.col(id_col), q.alias("__q"))
         .join(comp.withColumnRenamed("node", id_col), id_col, "left")
         .select(
@@ -1826,7 +1807,9 @@ def substring_duplication(
     # branches (census build, census-join probe, final n_grams join) —
     # cut it so the corpus is digested ONCE, not once per branch (same
     # doctrine as the shared shingle_index above)
-    per_doc = _materialize(
+    from candia_spark.operators.materialize import cut
+
+    per_doc, _ = cut(
         df.select(F.col(id_col), gram_arr.alias("grams")).withColumn(
             "n_grams", F.size("grams").cast("bigint")
         )
@@ -1868,7 +1851,9 @@ def _block_base_and_occurrences(
     # the tokenized base feeds TWO branches (the occurrence explode and
     # the final reassembly join) — cut it once so the corpus splits one
     # time, not once per branch (the q55 per_doc doctrine)
-    base = _materialize(
+    from candia_spark.operators.materialize import cut
+
+    base, _ = cut(
         df.select(
             F.col(id_col),
             toks.alias("__toks"),
@@ -2357,17 +2342,34 @@ def containment_candidate_pairs(
     cap the VERIFY index identically (and the oracle, q73's HAVING
     device), or a witness may probe for a shingle the capped index no
     longer holds. Output: (id_a, id_b) distinct, id_a < id_b. Pass
-    ``index`` to share one corpus scan with verification."""
+    ``index`` to share one corpus scan with verification; a supplied
+    index is counted once for the probe routing gate."""
     if num_hashes <= 0:
         raise ValueError(f"num_hashes must be positive, got {num_hashes}")
     if min_hits <= 0:
         raise ValueError(f"min_hits must be positive, got {min_hits}")
     if index is None:
-        index = shingle_index(
-            df, n, text_col, id_col,
-            max_shingle_df=max_shingle_df,
-            max_shingle_frac=max_shingle_frac,
+        index, index_rows = _counted_shingle_index(
+            df, n, text_col, id_col, max_shingle_df, max_shingle_frac
         )
+    else:
+        index_rows = index.count()
+    return _containment_candidates(
+        index, index_rows, num_hashes, id_col, min_hits
+    )
+
+
+def _containment_candidates(
+    index: DataFrame,
+    index_rows: int,
+    num_hashes: int,
+    id_col: str,
+    min_hits: int,
+) -> DataFrame:
+    """The witness probe of :func:`containment_candidate_pairs` over a
+    built inverted index whose row count the caller already holds (q81
+    takes it from :func:`_counted_shingle_index`, sharing the index with
+    verification at no extra job)."""
     witnesses = index.groupBy(id_col).agg(
         *[
             F.min_by("shingle", F.xxhash64(F.col("shingle"), F.lit(i))).alias(
@@ -2394,17 +2396,10 @@ def containment_candidate_pairs(
     # doc-keyed probe is a pure wasted exchange — so the index is
     # force-broadcast under the gate (its checkpointed-row size estimate
     # would otherwise leave the strategy to the session). The gate
-    # statistic is the row count the index's own materialization already
-    # observed (`_materialize_counted`, verdict r16 next #4 — the r16
-    # form ran an `index.count()` action here, one extra job per call
-    # and at corpus scale a full index scan purely for routing); an
-    # index built outside `shingle_index` (no stat attribute, or the
-    # lazy persist leg) pays the one count it always did. At corpus
+    # statistic is the index row count the caller passes in (observed on
+    # the index's own cut when the index was built here). At corpus
     # scale the count exceeds the gate and the shingle pin runs
     # unchanged.
-    index_rows = getattr(index, "_candia_rows", None)
-    if index_rows is None:
-        index_rows = index.count()
     par = _probe_parallelism(index)
     probe_key = "shingle"
     if index_rows <= _PAIR_PROBE_DOC_PARTITION_ROWS:
@@ -2533,12 +2528,9 @@ def winnow_fingerprints(
 
 # Telemetry from the most recent winnow_fingerprint_pairs call on this
 # driver (the LAST_JACCARD_TELEMETRY pattern): {"calls": monotone
-# counter, "fp_rows": capped-index row count — ALWAYS an int, -1 as the
-# "not counted" sentinel on cap-free calls (which stay action-free in
-# the builder path; advice r9 #4 — a None here broke arithmetic
-# consumers), "hot_fps": fingerprints dropped by the df cap} — bench.py
-# attributes it per query so the official artifact shows the index
-# density and whether the cap bit.
+# counter, "fp_rows": capped-index row count, "hot_fps": fingerprints
+# dropped by the df cap} — bench.py attributes it per query so the
+# official artifact shows the index density and whether the cap bit.
 LAST_WINNOW_TELEMETRY: dict = {}
 
 
@@ -2595,26 +2587,20 @@ def winnow_fingerprint_pairs(
     # the fingerprint index feeds THREE consumers (sizes, both join
     # sides) — cut it once so the md5 + window-minima map runs one time
     # (measured 6.4 -> ~2.5 s at sf0.1 on the q72 fixture)
-    fp = _materialize_counted(
+    from candia_spark.operators.materialize import cut
+
+    fp, stats = cut(
         fingerprints
         if fingerprints is not None
-        else winnow_fingerprints(df, n, window, text_col, id_col)
+        else winnow_fingerprints(df, n, window, text_col, id_col),
+        F.count(F.lit(1)).alias("n"),
     )
-    fp, n_hot = _cap_hot_keys(fp, "fp", id_col, max_fp_df, max_fp_frac)
-    # fp_rows rides the index's own materialization (verdict r16 next
-    # #4 device) — free for EVERY call now, so cap-free calls get the
-    # real row count (and with it the broadcast-regime probe gate below)
-    # instead of the historical -1 sentinel, still with zero extra
-    # actions. Only the reliable (persist) leg keeps the old rule: count
-    # when a cap already paid census jobs, sentinel otherwise (advice
-    # r8 #5 / r9 #4).
-    fp_rows = getattr(fp, "_candia_rows", None)
-    if fp_rows is None:
-        fp_rows = (
-            fp.count()
-            if (max_fp_df is not None or max_fp_frac is not None)
-            else -1
-        )
+    # fp_rows (the capped index's row count) rides the index's own cuts,
+    # so every call gets it — and with it the broadcast-regime probe
+    # gate below — with zero extra actions
+    fp, n_hot, fp_rows = _cap_hot_keys(
+        fp, stats["n"], "fp", id_col, max_fp_df, max_fp_frac
+    )
     LAST_WINNOW_TELEMETRY.update(
         calls=LAST_WINNOW_TELEMETRY.get("calls", 0) + 1,
         fp_rows=fp_rows,
@@ -2630,14 +2616,12 @@ def winnow_fingerprint_pairs(
     # The build side is force-broadcast under the same gate — the
     # md5-string fingerprint index's ExistingRDD estimate routes the
     # planner to sort-merge even at 100k rows, and a doc-keyed probe
-    # under a sort-merge join would be a pure wasted exchange. The gate
-    # only has a row count when a hot cap was requested (the telemetry
-    # census already paid the job); cap-free calls keep the fp pin and
-    # stay action-free. The constant is lower than the jaccard gate's:
+    # under a sort-merge join would be a pure wasted exchange. The
+    # constant is lower than the jaccard gate's:
     # fingerprint rows carry a 32-char digest, ~3x the bytes of a
     # (bigint, bigint) shingle row.
     probe_key = "fp"
-    if 0 <= fp_rows <= _WINNOW_PROBE_DOC_PARTITION_ROWS:
+    if fp_rows <= _WINNOW_PROBE_DOC_PARTITION_ROWS:
         probe_key = id_col
     a = fp.repartition(par, probe_key).select(F.col(id_col).alias("id_a"), "fp")
     b = fp.select(F.col(id_col).alias("id_b"), "fp")
@@ -2825,7 +2809,9 @@ def exact_substring_dedup(
         raise ValueError(f"k must be positive, got {k}")
     text = F.coalesce(F.col(text_col), F.lit(""))
     toks = F.split(text, " ")
-    base = _materialize(
+    from candia_spark.operators.materialize import cut
+
+    base, _ = cut(
         df.select(
             F.col(id_col),
             toks.alias("__toks"),

@@ -551,16 +551,17 @@ def phash_near_dups(
     distinct candidate pairs."""
     if not (0 <= max_hamming <= 64):
         raise ValueError(f"max_hamming must be in [0, 64], got {max_hamming}")
-    from candia_spark.operators.dedup import _cap_hot_keys, _materialize
+    from candia_spark.operators.dedup import _cap_hot_keys
+    from candia_spark.operators.materialize import cut
 
-    sig = _materialize(
+    sig, _ = cut(
         signatures
         if signatures is not None
         else dhash64(df, binary_col=binary_col, id_col=id_col)
     )
     melted = _phash_bands(sig, id_col, n_bands)
-    melted, _ = _cap_hot_keys(
-        melted, "band", id_col, max_band_df, max_band_frac
+    melted, _, _ = _cap_hot_keys(
+        melted, None, "band", id_col, max_band_df, max_band_frac
     )
     cands = (
         melted.select(F.col(id_col).alias("id_a"), "band")
@@ -633,9 +634,10 @@ def incremental_phash_dups(
     combined band census as in :func:`phash_near_dups`."""
     if not (0 <= max_hamming <= 64):
         raise ValueError(f"max_hamming must be in [0, 64], got {max_hamming}")
-    from candia_spark.operators.dedup import _cap_hot_keys, _materialize
+    from candia_spark.operators.dedup import _cap_hot_keys
+    from candia_spark.operators.materialize import cut
 
-    sig_batch = _materialize(
+    sig_batch, _ = cut(
         dhash64(batch, binary_col=binary_col, id_col=id_col)
     )
     allsig = stored_signatures.select(sig_batch.columns).unionByName(
@@ -643,7 +645,9 @@ def incremental_phash_dups(
     )
 
     left = _phash_bands(allsig, id_col, n_bands)
-    left, _ = _cap_hot_keys(left, "band", id_col, max_band_df, max_band_frac)
+    left, _, _ = _cap_hot_keys(
+        left, None, "band", id_col, max_band_df, max_band_frac
+    )
     right = _phash_bands(sig_batch, id_col, n_bands).withColumnRenamed(
         id_col, "__bid"
     )

@@ -71,7 +71,7 @@ def bm25_topk(
         raise ValueError(f"query_terms must be distinct, got {query_terms}")
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     toks = _tokens(text_col)
 
@@ -84,7 +84,7 @@ def bm25_topk(
     # the tokenized scan feeds BOTH the stats aggregate and the scored
     # scan — cut it once (materialize doctrine) so the corpus tokenizes
     # one time, and the second pass reads narrow (id, dl, tf...) rows
-    base = _materialize(
+    base, _ = cut(
         df.select(
             F.col(id_col),
             F.size(toks).cast("bigint").alias("dl"),
@@ -249,13 +249,13 @@ def ngram_novelty(
             lambda i: F.array_join(F.slice(toks, i, n), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     # the gram-array scan feeds THREE branches (per-doc totals, the
     # occurrence explode, the reference vocabulary) — cut it once so the
     # corpus tokenizes and gram-builds one time (materialize doctrine;
     # measured 4.0 -> ~1.5 s at sf0.1)
-    base = _materialize(
+    base, _ = cut(
         df.select(
             F.col(id_col),
             reference.alias("__ref"),

@@ -17,8 +17,6 @@ reproducible against the DuckDB oracle (see plans.queries q30 family).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -1079,7 +1077,7 @@ def _pq_codebook_kmeans_q(
         raise ValueError(
             f"m, codewords, iters must be positive, got {m}/{codewords}/{iters}"
         )
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     subs = _subspaces(
         q.select(F.col(id_col).alias("__vid"), "qvec"), m, "__vid"
@@ -1087,34 +1085,25 @@ def _pq_codebook_kmeans_q(
     # the static bigint gate for the distance branch (the clustering
     # _static_int_safe doctrine): worst per-term |n*v - s| <=
     # 2 * n_vectors * lane_max, dim/m squares of it must clear 2^63 —
-    # exact Python ints. The stats ride the subvector table's own
-    # materialization as an Observation (zero extra jobs); the lazy
-    # materialize=False path keeps the always-correct decimal form.
+    # exact Python ints. The stats ride the subvector table's own cut
+    # (zero extra jobs), which also caps the re-derivation of the
+    # quantize+explode: the iters assignment passes and recenters read
+    # stored integer rows. The lazy materialize=False path keeps the
+    # always-correct decimal form.
     int_sum = False
-    if materialize and not os.environ.get("CANDIA_SPARK_RELIABLE"):
-        from pyspark.sql import Observation
-
-        sobs = Observation()
-        subs = _materialize(
-            subs.observe(
-                sobs,
-                F.count(F.lit(1)).alias("n_rows"),
-                F.max(
-                    F.array_max(F.transform("sv", lambda v: F.abs(v)))
-                ).alias("vmax"),
-                F.max(F.size("sv")).alias("dsub"),
-            )
+    if materialize:
+        subs, got = cut(
+            subs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.max(
+                F.array_max(F.transform("sv", lambda v: F.abs(v)))
+            ).alias("vmax"),
+            F.max(F.size("sv")).alias("dsub"),
         )
-        got = sobs.get
         # n_rows counts SUBVECTOR rows (= m * vectors) — a conservative
         # upper bound on any codeword's membership
         t = 2 * int(got["n_rows"] or 0) * int(got["vmax"] or 0)
         int_sum = max(int(got["dsub"] or 1), 1) * t * t < 2**63
-    elif materialize:
-        # cut the quantize+explode once: the iters assignment passes and
-        # iters recenters then read stored 16-byte-ish integer rows
-        # instead of re-deriving the transform from the parquet scan.
-        subs = _materialize(subs)
     # seeds: codeword j (every subspace) = subvector of the j-th
     # smallest-id vector. orderBy+limit is TakeOrderedAndProject; the
     # rank window below runs on the K-row frame only.
@@ -1193,7 +1182,7 @@ def _pq_codebook_kmeans_q(
         if materialize:
             # m*K x d/m integers — checkpointing is free and caps the
             # loop at one subs pass per iteration
-            cent = _materialize(cent)
+            cent, _ = cut(cent)
     return cent.select(
         "sub",
         "code",
@@ -1446,16 +1435,15 @@ def jl_project_int8(
     arr = q.select(F.col(id_col), F.array(*rows).alias("proj"))
     if output == "array":
         return arr
-    # long form: materialize the array FIRST (the dedup _materialize
-    # barrier), then explode. Without the barrier the optimizer
-    # collapses the projection into the Generate, which does no
-    # common-subexpression elimination — the quantize transform and
-    # all 16 lanes re-evaluate per OUTPUT row (measured 18 s vs 4 s at
+    # long form: cut the array FIRST, then explode. Without the barrier
+    # the optimizer collapses the projection into the Generate, which
+    # does no common-subexpression elimination — the quantize transform
+    # and all 16 lanes re-evaluate per OUTPUT row (measured 18 s vs 4 s at
     # sf0.1). The checkpoint is id + out_dim bigints per row — the
     # projection OUTPUT, 4x smaller than the input vectors.
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
-    return _materialize(arr).select(
+    return cut(arr)[0].select(
         id_col, F.posexplode("proj").alias("dim", "value")
     ).select(
         id_col,
@@ -1519,7 +1507,7 @@ def pq_topk_ivf_trained(
         kmeans_probe_cells,
         kmeans_train_assign,
     )
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     if centroids is not None:
         _assert_index_geometry(
@@ -1552,10 +1540,10 @@ def pq_topk_ivf_trained(
             corpus, k=coarse_k, iters=coarse_iters, scale=coarse_scale,
             vec_col=vec_col, id_col=id_col,
         )
-        cent = _materialize(cent)
+        cent, _ = cut(cent)
         cells = cells.select(id_col, F.col("cluster").alias("bucket"))
     else:
-        cent = _materialize(
+        cent, _ = cut(
             # materialize: the trained table feeds the query probes
             # below — one training run, read as stored k-row material
             kmeans_centroids(
@@ -1577,7 +1565,7 @@ def pq_topk_ivf_trained(
         # ONCE and feed the shared frame to the *_q cores — the wrapper
         # pair re-derived the identical quantize transform from two
         # separate corpus scans (r16 optimization round, guide §1.2)
-        qz_corpus = _materialize(
+        qz_corpus, _ = cut(
             quantize_int8(
                 corpus.select(id_col, vec_col), vec_col, id_col, scale
             )
@@ -1944,7 +1932,7 @@ def ivfadc_build_index(
         kmeans_probe_cells,
         kmeans_train_assign,
     )
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     geom = {
         "m": m,
@@ -1970,12 +1958,12 @@ def ivfadc_build_index(
     def _assign(c: DataFrame) -> DataFrame:
         # nprobe=1 probe IS the final assignment pass against the same
         # trained table (cell/probe consistency by construction)
-        return _materialize(
+        return cut(
             kmeans_probe_cells(
                 corpus.select(id_col, vec_col), c, nprobe=1,
                 scale=coarse_scale, vec_col=vec_col, id_col=id_col,
             ).select(id_col, F.col("cluster").alias("bucket"))
-        )
+        )[0]
 
     if centroids is not None:
         # frozen coarse quantizer: the probe pass against the passed
@@ -1992,7 +1980,7 @@ def ivfadc_build_index(
             corpus, k=coarse_k, iters=coarse_iters, scale=coarse_scale,
             vec_col=vec_col, id_col=id_col,
         )
-        cent = _materialize(cent)
+        cent, _ = cut(cent)
         cells = cells.select(id_col, F.col("cluster").alias("bucket"))
     q = quantize_int8(corpus.select(id_col, vec_col), vec_col, id_col, scale)
     if max_cell_frac is not None:
@@ -2003,7 +1991,7 @@ def ivfadc_build_index(
                 raise
             # the guard's remedy #3: one more Lloyd's over each hot
             # cell's members, then re-census WITH the guard still armed
-            cent = _materialize(
+            cent, _ = cut(
                 split_hot_cells(
                     corpus, cent, max_cell_frac=max_cell_frac,
                     split_k=split_hot_k, iters=coarse_iters,
@@ -2021,11 +2009,11 @@ def ivfadc_build_index(
     # separate q ⋈ cells joins and the encode ⋈ assignment re-join this
     # path used to run, three corpus-sized exchange pairs → one
     # (r16 optimization round, guide §2.4).
-    qc = _materialize(q.join(cells, id_col))
+    qc, _ = cut(q.join(cells, id_col))
     cc = (
         cell_centroids
         if cell_centroids is not None
-        else _materialize(cell_centroids_int8(qc, None, id_col))
+        else cut(cell_centroids_int8(qc, None, id_col))[0]
     )
     # residual lanes: bigint differences in the int8 lane space — a pure
     # map over the stored qc rows (the trainer checkpoints its subvector
@@ -2271,9 +2259,9 @@ def append_ivfadc_batch(
     # materialized: the surviving batch feeds the encode AND (when the
     # store carries the quantized piece) the re-rank lane append — one
     # ownership anti-join, not one per consumer
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
-    fresh = _materialize(fresh)
+    fresh, _ = cut(fresh)
     enc = ivfadc_encode_batch(
         fresh, idx["centroids"], idx["cell_centroids"], idx["codebook"],
         m=m, coarse_scale=coarse_scale, vec_col=vec_col, id_col=id_col,
@@ -2489,7 +2477,7 @@ def split_hot_cells(
         kmeans_centroids,
         kmeans_probe_cells,
     )
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
     if not 0.0 < max_cell_frac < 1.0:
         raise ValueError(
@@ -2498,7 +2486,7 @@ def split_hot_cells(
     if split_k < 2:
         raise ValueError(f"split_k must be >= 2, got {split_k}")
     if cells is None:
-        cells = _materialize(
+        cells, _ = cut(
             kmeans_probe_cells(
                 corpus.select(id_col, vec_col), centroids, nprobe=1,
                 scale=coarse_scale, vec_col=vec_col, id_col=id_col,
@@ -2793,9 +2781,9 @@ def pq_topk_rerank(
             "(the fully-persisted re-rank path also needs all four "
             "shortlist pieces)"
         )
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
-    sl = _materialize(
+    sl, _ = cut(
         pq_topk_ivfadc_residual(
             corpus, queries, k=shortlist, m=m, codewords=codewords,
             nprobe=nprobe, coarse_k=coarse_k, coarse_iters=coarse_iters,

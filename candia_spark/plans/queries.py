@@ -3681,15 +3681,16 @@ def q73_dedup_graph_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tolerance; per iteration the plan is one keyed join plus one keyed
     aggregation (the textbook distributed PageRank shape), materialized
     per round per the iteration doctrine."""
-    from candia_spark.operators.dedup import _materialize, ngram_jaccard_pairs
+    from candia_spark.operators.dedup import ngram_jaccard_pairs
     from candia_spark.operators.graph import authority_scores
+    from candia_spark.operators.materialize import cut
 
     docs = _t(spark, sf_dir, "documents")
     # cut BEFORE symmetrizing: both union branches read the stored pair
     # rows instead of each re-running the inverted-index jaccard join
     # (the same double-evaluation that made the un-materialized DuckDB
     # oracle spill; measured 7.1 -> ~4.8 s at sf0.1)
-    pairs = _materialize(
+    pairs, _ = cut(
         ngram_jaccard_pairs(
             docs, n=2, threshold=0.35, max_shingle_frac=0.5
         ).select("id_a", "id_b")
@@ -3958,11 +3959,12 @@ def q77_weighted_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-the-canonical-copy policy actually wants. Two unrolled
     iterations, all bigint; the overflow margin (num * S * w) is
     documented and holds for shingle-overlap weights."""
-    from candia_spark.operators.dedup import _materialize, ngram_jaccard_pairs
+    from candia_spark.operators.dedup import ngram_jaccard_pairs
     from candia_spark.operators.graph import authority_scores
+    from candia_spark.operators.materialize import cut
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = _materialize(
+    pairs, _ = cut(
         ngram_jaccard_pairs(
             docs, n=2, threshold=0.35, max_shingle_frac=0.5
         ).select("id_a", "id_b", "n_common")
@@ -4197,10 +4199,10 @@ def q80_compacted_block_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta-append equivalence to a from-scratch rebuild is pinned in
     tests/test_retrieval.py."""
     from candia_spark.operators.dedup import (
-        _materialize,
         block_census,
         compact_block_census,
     )
+    from candia_spark.operators.materialize import cut
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
@@ -4211,7 +4213,7 @@ def q80_compacted_block_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the stored census is a persisted artifact in production; cut it so
     # the union branch and the delta's anti join read one materialization
-    census = _materialize(block_census(corpus, block_words=_Q78_BW))
+    census, _ = cut(block_census(corpus, block_words=_Q78_BW))
     delta = compact_block_census(census, batch, block_words=_Q78_BW)
     return census.unionByName(delta).select(
         "block",
@@ -4279,13 +4281,15 @@ def q81_containment_witness_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-then-verify contract). Matching q71's exact oracle makes sketch
     recall part of the correctness gate."""
     from candia_spark.operators.dedup import (
-        containment_candidate_pairs,
+        _containment_candidates,
+        _counted_shingle_index,
         ngram_containment_pairs,
-        shingle_index,
     )
 
     aug = _q71_aug_corpus(spark, sf_dir)
-    idx = shingle_index(aug, 2)
+    # the index row count the candidate probe routes on is observed on
+    # the index's own cut, so sharing the index costs no count() job
+    idx, idx_rows = _counted_shingle_index(aug, 2)
     # min_hits=24 (verdict r8 wrong #1): per-direction seed-hit counts
     # are Binomial(64, containment) regardless of doc size, so a
     # containment-0.9 pair evades the max-direction threshold with
@@ -4294,8 +4298,8 @@ def q81_containment_witness_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drops 11.7M -> 67k at sf0.1 (measured; the verify join shrinks
     # ~175x and the probe join's AQE-expansion pin cuts the witness
     # stage 15.3 -> 4.1 s)
-    cands = containment_candidate_pairs(
-        aug, num_hashes=64, index=idx, min_hits=24
+    cands = _containment_candidates(
+        idx, idx_rows, num_hashes=64, id_col="doc_id", min_hits=24
     )
     return ngram_containment_pairs(
         aug, n=2, threshold=0.9, candidates=cands, index=idx
@@ -4319,11 +4323,12 @@ def q82_personalized_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint + floor division, hash-gated with zero tolerance. The seed
     flag is a broadcast column on the node table, so the per-iteration
     plan stays one keyed join + one keyed aggregation."""
-    from candia_spark.operators.dedup import _materialize, ngram_jaccard_pairs
+    from candia_spark.operators.dedup import ngram_jaccard_pairs
     from candia_spark.operators.graph import authority_scores
+    from candia_spark.operators.materialize import cut
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = _materialize(
+    pairs, _ = cut(
         ngram_jaccard_pairs(
             docs, n=2, threshold=0.35, max_shingle_frac=0.5
         ).select("id_a", "id_b")
@@ -8133,10 +8138,10 @@ def q128_pretrain_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         url_dedup,
     )
     from candia_spark.operators.dedup import (
-        _materialize,
         decontaminate,
         paragraph_dedup,
     )
+    from candia_spark.operators.materialize import cut
     from candia_spark.operators.sampling import deterministic_shuffle
     from candia_spark.sources.adapters import _wet_project
 
@@ -8227,7 +8232,7 @@ def q128_pretrain_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once per branch per stage — measured 134 s vs 16 s at sf0.001.
     # This is also the production shape: a real assembly run persists
     # each stage's corpus.
-    withtext = _materialize(
+    withtext, _ = cut(
         base.select("doc_id", "url", "source").join(ext, "doc_id")
     )
     # (2) the gate bank: Gopher shape rules (min_words relaxed to 20 —
@@ -8261,13 +8266,13 @@ def q128_pretrain_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "url", "source", "clean_text")
     )
-    gated = _materialize(gated)
+    gated, _ = cut(gated)
     # (3) URL-canonicalization dedup (collision pairs k / k+12 share a
     # canonical URL; smallest id wins)
     ud = url_dedup(gated.select("doc_id", "url")).select(
         "doc_id", "domain", "keep"
     )
-    alive3 = _materialize(
+    alive3, _ = cut(
         gated.join(ud, "doc_id")
         .filter(F.col("keep"))
         .select("doc_id", "source", "domain", "clean_text")
@@ -8278,7 +8283,7 @@ def q128_pretrain_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         alive3.select("doc_id", F.col("clean_text").alias("text")),
         sep="\n",
     ).select("doc_id", F.col("clean_text").alias("clean2"))
-    withclean2 = _materialize(
+    withclean2, _ = cut(
         alive3.select("doc_id", "source", "domain").join(pd, "doc_id")
     )
     # (5) 3-gram decontamination against the %17 benchmark slice (docs
@@ -8292,7 +8297,7 @@ def q128_pretrain_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         # across unrelated docs (measured: 95% flagged); 5-grams flag
         # real overlap only (the %17 slice self-flags + true matches)
     ).select("doc_id")
-    alive4 = _materialize(withclean2.join(flagged, "doc_id", "left_anti"))
+    alive4, _ = cut(withclean2.join(flagged, "doc_id", "left_anti"))
     # (6) per-domain contribution cap (3 planted domains)
     capped = cap_per_source(
         alive4, cap=25, source_col="domain", salt="cap128"
@@ -8305,7 +8310,7 @@ def q128_pretrain_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
         weights,
         budget_tokens=50000,
     ).select("source", "epochs")
-    alive5 = _materialize(capped.join(F.broadcast(plan), "source"))
+    alive5, _ = cut(capped.join(F.broadcast(plan), "source"))
     # (8) whole-document packing per source shard + (9) the
     # deterministic training shuffle
     packed = pack_sequences_whole(

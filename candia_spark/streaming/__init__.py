@@ -818,12 +818,12 @@ def write_wet_ingest_batch(
     # only a join key within this batch (verdicts stay pure functions
     # of each row's own text), so replay determinism is unaffected; it
     # never reaches the sink schema.
-    from candia_spark.operators.dedup import _materialize
+    from candia_spark.operators.materialize import cut
 
-    # _materialize pins the surrogate ids (three consumers below would
+    # the cut pins the surrogate ids (three consumers below would
     # otherwise re-evaluate the id expression per branch) and cuts the
     # batch scan to one pass.
-    clean = _materialize(
+    clean, _ = cut(
         batch_df.filter(~F.col("_malformed")).withColumn(
             "__row_id", F.monotonically_increasing_id()
         )

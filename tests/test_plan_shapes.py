@@ -258,12 +258,12 @@ def test_bigram_assoc_open_vocab_has_no_map_agg(spark, monkeypatch):
     unigram census into a single map row anywhere in the plan — the
     word costs ride keyed joins instead, so an open-vocabulary corpus
     never funnels its vocabulary through one driver-sized row.
-    _materialize is patched to identity so the full scoring plan
+    materialize.cut is patched to identity so the full scoring plan
     (normally cut by the localCheckpoint) is visible."""
-    from candia_spark.operators import dedup
+    from candia_spark.operators import materialize
     from candia_spark.operators.curation import bigram_assoc
 
-    monkeypatch.setattr(dedup, "_materialize", lambda df, eager=True: df)
+    monkeypatch.setattr(materialize, "cut", lambda df, *metrics: (df, {}))
     rows = [(i, "A", "tok a b c d e") for i in range(1, 8)]
     df = spark.createDataFrame(
         rows, "doc_id bigint, source string, text string"
@@ -397,7 +397,7 @@ def test_q98_boilerplate_plan_shape(spark):
 
 def test_q101_phash_band_join_shape(spark):
     """Image pHash near-dedup (q101): after the one Arrow hashing pass
-    (cut by _materialize), everything downstream is JVM-side — the
+    (cut by materialize.cut), everything downstream is JVM-side — the
     candidate stage is a band-keyed equi self-join (never a cartesian
     product), and the Hamming verify is xor/bit_count expressions, no
     Python eval anywhere in the post-hash plan."""

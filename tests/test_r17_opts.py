@@ -11,8 +11,8 @@
   zero-collect/count contract (test_graph pins that side). Results are
   identical across regimes.
 - verdict r17 next #4: containment_candidate_pairs' routing gate rides
-  the row count the index materialization already observed — no count()
-  action inside the call when the index came from shingle_index.
+  the row count the index's own cut already observed — no count()
+  action when the index and its count come from the counted builder.
 """
 
 from __future__ import annotations
@@ -56,24 +56,16 @@ def test_probe_parallelism_data_bounds(spark):
     )
 
 
-def test_materialize_counted_stashes_exact_rowcount(spark):
-    from candia_spark.operators.dedup import _materialize_counted
-
-    out = _materialize_counted(spark.range(137).selectExpr("id as doc_id"))
-    assert getattr(out, "_candia_rows", None) == 137
-    assert out.count() == 137
-
-
 def test_containment_gate_rides_carried_rowcount(spark, sf_smoke, monkeypatch):
-    """The routing gate must read the index's carried row count instead of
-    paying a count() job (verdict r16 next #4) — and an index built
-    outside shingle_index (no attribute) still routes identically via the
-    explicit-count fallback."""
+    """The routing gate must read the index row count observed on the
+    index's own cut instead of paying a count() job (verdict r16 next
+    #4) — and a caller-supplied index routes identically after one
+    explicit count."""
     from candia_spark.operators import dedup
 
     docs = load_table(spark, sf_smoke, "documents").limit(300)
-    idx = dedup.shingle_index(docs, 2)
-    assert isinstance(getattr(idx, "_candia_rows", None), int)
+    idx, idx_rows = dedup._counted_shingle_index(docs, 2)
+    assert idx_rows == idx.count()
 
     cls = type(idx)
     calls = {"count": 0}
@@ -84,21 +76,37 @@ def test_containment_gate_rides_carried_rowcount(spark, sf_smoke, monkeypatch):
         return real_count(self)
 
     monkeypatch.setattr(cls, "count", spy_count)
-    fast = dedup.containment_candidate_pairs(
+    fast = dedup._containment_candidates(idx, idx_rows, 16, "doc_id", 4)
+    assert calls == {"count": 0}  # routing paid no action
+    slow = dedup.containment_candidate_pairs(
         docs, num_hashes=16, index=idx, min_hits=4
     )
-    assert calls == {"count": 0}  # routing paid no action
+    assert calls == {"count": 1}  # the supplied index is counted once
     monkeypatch.undo()
     fast_rows = _rows(fast, ["id_a", "id_b"])
-
-    # strip the attribute: the fallback count must route identically
-    bare = idx.select("*")
-    assert not hasattr(bare, "_candia_rows")
-    slow = dedup.containment_candidate_pairs(
-        docs, num_hashes=16, index=bare, min_hits=4
-    )
     assert _rows(slow, ["id_a", "id_b"]) == fast_rows
     assert fast_rows, "fixture must produce candidates"
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _spy_score_cut_plans(monkeypatch) -> list[str]:
+    """Record the executed plan of every per-iteration score cut: the
+    iteration join (scores ⋈ edges) lives in the plan of each round."""
+    from candia_spark.operators import materialize
+
+    plans: list[str] = []
+    real_cut = materialize.cut
+
+    def spy(df, *metrics):
+        if set(df.columns) == {"doc_id", "score"}:
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_cut(df, *metrics)
+
+    monkeypatch.setattr(materialize, "cut", spy)
+    return plans
 
 
 def test_authority_exchange_free_regime_plan_and_equivalence(
@@ -113,7 +121,6 @@ def test_authority_exchange_free_regime_plan_and_equivalence(
     BROADCAST regime (test_authority_upfront_margins_fire_no_scalar_agg_
     actions); the exchange-free regime is allowed its one
     cache-materializing count per call."""
-    from candia_spark.operators import dedup
     from candia_spark.operators.graph import authority_scores
 
     edges = spark.createDataFrame(
@@ -121,20 +128,8 @@ def test_authority_exchange_free_regime_plan_and_equivalence(
         "src bigint, dst bigint",
     ).distinct()
     nodes = spark.range(50).selectExpr("id as doc_id")
-
-    # spy on the per-round score materializations: the iteration join
-    # (scores ⋈ edges) lives in the plan of each materialized round
-    iter_plans: list[str] = []
-    real_materialize = dedup._materialize
-
-    def spy(df, eager=True):
-        if set(df.columns) == {"doc_id", "score"}:
-            iter_plans.append(
-                df._jdf.queryExecution().executedPlan().toString()
-            )
-        return real_materialize(df, eager)
-
-    monkeypatch.setattr(dedup, "_materialize", spy)
+    spark.catalog.clearCache()  # so the emptiness checks see only this call
+    iter_plans = _spy_score_cut_plans(monkeypatch)
 
     base = _rows(
         authority_scores(edges, nodes, iters=2),
@@ -143,6 +138,7 @@ def test_authority_exchange_free_regime_plan_and_equivalence(
     assert iter_plans and all(
         "InMemoryTableScan" not in p for p in iter_plans
     ), "broadcast regime must keep the localCheckpoint edge table"
+    assert _cache_is_empty(spark)
 
     iter_plans.clear()
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -155,5 +151,42 @@ def test_authority_exchange_free_regime_plan_and_equivalence(
     assert iter_plans and all(
         "InMemoryTableScan" in p for p in iter_plans
     ), "\n---\n".join(iter_plans)
+    assert _cache_is_empty(spark)  # the src-partitioned edge cache is freed
     assert got == base
     assert base, "fixture must produce scores"
+
+
+def test_authority_unreadable_conf_routes_exchange_free(spark, monkeypatch):
+    """A broadcast threshold the conf cannot return routes exactly like an
+    unparsable one: exchange-free (the regime that is safe at any size),
+    with the shuffle-partition count falling back to the default
+    parallelism when it cannot be read either."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from candia_spark.operators.graph import authority_scores
+
+    edges = spark.createDataFrame(
+        [(i % 20, (i * 3 + 1) % 20) for i in range(60)],
+        "src bigint, dst bigint",
+    ).distinct()
+    nodes = spark.range(20).selectExpr("id as doc_id")
+    base = _rows(authority_scores(edges, nodes, iters=2), ["doc_id", "score"])
+
+    real_get = RuntimeConfig.get
+
+    def failing_get(self, key, *args, **kwargs):
+        if key in (
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.shuffle.partitions",
+        ):
+            raise RuntimeError(f"unreadable {key}")
+        return real_get(self, key, *args, **kwargs)
+
+    iter_plans = _spy_score_cut_plans(monkeypatch)
+    monkeypatch.setattr(RuntimeConfig, "get", failing_get)
+    out = authority_scores(edges, nodes, iters=2)
+    monkeypatch.undo()
+    assert iter_plans and all(
+        "InMemoryTableScan" in p for p in iter_plans
+    ), "\n---\n".join(iter_plans)
+    assert _rows(out, ["doc_id", "score"]) == base

@@ -1,7 +1,9 @@
 """Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
-"sf": ...}.
+"sf": ...}. Stderr carries one more JSON line, {"telemetry": {"q73":
+{"authority": {...}}, ...}}: the routing decisions each query's
+operators recorded (``candia_spark.telemetry``), keyed by short name.
 
 ``--runs N`` (default 1) times every query N times and reports the
 per-query MINIMUM — the stable statistic on a box with ±20% run-to-run
@@ -30,7 +32,35 @@ HEADLINE = [
 ]
 
 
-def main() -> None:
+# The harness that runs the bench keeps only the LAST 2000 bytes of
+# stdout; with 67 registered queries the full-name JSON line is ~2600
+# bytes, so its tail parse fails (`parsed: null` in BENCH_r05/r06). Emit the
+# unique qNN prefixes instead — the full registry names live in
+# plans/queries.py and BENCH_local artifacts keep the long form.
+def short(qname: str) -> str:
+    return qname.split("_", 1)[0]
+
+
+def result_line(
+    timings: dict[str, float], errors: dict[str, str], sf: float | None, runs: int
+) -> str:
+    """The one stdout JSON line, compact (no spaces after separators) so
+    every registered query's timing fits the 1900-byte budget."""
+    out = {
+        "metric": "total_query_wall_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": {short(k): v for k, v in timings.items()},
+        "sf": sf,
+    }
+    if runs > 1:
+        out["runs"] = runs  # per-query minima over this many runs
+    if errors:
+        out["errors"] = {short(k): v for k, v in errors.items()}
+    return json.dumps(out, separators=(",", ":"))
+
+
+def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--runs",
@@ -146,34 +176,19 @@ def main() -> None:
     except Exception:
         pass
 
-    try:
-        from candia_spark.operators.dedup import (
-            LAST_CC_TELEMETRY,
-            LAST_JACCARD_TELEMETRY,
-            LAST_WINNOW_TELEMETRY,
-        )
-    except Exception:
-        LAST_CC_TELEMETRY = {}
-        LAST_JACCARD_TELEMETRY = {}
-        LAST_WINNOW_TELEMETRY = {}
-    try:
-        from candia_spark.operators.graph import LAST_AUTHORITY_TELEMETRY
-    except Exception:
-        LAST_AUTHORITY_TELEMETRY = {}
-    cc_rounds_by_query: dict[str, int] = {}
-    jaccard_mode_by_query: dict[str, str] = {}
-    winnow_by_query: dict[str, list[int]] = {}
-    authority_by_query: dict[str, list] = {}
+    # Per-query routing telemetry: each query runs under its own job
+    # group, and the operators record their decisions against it.
+    from candia_spark import telemetry
+
+    sc = spark.sparkContext
+    telemetry_by_query: dict[str, dict] = {}
 
     # Per-query fault isolation: one broken query must never cost the
     # round its timings (round 3 lost ALL perf evidence to a single
     # AnalysisException). Errors are recorded in the JSON instead.
     for name in names + extra:
+        sc.setJobGroup(name, name)
         for _run in range(max(1, cli.runs)):
-            cc_calls_before = LAST_CC_TELEMETRY.get("calls", 0)
-            jac_calls_before = LAST_JACCARD_TELEMETRY.get("calls", 0)
-            win_calls_before = LAST_WINNOW_TELEMETRY.get("calls", 0)
-            auth_calls_before = LAST_AUTHORITY_TELEMETRY.get("calls", 0)
             t0 = time.perf_counter()
             try:
                 df = QUERY_REGISTRY[name].spark(spark, sf_dir)
@@ -184,107 +199,30 @@ def main() -> None:
                 timings[name] = min(timings.get(name, elapsed), elapsed)
             except Exception as exc:  # noqa: BLE001 — isolate, record, continue
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            # Attribute connected-components convergence telemetry to the
-            # query whose run advanced the call counter (several queries
-            # collapse pair graphs; a single last-value field would
-            # misassign them all to whichever ran last).
-            if LAST_CC_TELEMETRY.get("calls", 0) != cc_calls_before:
-                cc_rounds_by_query[name] = LAST_CC_TELEMETRY.get("rounds", -1)
-            # Same attribution for the standalone exact-Jaccard routing
-            # decision (verdict r5 #7): a future mode regression shows up
-            # as a string diff in the official bench artifact.
-            if LAST_JACCARD_TELEMETRY.get("calls", 0) != jac_calls_before:
-                jaccard_mode_by_query[name] = LAST_JACCARD_TELEMETRY.get(
-                    "mode", "?"
-                )
-            # Winnowing index density + hot-fingerprint cap bite, and
-            # authority graph geometry + guard mode (verdict r7 #8):
-            # regressions in either surface as numbers in the official
-            # artifact instead of as silent wall-time.
-            if LAST_WINNOW_TELEMETRY.get("calls", 0) != win_calls_before:
-                winnow_by_query[name] = [
-                    LAST_WINNOW_TELEMETRY.get("fp_rows", -1),
-                    LAST_WINNOW_TELEMETRY.get("hot_fps", -1),
-                ]
-            if LAST_AUTHORITY_TELEMETRY.get("calls", 0) != auth_calls_before:
-                authority_by_query[name] = [
-                    LAST_AUTHORITY_TELEMETRY.get("n_nodes", -1),
-                    LAST_AUTHORITY_TELEMETRY.get("n_edges", -1),
-                    int(bool(LAST_AUTHORITY_TELEMETRY.get("static_safe"))),
-                ]
+            recorded = telemetry.pop(name)
+            if recorded:
+                telemetry_by_query[short(name)] = recorded
 
-    total = round(sum(timings.values()), 3)
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = None
 
-    # The driver keeps only the LAST 2000 bytes of bench stdout; with 67
-    # registered queries the full-name JSON line is ~2600 bytes, so the
-    # driver's tail parse fails (`parsed: null` in BENCH_r05/r06). Emit
-    # the unique qNN prefixes instead — the full registry names live in
-    # plans/queries.py and BENCH_local artifacts keep the long form.
-    def short(qname: str) -> str:
-        return qname.split("_", 1)[0]
-
-    out = {
-        "metric": "total_query_wall_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": {short(k): v for k, v in timings.items()},
-        "sf": sf,
-    }
-    if cli.runs > 1:
-        out["runs"] = cli.runs  # per-query minima over this many runs
-    if errors:
-        out["errors"] = {short(k): v for k, v in errors.items()}
-    # Convergence telemetry per collapsing query — a convergence
-    # regression shows up as a number rather than as silent wall-time.
-    if cc_rounds_by_query:
-        out["cc_rounds"] = {short(k): v for k, v in cc_rounds_by_query.items()}
-    if jaccard_mode_by_query:
-        out["jaccard_mode"] = {
-            short(k): v for k, v in jaccard_mode_by_query.items()
-        }
-    if winnow_by_query:
-        # [fp index rows, fingerprints dropped by the hot cap]
-        out["winnow"] = {short(k): v for k, v in winnow_by_query.items()}
-    if authority_by_query:
-        # [nodes, edges, 1 if the static overflow bound held]
-        out["authority"] = {
-            short(k): v for k, v in authority_by_query.items()
-        }
-    # Byte-budget guard (the r5 `parsed: null` hygiene item, proactive
-    # form): the driver keeps only the LAST 2000 bytes of stdout. At
-    # 107 queries the full line crosses ~1900 bytes, so two defenses
-    # run in order: (1) COMPRESS uniform telemetry maps — when every
-    # query reports the same value (the steady state: jaccard_mode all
-    # "plain", authority triplets identical), collapse the map to
-    # {"*": value} instead of dropping it; (2) only then shed whole
-    # keys, least-valuable first (jaccard_mode last — it is the
-    # routing-regression tripwire the verdicts read). Full telemetry
-    # always lives in BENCH_local artifacts.
-    def _compress(key: str) -> None:
-        m = out.get(key)
-        if isinstance(m, dict) and len(m) > 1:
-            vals = {json.dumps(v) for v in m.values()}
-            if len(vals) == 1:
-                out[key] = {"*": next(iter(m.values()))}
-
-    if len(json.dumps(out).encode()) > 1900:
-        for key in ("jaccard_mode", "authority", "cc_rounds", "winnow"):
-            _compress(key)
-    for shed in ("cc_rounds", "winnow", "authority", "jaccard_mode"):
-        if len(json.dumps(out).encode()) <= 1900:
-            break
-        out.pop(shed, None)
     # Stop Spark BEFORE emitting the JSON so the one JSON line is the
     # very last stdout the harness produces — nothing (shutdown chatter
     # included) can trail it and trip the driver's tail parse (the r5
-    # `parsed: null` hygiene item).
+    # `parsed: null` hygiene item). The telemetry line goes to stderr
+    # first, so the result line stays last even when both are merged; it
+    # starts with a newline because Spark's console progress bar ends its
+    # last row with a carriage return, not a newline.
     spark.stop()
     sys.stdout.flush()
-    print(json.dumps(out), flush=True)
+    print(
+        "\n" + json.dumps({"telemetry": telemetry_by_query}),
+        file=sys.stderr,
+        flush=True,
+    )
+    print(result_line(timings, errors, sf, cli.runs), flush=True)
     # Exit 0 as long as at least one query produced a timing; rc=1 only
     # when the harness measured nothing at all.
     return 0 if timings else 1

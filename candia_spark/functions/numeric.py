@@ -35,12 +35,6 @@ def dsum(col: Column | str, scale: int = 4) -> Column:
     return F.round(F.sum(c.cast(DEC)), scale).cast("double")
 
 
-def dsum_raw(col: Column | str) -> Column:
-    """Exact decimal sum as double, unrounded (for further scalar math)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(DEC)).cast("double")
-
-
 def davg(col: Column | str, scale: int | None = None) -> Column:
     """Order-independent mean: exact decimal sum / count, in double.
 

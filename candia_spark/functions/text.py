@@ -44,12 +44,6 @@ def regex_token_count(text_col: str = "text") -> Column:
     )
 
 
-def lang_score(text_col: str, lang: str) -> Column:
-    """Number of distinct marker stopwords of ``lang`` present in the text."""
-    markers = F.array(*[F.lit(m) for m in LANG_MARKERS[lang]])
-    return F.size(F.array_intersect(F.array_distinct(tokens(text_col)), markers))
-
-
 def lang_id_from_distinct(distinct_tokens: Column) -> Column:
     """Predicted language from a pre-computed distinct-token array column:
     argmax marker hits, ties -> lexicographically first language, no hits

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from candia_spark import telemetry
+
 # Tokenization convention shared with the DuckDB oracles: lowercase, split
 # on single spaces, drop empties.
 def tokens_col(text_col: str = "text"):
@@ -222,16 +224,6 @@ def _cap_hot_keys(
     return capped, n_hot, stats["n"]
 
 
-# Telemetry from the most recent standalone ngram_jaccard_pairs mode
-# decision on this driver: {"mode": "prefix"|"plain", "auto": bool,
-# "top_mass_frac": float|None, "join_mass": int, "skewed": bool,
-# "calls": monotone standalone-call counter} — how the bench/scale
-# harnesses see which path a corpus routed to without re-deriving the
-# census (bench.py attributes mode per query via the counter, the
-# cc_rounds pattern). The standalone skew probe writes only
-# {"top_mass_frac", "skewed"}, never the routing keys.
-LAST_JACCARD_TELEMETRY: dict = {}
-
 # Auto-mode routing constants for standalone exact Jaccard, both terms
 # measured, not guessed (verdict r5 #1 — the round-5 single-term gate
 # misrouted; the round-6 calibration sweep re-measured BOTH modes at
@@ -317,19 +309,25 @@ def _probe_parallelism(
     near-serial). 2x cores, raised when the caller's census says the
     expanded join output needs more partitions to stay near
     ``_PROBE_TARGET_EXPANDED_BYTES_PER_TASK`` per task (the at-scale
-    regime; a no-op at bench scale)."""
+    regime; a no-op at bench scale). Records ``probe: {partitions,
+    clipped}``; ``clipped`` is true when ``_PROBE_MAX_PARTITIONS``
+    lowered the count."""
     import math
 
     cores = df.sparkSession.sparkContext.defaultParallelism
     par = 2 * cores
+    clipped = False
     if expanded_rows is not None and expanded_rows >= 0:
         need = math.ceil(
             expanded_rows
             * _PROBE_EXPANDED_ROW_BYTES
             / _PROBE_TARGET_EXPANDED_BYTES_PER_TASK
         )
+        clipped = need > max(par, _PROBE_MAX_PARTITIONS)
         par = max(par, min(_PROBE_MAX_PARTITIONS, need))
-    return max(par, 1)
+    par = max(par, 1)
+    telemetry.record("probe", partitions=par, clipped=clipped)
+    return par
 
 
 def _jaccard_mass_stats(index: DataFrame) -> dict:
@@ -403,12 +401,12 @@ def _jaccard_mass_stats(index: DataFrame) -> dict:
 
 def _jaccard_mass_is_skewed(index: DataFrame) -> bool:
     """Standalone skew probe over an index (scale harnesses call this to
-    report the head-mass statistic next to mode timings). Updates only
-    the probe keys of ``LAST_JACCARD_TELEMETRY`` — never ``mode``/
+    report the head-mass statistic next to mode timings). Records only
+    the census keys of the ``jaccard`` telemetry entry — never ``mode``/
     ``auto`` — so the last real routing record is not overwritten."""
     s = _jaccard_mass_stats(index)
-    LAST_JACCARD_TELEMETRY.update(
-        {"top_mass_frac": s["top_mass_frac"], "skewed": s["skewed"]}
+    telemetry.record(
+        "jaccard", top_mass_frac=s["top_mass_frac"], skewed=s["skewed"]
     )
     return s["skewed"]
 
@@ -479,7 +477,7 @@ def ngram_jaccard_pairs(
       ``_PREFIX_AUTO_JOIN_MASS``). Both paths are answer-preserving and
       equivalence-pinned in pytest, so routing is a pure performance
       choice. Pass True/False to pin a mode; the decision and both
-      statistics are recorded in ``LAST_JACCARD_TELEMETRY``.
+      statistics are recorded as the ``jaccard`` telemetry entry.
     """
     if candidates is not None and prefix_filter:
         # standalone-mode-only contract: the candidates branch would win
@@ -516,25 +514,21 @@ def ngram_jaccard_pairs(
             threshold > 0.0
             and (stats["skewed"] or stats["total"] > _PREFIX_AUTO_JOIN_MASS)
         )
-        LAST_JACCARD_TELEMETRY.update(
-            {
-                "mode": "prefix" if prefix_filter else "plain",
-                "auto": True,
-                "top_mass_frac": stats["top_mass_frac"],
-                "join_mass": stats["total"],
-                "skewed": stats["skewed"],
-            }
+        telemetry.record(
+            "jaccard",
+            mode="prefix" if prefix_filter else "plain",
+            auto=True,
+            top_mass_frac=stats["top_mass_frac"],
+            join_mass=stats["total"],
+            skewed=stats["skewed"],
         )
-        LAST_JACCARD_TELEMETRY["calls"] = LAST_JACCARD_TELEMETRY.get("calls", 0) + 1
     elif candidates is None:
-        LAST_JACCARD_TELEMETRY.update(
-            {
-                "mode": "prefix" if prefix_filter else "plain",
-                "auto": False,
-                "top_mass_frac": None,
-            }
+        telemetry.record(
+            "jaccard",
+            mode="prefix" if prefix_filter else "plain",
+            auto=False,
+            top_mass_frac=None,
         )
-        LAST_JACCARD_TELEMETRY["calls"] = LAST_JACCARD_TELEMETRY.get("calls", 0) + 1
     if candidates is not None:
         # verify mode: one sorted set-array per document, one
         # array_intersect per candidate pair. The set tables are doc-count
@@ -681,8 +675,8 @@ def ngram_jaccard_pairs(
             and auto_stats["index_rows"] <= _PAIR_PROBE_DOC_PARTITION_ROWS
         ):
             probe_key = id_col
-        LAST_JACCARD_TELEMETRY["probe"] = (
-            "doc" if probe_key == id_col else "shingle"
+        telemetry.record(
+            "jaccard", probe="doc" if probe_key == id_col else "shingle"
         )
         a = sh.repartition(par, probe_key).select(
             F.col(id_col).alias("id_a"), "shingle"
@@ -740,29 +734,6 @@ def _minhash_agg(
     )
     return hashed.groupBy(id_col).agg(
         *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 32,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash signature per document: for permutation i, the min over
-    shingles of a seeded xxhash64. Output: (id, sig: array<bigint>).
-
-    One explode + one groupBy; signature width is a column array, so the
-    shuffle carries num_hashes longs per doc. Pass ``index`` to reuse a
-    shared :func:`shingle_index`.
-    """
-    if index is None:
-        index = shingle_index(df, n, text_col, id_col)
-    agg = _minhash_agg(index, num_hashes, id_col)
-    return agg.select(
-        F.col(id_col), F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
     )
 
 
@@ -848,6 +819,7 @@ def minhash_lsh_pairs(
             .select("band_idx", "band_hash", "__rep"),
             F.count(F.lit(1)).alias("n"),
         )
+        telemetry.record("minhash", hot_buckets=stats["n"])
         if stats["n"] == 0:
             hot = None
     if hot is not None:
@@ -1232,29 +1204,6 @@ def incremental_near_dups(
     ).filter(F.col("jaccard") >= threshold)
 
 
-# Telemetry from the most recent connected_components call on this driver:
-# "rounds" = contraction-round count (0 = the small-graph driver-side path
-# ran) and "calls" = a monotone call counter so a consumer polling between
-# queries can attribute the rounds to the call that produced them even
-# when consecutive calls report the same count. Convergence regressions
-# (deep chain graphs) show up here as a number instead of as silent
-# wall-time; bench.py records it per query.
-LAST_CC_TELEMETRY: dict[str, int] = {}
-
-
-def _record_cc_rounds(
-    rounds: int, telemetry: dict | None, edges: int | None = None
-) -> None:
-    LAST_CC_TELEMETRY["rounds"] = rounds
-    LAST_CC_TELEMETRY["calls"] = LAST_CC_TELEMETRY.get("calls", 0) + 1
-    if edges is not None:
-        LAST_CC_TELEMETRY["edges"] = edges
-    if telemetry is not None:
-        telemetry["rounds"] = rounds
-        if edges is not None:
-            telemetry["edges"] = edges
-
-
 def _union_find_labels(edges) -> list[tuple]:
     """Driver-side union-find over a bounded iterable of (a, b) edges:
     (node, min-id rep) for every node appearing in an edge — the
@@ -1286,7 +1235,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 25,
-    telemetry: dict | None = None,
     small_graph_max_edges: int | None = 1_000_000,
 ) -> DataFrame:
     """Collapse a near-duplicate pair graph into components: one row per
@@ -1355,7 +1303,7 @@ def connected_components(
         # on the wire instead of a pyspark Row object per edge.
         pdf = e.toPandas()
         labels = _union_find_labels(zip(pdf["a"].tolist(), pdf["b"].tolist()))
-        _record_cc_rounds(0, telemetry, edges=n_edges)
+        telemetry.record("cc", rounds=0, edges=n_edges)
         schema = StructType(
             [
                 StructField("node", e.schema["b"].dataType),
@@ -1409,7 +1357,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-    _record_cc_rounds(rounds, telemetry, edges=n_edges)
+    telemetry.record("cc", rounds=rounds, edges=n_edges)
     # At the fixpoint the edge set IS a star forest rooted at component
     # minima: members appear as b exactly once, roots only as a. Every
     # node of the input pair graph appears (pairs have no singletons), so
@@ -1685,18 +1633,6 @@ def simhash_signatures(
         ).alias("simhash"),
     )
     return sig
-
-
-def simhash_dup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Documents sharing an identical 64-bit SimHash (hamming-0 near-dups)."""
-    sig = simhash_signatures(df, text_col, id_col)
-    return (
-        sig.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def simhash_bits_md5(
@@ -2526,14 +2462,6 @@ def winnow_fingerprints(
     return tdf.select(F.col(id_col), F.explode(fps).alias("fp"))
 
 
-# Telemetry from the most recent winnow_fingerprint_pairs call on this
-# driver (the LAST_JACCARD_TELEMETRY pattern): {"calls": monotone
-# counter, "fp_rows": capped-index row count, "hot_fps": fingerprints
-# dropped by the df cap} — bench.py attributes it per query so the
-# official artifact shows the index density and whether the cap bit.
-LAST_WINNOW_TELEMETRY: dict = {}
-
-
 def winnow_fingerprint_pairs(
     df: DataFrame,
     n: int = 2,
@@ -2601,11 +2529,7 @@ def winnow_fingerprint_pairs(
     fp, n_hot, fp_rows = _cap_hot_keys(
         fp, stats["n"], "fp", id_col, max_fp_df, max_fp_frac
     )
-    LAST_WINNOW_TELEMETRY.update(
-        calls=LAST_WINNOW_TELEMETRY.get("calls", 0) + 1,
-        fp_rows=fp_rows,
-        hot_fps=n_hot,
-    )
+    telemetry.record("winnow", fp_rows=fp_rows, hot_fps=n_hot)
     sizes = fp.groupBy(id_col).agg(F.count(F.lit(1)).alias("fp_n"))
     par = _probe_parallelism(fp)
     # Probe-side partition key mirrors ngram_jaccard_pairs' broadcast-

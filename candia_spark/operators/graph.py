@@ -63,6 +63,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from candia_spark import telemetry
+
 _BIGINT_LIMIT = 2**63
 
 # Estimated bytes per (id, score) row for the broadcast-regime gate below
@@ -97,14 +99,6 @@ def _shuffle_partitions(spark) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # noqa: BLE001 — unreadable conf
         return spark.sparkContext.defaultParallelism
-
-
-# Telemetry from the most recent authority_scores call on this driver
-# (the LAST_CC_TELEMETRY pattern): {"calls": monotone counter,
-# "n_nodes": int, "n_edges": int, "static_safe": bool, "dynamic_checks":
-# int} — bench.py attributes it per query so a graph-size or guard-mode
-# regression shows up as a number in the official artifact.
-LAST_AUTHORITY_TELEMETRY: dict = {}
 
 
 def _check_score_margin(
@@ -361,11 +355,12 @@ def authority_scores(
     # cost — the common case at defaults (N < ~5.4e5 unweighted).
     static_safe = num * n_nodes * init * maxw < _BIGINT_LIMIT
     dynamic_checks = 0
-    LAST_AUTHORITY_TELEMETRY.update(
-        calls=LAST_AUTHORITY_TELEMETRY.get("calls", 0) + 1,
+    telemetry.record(
+        "authority",
         n_nodes=n_nodes,
         n_edges=n_edges,
         static_safe=static_safe,
+        exchange_free=exchange_free,
     )
     scores = n.select(F.col(id_col), init_expr.alias("score"))
     max_score = init  # exact before the first iteration
@@ -405,7 +400,7 @@ def authority_scores(
         )
     if exchange_free:
         ed.unpersist()
-    LAST_AUTHORITY_TELEMETRY["dynamic_checks"] = dynamic_checks
+    telemetry.record("authority", dynamic_checks=dynamic_checks)
     out_deg = deg.select(F.col("src").alias(id_col), "deg")
     return scores.join(out_deg, id_col, "left").select(
         F.col(id_col),

@@ -40,7 +40,6 @@ from candia_spark.operators.relational import (
     adjust_overlapping_windows,
     bucketize,
     cross_index,
-    deterministic_id,
     explode_index,
     groupwise_argmax,
     two_level_count_filter,
@@ -182,16 +181,16 @@ def tensorize_slices(
         min_count=min_tensor_points,
     )
 
-    samples = deterministic_id(
-        kept.select(*slice_cols, "sample").distinct(),
-        order_cols=["sample"],
-        id_col="sample_no",
-    ).select(*slice_cols, "sample", "sample_no")
-    mz_dim = deterministic_id(
-        kept.select(*slice_cols, "level", "mz_partition_start").distinct(),
-        order_cols=["level", "mz_partition_start"],
-        id_col="mz_idx",
-    ).select(*slice_cols, "level", "mz_partition_start", "mz_idx")
+    # Both ids number WITHIN the slice: a factor's row_idx is a position
+    # in its slice's tensor, and the export joins mz_idx to it.
+    def ordinal(cols: list[str], id_col: str) -> DataFrame:
+        w = Window.partitionBy(*slice_cols).orderBy(*cols)
+        return kept.select(*slice_cols, *cols).distinct().withColumn(
+            id_col, (F.row_number().over(w) - 1).cast("long")
+        )
+
+    samples = ordinal(["sample"], "sample_no")
+    mz_dim = ordinal(["level", "mz_partition_start"], "mz_idx")
 
     return (
         kept.join(samples, on=slice_cols + ["sample"])

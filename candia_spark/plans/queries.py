@@ -2060,7 +2060,7 @@ def q50_dedup_components_distributed(
     star-contraction loop. At bench scale every natural pair graph fits
     the fast path, which made the distributed loop invisible to measured
     evidence (round-4 watch-item): this entry keeps a multi-round
-    star-contraction number in every BENCH_r{N}.json (cc_rounds > 0) and
+    star-contraction number in bench.py's telemetry (cc rounds > 0) and
     hash-gates its answer against the same recursive-CTE oracle as q43 —
     certifying the two paths agree on real driver data, not just in
     pytest fixtures."""
@@ -3584,7 +3584,7 @@ def q72_winnow_splice_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the scale-safe habit (verdict r7 #2): pass the hot-fingerprint
     # cap even where it cannot bite — on this corpus no fingerprint
-    # approaches 50% document frequency (hot_fps=0 rides in BENCH
+    # approaches 50% document frequency (hot_fps=0 rides in bench.py's
     # telemetry as the observable). The oracle mirrors the cap with
     # q71's HAVING device over the winnowed-fp CTE (advice r8 #2), so
     # impl and oracle encode the same semantics whether or not the cap

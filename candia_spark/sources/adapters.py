@@ -74,12 +74,6 @@ def write_fasta(path: str, sequences: Iterable[tuple[str, str]], width: int = 60
     return n
 
 
-def fasta_sink(df: DataFrame, path: str, id_col: str = "seq_id", seq_col: str = "sequence") -> int:
-    """DataFrame -> FASTA via ordered driver iteration."""
-    rows = df.select(id_col, seq_col).orderBy(id_col).toLocalIterator()
-    return write_fasta(path, ((r[id_col], r[seq_col]) for r in rows))
-
-
 # --- S13: typed report readers -------------------------------------------
 
 # Per-tool schema + rename maps (seqproc.py:23-58; gather_model_evaluation

@@ -81,7 +81,3 @@ def load_table(
     if len(df.inputFiles()) < min_parallelism:
         df = df.repartition(min_parallelism)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLE_NAMES}

@@ -303,7 +303,7 @@ def cap_stats(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def run_text_queries(spark: SparkSession, sf_dir: str, runs: int = 1) -> dict:
-    from candia_spark.operators.dedup import LAST_CC_TELEMETRY
+    from candia_spark import telemetry
     from candia_spark.plans.queries import QUERY_REGISTRY
 
     # q26 is measured by run_jaccard_modes (cap_default_sec IS q26's exact
@@ -317,23 +317,22 @@ def run_text_queries(spark: SparkSession, sf_dir: str, runs: int = 1) -> dict:
     ]
     out: dict = {"queries": {}, "cc": {}}
     for name in names:
-        calls0 = LAST_CC_TELEMETRY.get("calls", 0)
+        telemetry.pop()
         out["queries"][name] = timed(
             lambda name=name: QUERY_REGISTRY[name].spark(spark, sf_dir),
             runs=runs,
         )
-        if LAST_CC_TELEMETRY.get("calls", 0) != calls0:
-            out["cc"][name] = {
-                "rounds": LAST_CC_TELEMETRY.get("rounds"),
-                "edges": LAST_CC_TELEMETRY.get("edges"),
-            }
+        cc = telemetry.pop().get("cc")
+        if cc:
+            out["cc"][name] = cc
     return out
 
 
 def run_embedding_queries(
     spark: SparkSession, sf_dir: str, n_vecs: int, runs: int = 1
 ) -> dict:
-    from candia_spark.operators.dedup import LAST_CC_TELEMETRY, connected_components
+    from candia_spark import telemetry
+    from candia_spark.operators.dedup import connected_components
     from candia_spark.operators.similarity import cosine_dup_pairs
     from candia_spark.tables import load_table
 
@@ -349,10 +348,7 @@ def run_embedding_queries(
         lambda: connected_components(dup_pairs(), id_a="id_a", id_b="id_b"),
         runs=runs,
     )
-    out["cc"]["q43_dedup_components"] = {
-        "rounds": LAST_CC_TELEMETRY.get("rounds"),
-        "edges": LAST_CC_TELEMETRY.get("edges"),
-    }
+    out["cc"]["q43_dedup_components"] = telemetry.pop().get("cc")
     # forced distributed star contraction on the same graph (the q50 path)
     out["queries"]["q50_components_distributed"] = timed(
         lambda: connected_components(
@@ -360,10 +356,7 @@ def run_embedding_queries(
         ),
         runs=runs,
     )
-    out["cc"]["q50_components_distributed"] = {
-        "rounds": LAST_CC_TELEMETRY.get("rounds"),
-        "edges": LAST_CC_TELEMETRY.get("edges"),
-    }
+    out["cc"]["q50_components_distributed"] = telemetry.pop().get("cc")
     return out
 
 

@@ -65,10 +65,8 @@ def _docs(spark, out_dir: str):
 # ---------------------------------------------------------------------------
 
 def run_winnow_zipf(spark, zipf_dir: str, runs: int, uncapped: bool) -> dict:
-    from candia_spark.operators.dedup import (
-        LAST_WINNOW_TELEMETRY,
-        winnow_fingerprint_pairs,
-    )
+    from candia_spark import telemetry
+    from candia_spark.operators.dedup import winnow_fingerprint_pairs
 
     docs = _docs(spark, zipf_dir).select("doc_id", "text")
     out: dict = {}
@@ -79,15 +77,16 @@ def run_winnow_zipf(spark, zipf_dir: str, runs: int, uncapped: bool) -> dict:
         runs=runs,
     )
     out["capped_sec"] = capped_sec
-    out["capped_fp_rows"] = LAST_WINNOW_TELEMETRY.get("fp_rows")
-    out["capped_hot_fps"] = LAST_WINNOW_TELEMETRY.get("hot_fps")
+    capped = telemetry.pop().get("winnow", {})
+    out["capped_fp_rows"] = capped.get("fp_rows")
+    out["capped_hot_fps"] = capped.get("hot_fps")
     if uncapped:
         ss.reclaim()
         out["uncapped_sec"] = ss.timed(
             lambda: winnow_fingerprint_pairs(docs, n=3, window=4, threshold=0.3),
             runs=runs,
         )
-        out["uncapped_fp_rows"] = LAST_WINNOW_TELEMETRY.get("fp_rows")
+        out["uncapped_fp_rows"] = telemetry.pop().get("winnow", {}).get("fp_rows")
     else:
         # explicitly recorded as skipped, never silently dropped: the
         # uncapped join at this size IS the df^2 explosion under test

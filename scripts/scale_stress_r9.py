@@ -15,7 +15,7 @@
 - ``authority`` (verdict r8 next #6): integer-exact authority iteration
   one order beyond SCALING_r07's 10M-edge point — 10^6/10^7/10^8 edges
   (out-degree 10) at init=1e11, recording which overflow-guard regime
-  engaged per size from LAST_AUTHORITY_TELEMETRY: the 10^5/10^6-node
+  engaged per size from the ``authority`` telemetry record: the 10^5/10^6-node
   graphs satisfy the static whole-trajectory bound (num*N*init < 2^63,
   zero per-iteration checks), while the 10^7-node graph fails it and
   runs under the per-iteration dynamic check — which, as of this round,
@@ -152,10 +152,8 @@ def run_compaction(spark, out_dir: str, runs: int) -> dict:
 
 
 def run_authority(spark, n_edges: int, runs: int, init: int) -> dict:
-    from candia_spark.operators.graph import (
-        LAST_AUTHORITY_TELEMETRY,
-        authority_scores,
-    )
+    from candia_spark import telemetry
+    from candia_spark.operators.graph import authority_scores
 
     n_nodes = max(n_edges // 10, 1)
     gdir = os.path.join(ss.OUT_ROOT, f"graph_r9_{n_edges}")
@@ -178,8 +176,9 @@ def run_authority(spark, n_edges: int, runs: int, init: int) -> dict:
     sec = ss.timed(
         lambda: authority_scores(edges, nodes, iters=iters, init=init), runs
     )
+    auth = telemetry.pop().get("authority", {})
     telem = {
-        k: LAST_AUTHORITY_TELEMETRY.get(k)
+        k: auth.get(k)
         for k in ("static_safe", "dynamic_checks", "n_nodes", "n_edges")
     }
     shutil.rmtree(gdir, ignore_errors=True)

@@ -20,6 +20,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from candia_spark import telemetry
 from candia_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -312,36 +313,86 @@ def test_connected_components_fuzz_vs_union_find(spark):
         # Both execution paths must produce identical labels: the
         # distributed star contraction (forced) and the small-graph
         # driver-side union-find (default for graphs this size).
-        telemetry: dict = {}
         got_dist = {
             r["node"]: r["rep"]
             for r in connected_components(
-                pairs, telemetry=telemetry, small_graph_max_edges=None
+                pairs, small_graph_max_edges=None
             ).collect()
         }
         assert got_dist == expected, f"trial {trial} (distributed)"
         # Convergence telemetry: rounds executed, bounded and > 0 (chains
         # force multi-round convergence; O(log^2 n) upper bound).
-        assert 0 < telemetry["rounds"] <= 25
+        assert 0 < telemetry.pop()["cc"]["rounds"] <= 25
         got_local = {
             r["node"]: r["rep"]
-            for r in connected_components(pairs, telemetry=telemetry).collect()
+            for r in connected_components(pairs).collect()
         }
         assert got_local == expected, f"trial {trial} (union-find)"
-        assert telemetry["rounds"] == 0  # small path ran, no Spark rounds
+        # small path ran, no Spark rounds
+        assert telemetry.pop()["cc"]["rounds"] == 0
 
 
 def test_connected_components_round_telemetry_module_level(spark):
-    from candia_spark.operators.dedup import (
-        LAST_CC_TELEMETRY,
-        connected_components,
-    )
+    from candia_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
     connected_components(pairs, small_graph_max_edges=None).collect()
-    assert LAST_CC_TELEMETRY.get("rounds", 0) > 0
+    assert telemetry.pop()["cc"] == {"rounds": 2, "edges": 2}
     connected_components(pairs).collect()
-    assert LAST_CC_TELEMETRY.get("rounds") == 0
+    assert telemetry.pop()["cc"] == {"rounds": 0, "edges": 2}
+
+
+def test_telemetry_attributed_to_job_group(spark):
+    """Records land under the job group current on the calling thread,
+    so a harness that tags each query collects only that query's
+    decisions."""
+    from candia_spark.operators.dedup import connected_components
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    docs = spark.createDataFrame(
+        [(i, f"w{i}a w{i}b w{i}c") for i in range(6)], ["doc_id", "text"]
+    )
+    try:
+        sc.setJobGroup("qA", "qA")
+        connected_components(pairs).collect()
+        sc.setJobGroup("qB", "qB")
+        ngram_jaccard_pairs(docs, n=2, threshold=0.5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got_a, got_b = telemetry.pop("qA"), telemetry.pop("qB")
+    assert got_a == {"cc": {"rounds": 0, "edges": 2}}
+    assert set(got_b) == {"jaccard", "probe"}
+    assert got_b["jaccard"]["mode"] == "plain"
+    assert telemetry.pop("qA") == telemetry.pop("qB") == {}
+
+
+def test_probe_partition_cap_is_recorded(spark):
+    """The 40k probe-partition cap is never silent: a census mass that
+    asks for more partitions records ``clipped: True``, and recording
+    runs no Spark job."""
+    from candia_spark.operators.dedup import (
+        _PROBE_MAX_PARTITIONS,
+        _probe_parallelism,
+    )
+
+    sc = spark.sparkContext
+    df = spark.range(4)
+    try:
+        sc.setJobGroup("probe_cap", "probe_cap")
+        assert _probe_parallelism(df, expanded_rows=10**13) == (
+            _PROBE_MAX_PARTITIONS
+        )
+        assert telemetry.pop("probe_cap")["probe"] == {
+            "partitions": _PROBE_MAX_PARTITIONS, "clipped": True,
+        }
+        par = _probe_parallelism(df, expanded_rows=None)
+        assert telemetry.pop("probe_cap")["probe"] == {
+            "partitions": par, "clipped": False,
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("probe_cap") == []
 
 
 @pytest.mark.slow
@@ -381,11 +432,13 @@ def test_auto_routing_two_term_decision(spark, monkeypatch):
     between modes, and the probe never overwrites the routing record."""
     import candia_spark.operators.dedup as dd
     from candia_spark.operators.dedup import (
-        LAST_JACCARD_TELEMETRY,
         _jaccard_mass_is_skewed,
         ngram_jaccard_pairs,
         shingle_index,
     )
+
+    def jaccard_record() -> dict:
+        return telemetry.pop()["jaccard"]
 
     # flat: every doc a distinct word pair -> df 1 everywhere, mass tiny
     flat = spark.createDataFrame(
@@ -395,9 +448,10 @@ def test_auto_routing_two_term_decision(spark, monkeypatch):
         (r["id_a"], r["id_b"], r["n_common"])
         for r in ngram_jaccard_pairs(flat, n=2, threshold=0.5).collect()
     }
-    assert LAST_JACCARD_TELEMETRY["auto"] is True
-    assert LAST_JACCARD_TELEMETRY["mode"] == "plain"
-    assert LAST_JACCARD_TELEMETRY["join_mass"] == 60 * 2  # df=1, 2 shingles/doc
+    rec = jaccard_record()
+    assert rec["auto"] is True
+    assert rec["mode"] == "plain"
+    assert rec["join_mass"] == 60 * 2  # df=1, 2 shingles/doc
 
     # the mass term alone (no head) flips the same corpus to prefix once
     # the join mass crosses the crossover — and the answer is identical
@@ -406,8 +460,9 @@ def test_auto_routing_two_term_decision(spark, monkeypatch):
         (r["id_a"], r["id_b"], r["n_common"])
         for r in ngram_jaccard_pairs(flat, n=2, threshold=0.5).collect()
     } == flat_res
-    assert LAST_JACCARD_TELEMETRY["mode"] == "prefix"
-    assert LAST_JACCARD_TELEMETRY["skewed"] is False
+    rec = jaccard_record()
+    assert rec["mode"] == "prefix"
+    assert rec["skewed"] is False
     monkeypatch.undo()
 
     # skewed: one shared hot phrase in every doc + a unique tail token —
@@ -420,9 +475,10 @@ def test_auto_routing_two_term_decision(spark, monkeypatch):
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(hot, n=2, threshold=0.5).collect()
     }
-    assert LAST_JACCARD_TELEMETRY["mode"] == "prefix"
-    assert LAST_JACCARD_TELEMETRY["auto"] is True
-    assert LAST_JACCARD_TELEMETRY["top_mass_frac"] > 0.5
+    rec = jaccard_record()
+    assert rec["mode"] == "prefix"
+    assert rec["auto"] is True
+    assert rec["top_mass_frac"] > 0.5
     pinned = {
         (r["id_a"], r["id_b"])
         for r in ngram_jaccard_pairs(
@@ -430,13 +486,14 @@ def test_auto_routing_two_term_decision(spark, monkeypatch):
         ).collect()
     }
     assert res == pinned and len(res) == 60 * 59 // 2
-    assert LAST_JACCARD_TELEMETRY["mode"] == "plain"  # pinned run recorded
-    assert LAST_JACCARD_TELEMETRY["auto"] is False
 
     # the standalone probe classifies without touching the routing keys
+    # the pinned run recorded
     assert _jaccard_mass_is_skewed(shingle_index(flat, n=2)) is False
-    assert LAST_JACCARD_TELEMETRY["mode"] == "plain"
-    assert LAST_JACCARD_TELEMETRY["skewed"] is False
+    rec = jaccard_record()
+    assert rec["mode"] == "plain"
+    assert rec["auto"] is False
+    assert rec["skewed"] is False
 
 
 def test_prefix_filter_with_candidates_raises(spark):

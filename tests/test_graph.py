@@ -156,7 +156,7 @@ def test_authority_dynamic_guard_allows_safe_trajectory(spark):
     ~init), so the dynamic margin holds every iteration."""
     from pyspark.sql import functions as F
 
-    from candia_spark.operators.graph import LAST_AUTHORITY_TELEMETRY
+    from candia_spark import telemetry
 
     n = 1000
     init = 10**15
@@ -167,10 +167,11 @@ def test_authority_dynamic_guard_allows_safe_trajectory(spark):
     nodes = spark.range(n).select(F.col("id").alias("doc_id"))
     out = authority_scores(edges, nodes, iters=2, init=init)
     rows = {r["doc_id"]: r["score"] for r in out.collect()}
-    assert LAST_AUTHORITY_TELEMETRY["static_safe"] is False
-    assert LAST_AUTHORITY_TELEMETRY["dynamic_checks"] == 1  # iters - 1
-    assert LAST_AUTHORITY_TELEMETRY["n_nodes"] == n
-    assert LAST_AUTHORITY_TELEMETRY["n_edges"] == n
+    rec = telemetry.pop()["authority"]
+    assert rec["static_safe"] is False
+    assert rec["dynamic_checks"] == 1  # iters - 1
+    assert rec["n_nodes"] == n
+    assert rec["n_edges"] == n
     # cycle is 1-regular: damped update is a fixed point up to flooring,
     # every score stays exactly init (17*init divisible by 20? 17*1e15 /
     # 20 is exact) -> base + (17*init)//20 == init
@@ -245,7 +246,7 @@ def test_authority_fallback_guard_costs_zero_extra_jobs(spark):
     checks run every iteration), init=1e12 passes it (no checks)."""
     from pyspark.sql import functions as F
 
-    from candia_spark.operators.graph import LAST_AUTHORITY_TELEMETRY
+    from candia_spark import telemetry
 
     sc = spark.sparkContext
     n = 1000
@@ -268,10 +269,10 @@ def test_authority_fallback_guard_costs_zero_extra_jobs(spark):
 
     js2 = jobs_for(2, static_init, "auth_js2")
     js4 = jobs_for(4, static_init, "auth_js4")
-    assert LAST_AUTHORITY_TELEMETRY["dynamic_checks"] == 0
+    assert telemetry.pop("auth_js4")["authority"]["dynamic_checks"] == 0
     jf2 = jobs_for(2, fallback_init, "auth_jf2")
     jf4 = jobs_for(4, fallback_init, "auth_jf4")
-    assert LAST_AUTHORITY_TELEMETRY["dynamic_checks"] == 3  # iters - 1
+    assert telemetry.pop("auth_jf4")["authority"]["dynamic_checks"] == 3
     assert (jf4 - jf2) == (js4 - js2)  # guard rides for free
 
 

@@ -102,11 +102,9 @@ def _pq_fixture(spark):
 def test_persist_leg_matches_default_with_one_count_per_cut(
     spark, monkeypatch
 ):
+    from candia_spark import telemetry
     from candia_spark.operators.dedup import connected_components
-    from candia_spark.operators.graph import (
-        LAST_AUTHORITY_TELEMETRY,
-        authority_scores,
-    )
+    from candia_spark.operators.graph import authority_scores
     from candia_spark.operators.similarity import pq_codebook_kmeans
 
     edges, nodes = _authority_fixture(spark)
@@ -135,7 +133,7 @@ def test_persist_leg_matches_default_with_one_count_per_cut(
         )
 
     default = collect(run())
-    assert LAST_AUTHORITY_TELEMETRY["dynamic_checks"] == 2
+    assert telemetry.pop()["authority"]["dynamic_checks"] == 2
 
     made = []
     real_cut = materialize.cut
@@ -165,7 +163,7 @@ def test_persist_leg_matches_default_with_one_count_per_cut(
         outs = run()
         assert made
         assert calls == {"collect": 0, "count": len(made)}
-        assert LAST_AUTHORITY_TELEMETRY["dynamic_checks"] == 2
+        assert telemetry.pop()["authority"]["dynamic_checks"] == 2
     finally:
         monkeypatch.undo()
     try:

@@ -275,3 +275,41 @@ def test_export_applies_ms2_background_filter(spark, tmp_path):
     assert got_mz == [102.0, 103.0]
     # the MS1 point survived the filter and became the pseudo-precursor
     assert re.search(r"<precursorMz [^>]*>99\.0</precursorMz>", raw)
+
+
+def test_tensor_ids_number_within_each_slice(spark):
+    """mz_idx and sample_no are positions within their slice: a factor's
+    row_idx is a position in its slice's tensor, and the export joins
+    mz_idx to it. Two slices whose m/z partitions interleave globally."""
+    from candia_spark.pipeline import tensorize_slices
+
+    rows = [
+        (swath, 0, sample, t, level, mz0 + off, 10.0)
+        for swath, mz0 in ((400.0, 100.0), (425.0, 110.0))
+        for sample in ("a", "b")
+        for t in (1.0, 2.0, 3.0)
+        for level, off in ((1, 0.0), (2, 100.0), (2, 200.0))
+    ]
+    sliced = spark.createDataFrame(
+        rows,
+        "swath_lower_adjusted double, rt_window long, sample string, "
+        "rt double, level int, mz double, intensity double",
+    )
+    tensor, mz_dim = tensorize_slices(sliced, mass_tol_ppm=10.0, min_tensor_points=1)
+
+    dims: dict = {}
+    for r in mz_dim.collect():
+        dims.setdefault(r["swath_lower_adjusted"], []).append(
+            (r["level"], r["mz_partition_start"], r["mz_idx"])
+        )
+    assert sorted(dims) == [400.0, 425.0]
+    for d in dims.values():
+        assert [i for _, _, i in sorted(d)] == [0, 1, 2]
+
+    samples = {
+        r["swath_lower_adjusted"]: sorted(r["s"])
+        for r in tensor.groupBy("swath_lower_adjusted")
+        .agg(F.collect_set("sample_no").alias("s"))
+        .collect()
+    }
+    assert samples == {400.0: [0, 1], 425.0: [0, 1]}

@@ -81,22 +81,20 @@ def test_jaccard_doc_probe_gate_identical_pairs(spark, sf_smoke):
     """change #4 (jaccard twin): auto mode fires the doc-keyed probe on
     a broadcast-regime corpus; pinning prefix_filter=False keeps the
     unconditional shingle pin. Both must emit the identical pair set."""
-    from candia_spark.operators.dedup import (
-        LAST_JACCARD_TELEMETRY,
-        ngram_jaccard_pairs,
-    )
+    from candia_spark import telemetry
+    from candia_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = load_table(spark, sf_smoke, "documents")
     auto = ngram_jaccard_pairs(
         docs, n=2, threshold=0.3, max_shingle_frac=0.5
     )
     auto_rows = _rows(auto, ["id_a", "id_b", "n_common", "jaccard"])
-    assert LAST_JACCARD_TELEMETRY["probe"] == "doc"
+    assert telemetry.pop()["jaccard"]["probe"] == "doc"
 
     pinned = ngram_jaccard_pairs(
         docs, n=2, threshold=0.3, max_shingle_frac=0.5, prefix_filter=False
     )
-    assert LAST_JACCARD_TELEMETRY["probe"] == "shingle"
+    assert telemetry.pop()["jaccard"]["probe"] == "shingle"
     assert _rows(pinned, ["id_a", "id_b", "n_common", "jaccard"]) == auto_rows
     assert auto_rows, "fixture must produce pairs or the equality is vacuous"
 

@@ -295,10 +295,8 @@ def test_winnow_hot_fingerprint_cap(spark):
     those fingerprints (like max_shingle_df for the jaccard family), so
     only genuinely spliced pairs survive, sizes are computed post-cap,
     and the telemetry records that the cap bit."""
-    from candia_spark.operators.dedup import (
-        LAST_WINNOW_TELEMETRY,
-        winnow_fingerprint_pairs,
-    )
+    from candia_spark import telemetry
+    from candia_spark.operators.dedup import winnow_fingerprint_pairs
 
     # 20-token boilerplate: its INTERIOR windows produce identical
     # minima in every doc (df=10 fingerprints — the hot class), while
@@ -325,8 +323,9 @@ def test_winnow_hot_fingerprint_cap(spark):
     )
     got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
     assert got == {(0, 1)}, "only the genuine splice pair survives the cap"
-    assert LAST_WINNOW_TELEMETRY["hot_fps"] > 0
-    assert LAST_WINNOW_TELEMETRY["fp_rows"] > 0
+    rec = telemetry.pop()["winnow"]
+    assert rec["hot_fps"] > 0
+    assert rec["fp_rows"] > 0
     # fractional form: 5/10 docs == max_fp_df=5 — identical result
     frac = winnow_fingerprint_pairs(
         d, n=3, window=4, threshold=0.25, max_fp_frac=0.5
@@ -336,7 +335,8 @@ def test_winnow_hot_fingerprint_cap(spark):
     loose = winnow_fingerprint_pairs(
         d, n=3, window=4, threshold=0.25, max_fp_df=1000
     )
-    assert loose.count() == 45 and LAST_WINNOW_TELEMETRY["hot_fps"] == 0
+    assert loose.count() == 45
+    assert telemetry.pop()["winnow"]["hot_fps"] == 0
 
 
 def test_remove_duplicate_blocks_incremental_matches_full(spark, tmp_path):

@@ -3,9 +3,10 @@ missing-value imputation, peak counting, scan reconstruction.
 
 The reference runs one Python/GPU process per (slice, ncomp) pair scheduled
 by Snakemake/slurm (decompose_parafac.Snakefile, decompose_cluster.sh). Here
-the same fleet is Spark tasks: ``groupBy(slice keys).applyInPandas`` gives
-one Arrow-batched task per slice, embarrassingly parallel across executors —
-the scheduling layer the reference hand-builds is Spark's own.
+the same fleet is Spark tasks: ``groupBy(slice keys, rank).applyInPandas``
+over a fixed ``defaultParallelism`` partitions, embarrassingly parallel
+across executors — the scheduling layer the reference hand-builds is
+Spark's own.
 
 All kernels are pure numpy (no scipy/torch/tensorly in this environment).
 NN-PARAFAC uses the standard multiplicative-update ALS for non-negative CP
@@ -361,15 +362,23 @@ def decompose_slices(
     Slices failing the trivial-tensor guard (dims < min_dims,
     decompose_parafac.py:289-295) emit no rows.
 
-    Scale: one Arrow task per **(slice, ncomp)** pair — the reference's
-    own scheduling unit (decompose_parafac.Snakefile:15-36, one Snakemake
-    job per slice×rank). The rank range is exploded onto the tensor rows
-    before the grouped map, so a 5-rank sweep yields 5× the tasks instead
-    of 5×-longer tasks; ~10^4-10^5 independent small tensors saturate any
-    executor fleet (replacing decompose_workstation.sh:9-46). The shuffle
-    carries each slice |ncomp_range|× — slice tensors are small by
-    construction (a SWATH x RT window), and imputation is recomputed per
-    rank (cheap relative to ALS). Executor memory bounds hold.
+    Scale: one group per **(slice, ncomp)** pair — the reference's own
+    scheduling unit (decompose_parafac.Snakefile:15-36, one Snakemake job
+    per slice×rank). The rank range is exploded onto the tensor rows
+    before the grouped map, so a 5-rank sweep yields 5× the groups instead
+    of 5×-longer groups; ~10^4-10^5 independent small tensors saturate any
+    executor fleet (replacing decompose_workstation.sh:9-46). The groups
+    are hash-spread over ``defaultParallelism`` partitions by an explicit
+    repartition on the grouping key, which the grouped map reuses (no
+    second exchange): AQE would otherwise coalesce the few-MB shuffle to
+    one task, since it sizes partitions by bytes and cannot see the ALS
+    cost of a group, and a repartition to a fixed count is exempt from
+    that coalescing. The shuffle carries each slice |ncomp_range|× — slice
+    tensors are small by construction (a SWATH x RT window), and
+    imputation is recomputed per rank (cheap relative to ALS). Executor
+    memory bounds hold. The result is lazy: a caller with several
+    consumers cuts it once (``pipeline.run_pipeline`` does), or each
+    consumer re-runs the fleet.
     """
     group_cols = list(group_cols)
     ranks = sorted({int(r) for r in ncomp_range})
@@ -440,6 +449,10 @@ def decompose_slices(
 
     expanded = tensor_long.withColumn(
         "__ncomp", F.explode(F.array(*[F.lit(r) for r in ranks]))
+    ).repartition(
+        tensor_long.sparkSession.sparkContext.defaultParallelism,
+        *group_cols,
+        "__ncomp",
     )
     return expanded.groupBy(*group_cols, "__ncomp").applyInPandas(
         decompose, out_schema

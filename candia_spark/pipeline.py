@@ -3,7 +3,7 @@
 DataFrame -> DataFrame functions under ONE SparkSession.
 
 Stage map (reference process boundary -> here a function call):
- 1. mzml2csv            -> sources.mzml.mzml_to_scan_table   (S1-S3,F1,F2,J1)
+ 1. mzml2csv            -> sources.mzml (read + window assign) (S1-S3,F1,F2,J1)
  2. adjust_swaths       -> adjust_swath_windows              (W1,J2)
  3. split to slices     -> slice_scan_map                    (W2,S5)
  4. tensorize           -> tensorize_slices                  (W3,W4,A1,A5,J4,J8)
@@ -19,10 +19,12 @@ reference experiment file drives this pipeline unchanged.
 
 Scale: stages 1-4 are narrow transforms + two keyed shuffles (slice key,
 cycle/ppm grouping); stage 5 is an embarrassingly parallel applyInPandas
-fleet (one task per slice — the unit the reference schedules on GPUs);
-6-9 are dimension-sized. Natural materialization barriers (parquet
-checkpoints) sit after slicing and after decomposition — both shrink or
-re-key the data, exactly where the reference writes its stage files.
+fleet, one group per (slice, rank) — the unit the reference schedules on
+GPUs — spread over every core; 6-9 are dimension-sized. The
+materialization barriers sit after slicing (the optional parquet slice
+store) and after decomposition (``materialize.cut``, so the fleet runs
+once however many stages read the factors) — both shrink or re-key the
+data, exactly where the reference writes its stage files.
 """
 
 from __future__ import annotations
@@ -32,10 +34,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from candia_spark import telemetry
 from candia_spark.operators.kernels import (
     count_time_mode_peaks,
     decompose_slices,
 )
+from candia_spark.operators.materialize import cut
 from candia_spark.operators.relational import (
     adjust_overlapping_windows,
     bucketize,
@@ -84,32 +88,44 @@ class CandiaConfig:
 
 # --- stage 2: SWATH window adjustment (W1 + J2) ---------------------------
 
-def adjust_swath_windows(scan_map: DataFrame) -> DataFrame:
+def adjust_swath_windows(
+    scan_map: DataFrame, windows: DataFrame
+) -> tuple[DataFrame, DataFrame]:
     """De-overlap the isolation windows and re-annotate every point with
-    its adjusted bounds (adjust_swaths.R:26-43). The window table is tiny:
-    adjust on its distinct set, broadcast-join back on the original
-    bounds."""
+    its adjusted bounds (adjust_swaths.R:26-43).
+
+    ``windows`` is the header window set (``swath_lower``,
+    ``swath_upper``; ``sources.mzml.extract_swath_windows``), the same one
+    stage 1 assigned the points to, as the reference adjusts the intervals
+    file mzml2csv writes from the headers (candia:16-18,
+    msproc.py:568-574). The point table is therefore read once. The one
+    case where this differs from adjusting the points' own distinct
+    bounds: a header window that no surviving point falls in still takes
+    part in the lead/lag adjustment of its neighbours, as in the
+    reference.
+
+    Returns the adjusted points and the window table (original and
+    adjusted bounds). The window table is tiny: it is broadcast-joined
+    back on the original bounds."""
     adj = adjust_overlapping_windows(
-        scan_map.select(
-            F.col("prec_isolation_window_start").alias("lo"),
-            F.col("prec_isolation_window_end").alias("hi"),
+        windows.select(
+            F.col("swath_lower").alias("lo"), F.col("swath_upper").alias("hi")
         ),
         lo_col="lo",
         hi_col="hi",
         digits=2,
+    ).select(
+        F.col("lo").alias("prec_isolation_window_start"),
+        F.col("hi").alias("prec_isolation_window_end"),
+        F.col("lower_adj").alias("swath_lower_adjusted"),
+        F.col("upper_adj").alias("swath_upper_adjusted"),
     )
-    return scan_map.join(
-        F.broadcast(
-            adj.select(
-                F.col("lo").alias("prec_isolation_window_start"),
-                F.col("hi").alias("prec_isolation_window_end"),
-                F.col("lower_adj").alias("swath_lower_adjusted"),
-                F.col("upper_adj").alias("swath_upper_adjusted"),
-            )
-        ),
+    adjusted = scan_map.join(
+        F.broadcast(adj),
         on=["prec_isolation_window_start", "prec_isolation_window_end"],
         how="left",
     )
+    return adjusted, adj
 
 
 # --- stage 3: slicing (W2 + S5) -------------------------------------------
@@ -416,17 +432,40 @@ def run_pipeline(
     slice_store_path: str | None = None,
     mzxml_out: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Stages 1-9 (+10 when ``mzxml_out`` is set) as one lineage. Returns
-    the per-stage DataFrames for inspection/persistence."""
-    from candia_spark.sources.mzml import mzml_to_scan_table
+    """Stages 1-9 (+10 when ``mzxml_out`` is set). Returns the per-stage
+    DataFrames for inspection/persistence.
 
-    scan_map = mzml_to_scan_table(spark, mzml_paths, cfg.min_scan_intensity)
-    adjusted = adjust_swath_windows(scan_map)
+    The run is eager through stage 5: the decomposition fleet runs once,
+    inside this call, through ``materialize.cut``, and the returned
+    ``factors`` and stages 6-10 read the cut rows instead of re-running the
+    fleet once per consumer. The cut's row and partition counts are
+    recorded as telemetry op ``fleet``. On the cut's persist leg (executors
+    may be removed) the factors stay cached until the session's cache is
+    cleared, as every persist-leg cut does."""
+    from candia_spark.sources.mzml import (
+        assign_windows,
+        extract_swath_windows,
+        read_mzml_points,
+    )
+
+    # one header window set feeds both the point assignment and the
+    # adjustment, so the points are parsed once
+    windows = extract_swath_windows(spark, mzml_paths)
+    scan_map = assign_windows(
+        read_mzml_points(spark, mzml_paths, cfg.min_scan_intensity), windows
+    )
+    adjusted, adjusted_windows = adjust_swath_windows(scan_map, windows)
     sliced = slice_scan_map(adjusted, cfg.window_size_sec, slice_store_path)
     tensor_long, mz_dim = tensorize_slices(
         sliced, cfg.mass_tol_ppm, cfg.min_tensor_points
     )
-    factors = decompose(tensor_long, cfg, ncomp_range, max_iter)
+    factors, stats = cut(
+        decompose(tensor_long, cfg, ncomp_range, max_iter),
+        F.count(F.lit(1)).alias("rows"),
+    )
+    telemetry.record(
+        "fleet", rows=stats["rows"], partitions=factors.rdd.getNumPartitions()
+    )
     model_index, spectrum_index = index_models(spark, factors)
     peaks = time_mode_peaks(factors, cfg)
     best = select_best_models(peaks)
@@ -445,16 +484,12 @@ def run_pipeline(
         "sample_modes": sample_modes,
     }
     if mzxml_out is not None:
-        centers = (
-            adjusted.select("swath_lower_adjusted", "swath_upper_adjusted")
-            .distinct()
-            .select(
-                "swath_lower_adjusted",
-                (
-                    (F.col("swath_lower_adjusted") + F.col("swath_upper_adjusted")) / 2
-                ).alias("window_center"),
-            )
-        )
+        centers = adjusted_windows.select(
+            "swath_lower_adjusted",
+            (
+                (F.col("swath_lower_adjusted") + F.col("swath_upper_adjusted")) / 2
+            ).alias("window_center"),
+        ).distinct()
         export_best_models_mzxml(
             factors, best, mz_dim, spectrum_index, mzxml_out, window_centers=centers
         )

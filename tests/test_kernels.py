@@ -195,6 +195,38 @@ def test_decompose_parallel_unit_is_slice_times_rank(spark):
     )
 
 
+def test_decompose_fleet_runs_one_task_per_core(spark):
+    """A few-KB fleet shuffle is not coalesced to one task: the (slice,
+    rank) groups are spread over defaultParallelism tasks by one
+    fixed-count repartition, which the grouped map reuses."""
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    rows = [
+        Row(slice_id=k, sample_no=s, cycle=t, mz_idx=m, intensity=float(1 + s + t * m))
+        for k in range(n) for s in range(2) for t in range(3) for m in range(3)
+    ]
+    out = decompose_slices(
+        spark.createDataFrame(rows), ["slice_id"], ncomp_range=[1, 2], max_iter=5
+    )
+    group = "fleet_tasks"
+    sc.setJobGroup(group, group)
+    try:
+        assert len(out.collect()) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(group))
+    result_stage = max(tracker.getJobInfo(last_job).stageIds)
+    assert tracker.getStageInfo(result_stage).numTasks == n
+
+    final = out._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    exchanges = [line for line in final.splitlines() if "Exchange" in line]
+    assert len(exchanges) == 1, final
+    assert "hashpartitioning(slice_id#" in exchanges[0]
+    assert f", {n}), REPARTITION_BY_NUM" in exchanges[0]
+
+
 @pytest.mark.parametrize("rank", [1, 3])
 def test_nn_parafac_other_ranks(rank):
     tensor, _ = _synthetic_rank2()

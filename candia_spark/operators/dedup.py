@@ -192,7 +192,8 @@ def _cap_hot_keys(
     definition): the over-cap set is cut first — one tiny job over the
     already-materialized base, its size observed on that same job — and
     when it's empty the base is returned untouched with no second
-    materialization.
+    materialization. Whenever a cap is given, ``n_hot`` is recorded as
+    ``hot_keys: {key_col: n_hot}``.
     """
     if max_df is None and max_frac is None:
         return base, 0, base_rows
@@ -215,6 +216,7 @@ def _cap_hot_keys(
         F.count(F.lit(1)).alias("n"),
     )
     n_hot = stats["n"]
+    telemetry.record("hot_keys", **{key_col: n_hot})
     if n_hot == 0:
         return base, 0, base_rows
     capped, stats = cut(
@@ -309,9 +311,9 @@ def _probe_parallelism(
     near-serial). 2x cores, raised when the caller's census says the
     expanded join output needs more partitions to stay near
     ``_PROBE_TARGET_EXPANDED_BYTES_PER_TASK`` per task (the at-scale
-    regime; a no-op at bench scale). Records ``probe: {partitions,
-    clipped}``; ``clipped`` is true when ``_PROBE_MAX_PARTITIONS``
-    lowered the count."""
+    regime; a no-op at bench scale). Appends one ``probe: {partitions,
+    clipped}`` entry per call; ``clipped`` is true when
+    ``_PROBE_MAX_PARTITIONS`` lowered the count."""
     import math
 
     cores = df.sparkSession.sparkContext.defaultParallelism
@@ -326,7 +328,7 @@ def _probe_parallelism(
         clipped = need > max(par, _PROBE_MAX_PARTITIONS)
         par = max(par, min(_PROBE_MAX_PARTITIONS, need))
     par = max(par, 1)
-    telemetry.record("probe", partitions=par, clipped=clipped)
+    telemetry.append("probe", partitions=par, clipped=clipped)
     return par
 
 

@@ -1,18 +1,24 @@
 """Order-dependent (sequential) operators: greedy ppm partitioning (W4) and
 scan-cycle binning (W3) — SURVEY §7.3(1) calls W4 the single most
-semantics-critical operator of the reference pipeline.
+semantics-critical operator of the reference pipeline — and the per-slice
+tensor kernel that applies both to one slice's points in pandas.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from candia_spark.operators.asof import asof_join
+
+# The reference keeps points up to 0.1 s after a sample's last MS1 scan
+# (generate_slice_tensor.py:99-145).
+CYCLE_TAIL_SEC = 0.1
 
 
 def greedy_partition_starts(values: Sequence[float], tol_ppm: float) -> list[float]:
@@ -32,6 +38,63 @@ def greedy_partition_starts(values: Sequence[float], tol_ppm: float) -> list[flo
             cur = v
         starts.append(cur)
     return starts
+
+
+def tensorize_slice(
+    points: pd.DataFrame, tol_ppm: float, min_points: int
+) -> pd.DataFrame:
+    """One slice's tensor cells from its points (columns ``sample``,
+    ``level``, ``rt``, ``mz``, ``intensity``), as the reference builds one
+    slice's tensor in one process (generate_slice_tensor.py:67-178):
+
+    - cycles (W3): per sample, a point's cycle is the position of the last
+      of the sample's distinct MS1 times at or before it (cycles are
+      right-open, so a marker equal to a point's time matches it); points
+      before the first marker, or more than ``CYCLE_TAIL_SEC`` after the
+      last, are dropped
+    - m/z partitions (W4): ``greedy_partition_starts`` per level over the
+      distinct m/z of the points that have a cycle
+    - filter (A5): keep a partition when some sample has at least
+      ``min_points`` points in it
+    - ordinals: ``sample_no`` over the sorted sample names and ``mz_idx``
+      over the sorted (level, partition start) pairs, both within the slice
+
+    Returns one row per (sample_no, cycle, mz_idx) cell with the cell's
+    ``level``, ``mz_partition_start`` and summed ``intensity``. The same
+    semantics, written as Spark operators, are ``assign_scan_cycles``,
+    ``greedy_ppm_partition`` and ``relational.two_level_count_filter``.
+    """
+    rt = points["rt"].to_numpy(dtype="float64")
+    ms1 = (points["level"] == 1).to_numpy()
+    cycle = np.full(len(points), -1, dtype="int64")
+    for rows in points.groupby("sample", sort=False).indices.values():
+        markers = np.unique(rt[rows[ms1[rows]]])
+        if markers.size:
+            c = np.searchsorted(markers, rt[rows], side="right") - 1
+            c[rt[rows] > markers[-1] + CYCLE_TAIL_SEC] = -1
+            cycle[rows] = c
+    timed = cycle >= 0
+    pts = points[timed].assign(cycle=cycle[timed])
+
+    mz = pts["mz"].to_numpy(dtype="float64")
+    starts = np.empty(len(pts))
+    for rows in pts.groupby("level", sort=False).indices.values():
+        distinct = np.unique(mz[rows])
+        first = np.asarray(greedy_partition_starts(distinct.tolist(), tol_ppm))
+        starts[rows] = first[np.searchsorted(distinct, mz[rows])]
+    pts = pts.assign(mz_partition_start=starts)
+
+    part = ["level", "mz_partition_start"]
+    per_sample = pts.groupby(part + ["sample"], sort=False)["rt"].transform("size")
+    best = per_sample.groupby([pts[c] for c in part], sort=False).transform("max")
+    kept = pts[best >= min_points]
+    kept = kept.assign(
+        sample_no=kept.groupby("sample").ngroup(),
+        mz_idx=kept.groupby(part).ngroup(),
+    )
+    return kept.groupby(
+        ["sample_no", "cycle", "mz_idx"] + part, as_index=False, sort=False
+    )["intensity"].sum()
 
 
 def greedy_ppm_partition(

@@ -6,7 +6,7 @@ Stage map (reference process boundary -> here a function call):
  1. mzml2csv            -> sources.mzml (read + window assign) (S1-S3,F1,F2,J1)
  2. adjust_swaths       -> adjust_swath_windows              (W1,J2)
  3. split to slices     -> slice_scan_map                    (W2,S5)
- 4. tensorize           -> tensorize_slices                  (W3,W4,A1,A5,J4,J8)
+ 4. tensorize           -> tensorize_slices: one grouped map (W3,W4,A1,A5,J4,J8)
  5. decompose           -> decompose                         (K1,K2,F5,A10)
  6. index models        -> index_models                      (J7,W9,W10)
  7. collect time modes  -> time_mode_peaks                   (A11,F7)
@@ -17,10 +17,12 @@ Stage map (reference process boundary -> here a function call):
 Config keys mirror ``test/test_experiment/config/candia.yaml`` names, so a
 reference experiment file drives this pipeline unchanged.
 
-Scale: stages 1-4 are narrow transforms + two keyed shuffles (slice key,
-cycle/ppm grouping); stage 5 is an embarrassingly parallel applyInPandas
-fleet, one group per (slice, rank) — the unit the reference schedules on
-GPUs — spread over every core; 6-9 are dimension-sized. The
+Scale: stages 1-3 are narrow transforms and the slice-key shuffle of the
+store; stage 4 shuffles once more on the slice key and tensorizes one
+slice's points per pandas group — the reference's own unit, one slice per
+process; stage 5 is an embarrassingly parallel applyInPandas fleet, one
+group per (slice, rank) — the unit the reference schedules on GPUs —
+spread over every core; 6-9 are dimension-sized. The
 materialization barriers sit after slicing (the optional parquet slice
 store) and after decomposition (``materialize.cut``, so the fleet runs
 once however many stages read the factors) — both shrink or re-key the
@@ -31,8 +33,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from candia_spark import telemetry
 from candia_spark.operators.kernels import (
@@ -46,12 +49,8 @@ from candia_spark.operators.relational import (
     cross_index,
     explode_index,
     groupwise_argmax,
-    two_level_count_filter,
 )
-from candia_spark.operators.sequential import (
-    assign_scan_cycles,
-    greedy_ppm_partition,
-)
+from candia_spark.operators.sequential import tensorize_slice
 
 
 @dataclass
@@ -157,63 +156,42 @@ def tensorize_slices(
     min_tensor_points: int = 5,
 ) -> tuple[DataFrame, DataFrame]:
     """Long-format slice tensors: one row per (slice, sample_no, cycle,
-    mz_idx) with summed intensity (generate_slice_tensor.py:67-178).
+    mz_idx) with summed intensity (generate_slice_tensor.py:67-178), and
+    the m/z dimension: one row per (slice, level, mz_partition_start) with
+    its ``mz_idx``.
 
-    - cycles: per (slice, sample), points binned by the sample's MS1
-      acquisition times (W3; right-open with the reference's +0.1s tail)
-    - m/z partitions: greedy ppm scan per (slice, level) (W4)
-    - partition filter: keep partitions where some sample has >=
-      ``min_tensor_points`` points (A5/J4)
-    - sample_no: ordinal of the sorted distinct sample names (J8/W9)
-    - mz_idx: ordinal of (level, partition_start) within the slice (W6)
-    """
+    One grouped map per slice: the slice's points (only the columns the
+    kernel reads) shuffle once on the slice key, and
+    ``sequential.tensorize_slice`` bins them into cycles (W3), partitions
+    the m/z (W4), filters the partitions (A5/J4), numbers ``sample_no``
+    and ``mz_idx`` within the slice (J8/W6) and sums the cells in pandas.
+    Both ids number WITHIN the slice: a factor's row_idx is a position in
+    its slice's tensor, and the export joins mz_idx to it. ``mz_dim`` is
+    a distinct projection of the same grouped map. The shuffle's partition
+    count is left to AQE, which sizes it by bytes: the kernel costs little
+    per byte, unlike the decomposition fleet."""
     slice_cols = ["swath_lower_adjusted", "rt_window"]
-
-    ms1_markers = (
-        sliced.filter(F.col("level") == 1)
-        .select(*slice_cols, "sample", F.col("rt").alias("t"))
-        .distinct()
-    )
-    with_cycles = assign_scan_cycles(
-        sliced.withColumnRenamed("rt", "t"),
-        time_col="t",
-        group_cols=slice_cols + ["sample"],
-        marker_times=ms1_markers,
-        tail=0.1,
-    )
-
-    parted = greedy_ppm_partition(
-        with_cycles,
-        "mz",
-        slice_cols + ["level"],
-        tol_ppm=mass_tol_ppm,
-        out_col="mz_partition_start",
+    points = sliced.select(*slice_cols, "sample", "level", "rt", "mz", "intensity")
+    schema = StructType(
+        [points.schema[c] for c in slice_cols]
+        + [
+            StructField("sample_no", LongType(), False),
+            StructField("cycle", LongType()),
+            StructField("mz_idx", LongType(), False),
+            points.schema["level"],
+            StructField("mz_partition_start", DoubleType()),
+            StructField("intensity", DoubleType()),
+        ]
     )
 
-    kept = two_level_count_filter(
-        parted,
-        inner_key=slice_cols + ["level", "mz_partition_start", "sample"],
-        outer_key=slice_cols + ["level", "mz_partition_start"],
-        min_count=min_tensor_points,
-    )
+    def tensorize(key, pdf):
+        cells = tensorize_slice(pdf, mass_tol_ppm, min_tensor_points)
+        return cells.assign(**dict(zip(slice_cols, key)))[schema.fieldNames()]
 
-    # Both ids number WITHIN the slice: a factor's row_idx is a position
-    # in its slice's tensor, and the export joins mz_idx to it.
-    def ordinal(cols: list[str], id_col: str) -> DataFrame:
-        w = Window.partitionBy(*slice_cols).orderBy(*cols)
-        return kept.select(*slice_cols, *cols).distinct().withColumn(
-            id_col, (F.row_number().over(w) - 1).cast("long")
-        )
-
-    samples = ordinal(["sample"], "sample_no")
-    mz_dim = ordinal(["level", "mz_partition_start"], "mz_idx")
-
-    return (
-        kept.join(samples, on=slice_cols + ["sample"])
-        .join(mz_dim, on=slice_cols + ["level", "mz_partition_start"])
-        .groupBy(*slice_cols, "sample_no", "cycle", "mz_idx")
-        .agg(F.sum("intensity").alias("intensity"))
-    ), mz_dim
+    cells = points.groupBy(*slice_cols).applyInPandas(tensorize, schema)
+    tensor_long = cells.select(*slice_cols, "sample_no", "cycle", "mz_idx", "intensity")
+    mz_dim = cells.select(*slice_cols, "level", "mz_partition_start", "mz_idx").distinct()
+    return tensor_long, mz_dim
 
 
 # --- stage 5: decomposition (K1 + K2 + F5 + A10) --------------------------

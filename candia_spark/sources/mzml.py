@@ -108,37 +108,51 @@ class SpectrumRecord:
         self.problem = None
 
 
-def iter_spectra(source: io.IOBase | str) -> Iterator[SpectrumRecord]:
-    """Stream SpectrumRecord objects from an mzML file/stream via
-    incremental parse (constant memory in spectra count)."""
+def _spectrum_elements(source: io.IOBase | str) -> Iterator[ElementTree.Element]:
+    """Each ``<spectrum>`` element of an mzML file/stream, cleared once
+    the caller has read it (incremental parse, constant memory in
+    spectra count)."""
     for _event, el in ElementTree.iterparse(source, events=("end",)):
-        if el.tag != f"{_NS}spectrum":
-            continue
-        rec = SpectrumRecord()
-        rec.index = int(el.get("index"))
-        lvl = _cv(el, "MS:1000511")
-        rec.level = int(lvl.get("value")) if lvl is not None else None
+        if el.tag == f"{_NS}spectrum":
+            yield el
+            el.clear()
 
-        scan_list = el.find(f"{_NS}scanList")
-        scan = scan_list.find(f"{_NS}scan") if scan_list is not None else None
-        st = _cv(scan, "MS:1000016") if scan is not None else None
-        if st is not None:
-            rec.rt = float(st.get("value"))
-            rec.rt_unit = st.get("unitName")
 
-        prec_list = el.find(f"{_NS}precursorList")
-        if prec_list is not None:
-            iso = prec_list.find(f"{_NS}precursor/{_NS}isolationWindow")
-            if iso is not None:
-                for acc, attr in (
-                    ("MS:1000827", "target_mz"),
-                    ("MS:1000828", "lower_off"),
-                    ("MS:1000829", "upper_off"),
-                ):
-                    cv = _cv(iso, acc)
-                    if cv is not None:
-                        setattr(rec, attr, float(cv.get("value")))
+def _spectrum_header(el: ElementTree.Element) -> SpectrumRecord:
+    """A spectrum's index, MS level, scan time and isolation window; its
+    binary arrays are left undecoded."""
+    rec = SpectrumRecord()
+    rec.index = int(el.get("index"))
+    lvl = _cv(el, "MS:1000511")
+    rec.level = int(lvl.get("value")) if lvl is not None else None
 
+    scan_list = el.find(f"{_NS}scanList")
+    scan = scan_list.find(f"{_NS}scan") if scan_list is not None else None
+    st = _cv(scan, "MS:1000016") if scan is not None else None
+    if st is not None:
+        rec.rt = float(st.get("value"))
+        rec.rt_unit = st.get("unitName")
+
+    prec_list = el.find(f"{_NS}precursorList")
+    if prec_list is not None:
+        iso = prec_list.find(f"{_NS}precursor/{_NS}isolationWindow")
+        if iso is not None:
+            for acc, attr in (
+                ("MS:1000827", "target_mz"),
+                ("MS:1000828", "lower_off"),
+                ("MS:1000829", "upper_off"),
+            ):
+                cv = _cv(iso, acc)
+                if cv is not None:
+                    setattr(rec, attr, float(cv.get("value")))
+    return rec
+
+
+def iter_spectra(source: io.IOBase | str) -> Iterator[SpectrumRecord]:
+    """Stream SpectrumRecord objects, headers and decoded m/z and
+    intensity arrays, from an mzML file/stream."""
+    for el in _spectrum_elements(source):
+        rec = _spectrum_header(el)
         for bda in el.iter(f"{_NS}binaryDataArray"):
             is_mz = _cv(bda, "MS:1000514") is not None
             is_int = _cv(bda, "MS:1000515") is not None
@@ -152,8 +166,6 @@ def iter_spectra(source: io.IOBase | str) -> Iterator[SpectrumRecord]:
                 rec.mz_array = arr
             else:
                 rec.intensity_array = arr
-
-        el.clear()
         yield rec
 
 
@@ -199,9 +211,11 @@ def _points_for_file(path: str, min_intensity: float) -> Iterator[tuple]:
 
 
 def _windows_for_file(path: str) -> set[tuple[float, float]]:
+    """The file's SWATH windows from its MS2 spectrum headers alone: no
+    binary array is decoded."""
     out = set()
     with open(path, "rb") as f:
-        for rec in iter_spectra(f):
+        for rec in map(_spectrum_header, _spectrum_elements(f)):
             if (
                 rec.level == 2
                 and rec.target_mz is not None

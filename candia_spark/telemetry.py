@@ -6,9 +6,13 @@ counts, hot-key caps). A harness that tags each query with
 ``sc.setJobGroup(name, name)`` collects that query's decisions with
 ``pop(name)``. Recording runs no Spark job.
 
+``append(op, **fields)`` keeps one entry per call instead, for decisions
+an operation makes more than once (each pair probe sizes its own
+partitions): ``op`` then maps to a list of field dicts.
+
 Records made with no job group share one entry per op that later calls
-update in place, so the registry stays bounded in tests, scripts and
-streaming loops that never pop.
+update in place (``append`` keeps only the last call), so the registry
+stays bounded in tests, scripts and streaming loops that never pop.
 """
 
 from __future__ import annotations
@@ -26,6 +30,16 @@ def _job_group() -> str | None:
 def record(op: str, **fields) -> None:
     """Merge ``fields`` into ``op``'s entry for the current job group."""
     _REGISTRY.setdefault(_job_group(), {}).setdefault(op, {}).update(fields)
+
+
+def append(op: str, **fields) -> None:
+    """Add ``fields`` as one more entry of ``op``'s list for the current
+    job group."""
+    group = _job_group()
+    entries = _REGISTRY.setdefault(group, {}).setdefault(op, [])
+    if group is None:
+        entries.clear()
+    entries.append(fields)
 
 
 def pop(group: str | None = None) -> dict[str, dict]:

@@ -383,16 +383,39 @@ def test_probe_partition_cap_is_recorded(spark):
         assert _probe_parallelism(df, expanded_rows=10**13) == (
             _PROBE_MAX_PARTITIONS
         )
-        assert telemetry.pop("probe_cap")["probe"] == {
+        assert telemetry.pop("probe_cap")["probe"] == [{
             "partitions": _PROBE_MAX_PARTITIONS, "clipped": True,
-        }
+        }]
         par = _probe_parallelism(df, expanded_rows=None)
-        assert telemetry.pop("probe_cap")["probe"] == {
+        assert telemetry.pop("probe_cap")["probe"] == [{
             "partitions": par, "clipped": False,
-        }
+        }]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("probe_cap") == []
+
+
+def test_probe_telemetry_keeps_one_entry_per_call(spark):
+    """Two probes sized under one job group leave two entries, in call
+    order; outside any job group only the last call is kept."""
+    from candia_spark.operators.dedup import _probe_parallelism
+
+    sc = spark.sparkContext
+    df = spark.range(4)
+    try:
+        sc.setJobGroup("probe_twice", "probe_twice")
+        first = _probe_parallelism(df, expanded_rows=None)
+        second = _probe_parallelism(df, expanded_rows=10**13)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert telemetry.pop("probe_twice")["probe"] == [
+        {"partitions": first, "clipped": False},
+        {"partitions": second, "clipped": True},
+    ]
+    telemetry.pop()
+    _probe_parallelism(df, expanded_rows=None)
+    _probe_parallelism(df, expanded_rows=None)
+    assert len(telemetry.pop()["probe"]) == 1
 
 
 @pytest.mark.slow

@@ -9,8 +9,10 @@ tier. Refresh the goldens (only for a legitimate change):
 from __future__ import annotations
 
 import importlib.util
+import itertools
 import os
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -117,3 +119,125 @@ def test_fleet_cut_is_recorded_under_the_job_group(spark, result):
     golden = pd.read_parquet(os.path.join(GOLDEN_DIR, "factors.parquet"))
     assert fleet["rows"] == len(golden) == result["factors"].count()
     assert fleet["partitions"] == spark.sparkContext.defaultParallelism
+
+
+# --- planted-truth recovery ------------------------------------------------
+#
+# The generator plants 3 rank-one analytes per slice (gen_mzml.plant_analytes;
+# per-sample abundances are the first draw of rng([seed, 2, sample])). The
+# paper's claim is that PARAFAC plus unimodality selection yields the pure
+# analyte spectra. Measured on this fixture (ranks 2-4, 50 iterations; the
+# same numbers hold at 3000 iterations, so the misses are not convergence):
+# - rank: 3 is among the selected ranks of all 4 slices, but the unimodal
+#   fraction ties at 1.0 across ranks in 3 of them (selected: {3, 4},
+#   {2, 3, 4}, {2, 3, 4}, {2, 3, 4}), so selection does not single it out;
+# - mass mode, rank 3: 11 of 12 planted spectra are matched at cosine
+#   0.7996 or more (median of all 12: 0.91); the 12th, at slice (400.0, 1),
+#   co-elutes with another analyte (both apexes at 85.8 s) and matches at
+#   0.49;
+# - sample mode, rank 3: 8 of 12 components correlate with their analyte's
+#   planted abundances at Pearson r >= 0.977; the other 4 (0.43, 0.45, 0.59,
+#   -0.11) sit in the three slices where two or more analytes peak within
+#   6.1 s of each other, with 3 samples to tell them apart.
+# Each bound sits below the measurement: cosine 0.75 (0.05 margin), r 0.9
+# (0.077 margin), and the counts are the measured ones.
+PLANTED_RANK = 3
+
+
+def _planted():
+    gen = REGEN.gen_mzml()
+    shape = REGEN.SYNTHETIC_SHAPE
+    windows, analytes = gen.plant_analytes(
+        REGEN.SYNTHETIC_SEED, shape["n_windows"], shape["rt_span"]
+    )
+    abundance = np.array([
+        np.random.default_rng([REGEN.SYNTHETIC_SEED, 2, s]).uniform(
+            0.5, 2.0, len(analytes)
+        )
+        for s in range(shape["samples"])
+    ])
+    return gen, analytes, abundance
+
+
+def _planted_spectrum(analyte, level, start, tol_ppm):
+    """The analyte's precursor (MS1) and fragments (MS2) on the slice's
+    m/z partitions: each m/z lands on the nearest partition start of its
+    level within the ppm tolerance."""
+    spec = np.zeros(len(start))
+    peaks = [(1, analyte["prec_mz"], 2e4)] + [
+        (2, mz, inten) for mz, inten in zip(analyte["frag_mz"], analyte["frag_int"])
+    ]
+    for lvl, mz, inten in peaks:
+        gap = np.where(level == lvl, np.abs(start - mz), np.inf)
+        i = int(np.argmin(gap))
+        if gap[i] <= mz * tol_ppm / 1e6:
+            spec[i] += inten
+    return spec
+
+
+def _recovery(result):
+    """Per planted analyte at the planted rank: (slice, cosine of the
+    matched mass-mode component with its planted spectrum, Pearson r of
+    that component's sample mode with its planted abundances). Components
+    are matched to analytes by the assignment of largest total cosine."""
+    gen, analytes, abundance = _planted()
+    factors = result["factors"].toPandas()
+    factors = factors[factors["ncomp"] == PLANTED_RANK]
+    dims = result["mz_dim"].toPandas()
+    swaths = sorted(dims["swath_lower_adjusted"].unique())
+    tol = CandiaConfig().mass_tol_ppm
+    out = []
+    for (swath, rt_window), dim in dims.groupby(SLICE):
+        dim = dim.sort_values("mz_idx")
+        mine = [
+            a for a in range(len(analytes))
+            if analytes[a]["window"] == swaths.index(swath)
+            and int(analytes[a]["apex"] // gen.RT_WINDOW) == rt_window
+        ]
+        f = factors[
+            (factors[SLICE[0]] == swath) & (factors[SLICE[1]] == rt_window)
+        ]
+        mass = np.zeros((len(dim), PLANTED_RANK))
+        samples = np.zeros((abundance.shape[0], PLANTED_RANK))
+        for mode, mat in ((2, mass), (0, samples)):
+            rows = f[f["mode"] == mode]
+            mat[rows["row_idx"], rows["comp"]] = rows["value"]
+        planted = np.stack([
+            _planted_spectrum(
+                analytes[a], dim["level"].to_numpy(),
+                dim["mz_partition_start"].to_numpy(), tol,
+            )
+            for a in mine
+        ], axis=1)
+        cos = (mass / np.linalg.norm(mass, axis=0)).T @ (
+            planted / np.linalg.norm(planted, axis=0)
+        )
+        comps = max(
+            itertools.permutations(range(PLANTED_RANK), len(mine)),
+            key=lambda p: sum(cos[c, j] for j, c in enumerate(p)),
+        )
+        for j, (a, c) in enumerate(zip(mine, comps)):
+            r = np.corrcoef(samples[:, c], abundance[:, a])[0, 1]
+            out.append(((swath, rt_window), cos[c, j], r))
+    return out
+
+
+def test_planted_rank_is_selected_in_every_slice(result):
+    best = result["best_models"].toPandas()
+    ranks = best.groupby(SLICE)["ncomp"].apply(set)
+    assert len(ranks) == 4
+    for slice_key, selected in ranks.items():
+        assert PLANTED_RANK in selected, (slice_key, selected)
+
+
+def test_mass_modes_recover_the_planted_spectra(result):
+    rec = _recovery(result)
+    assert len(rec) == 12
+    cosines = sorted(cos for _, cos, _ in rec)
+    assert sum(c >= 0.75 for c in cosines) >= 11, cosines
+
+
+def test_sample_modes_track_the_planted_abundances(result):
+    rec = _recovery(result)
+    corr = sorted(r for *_, r in rec)
+    assert sum(r >= 0.9 for r in corr) >= 8, corr

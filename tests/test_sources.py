@@ -4,6 +4,8 @@
 from __future__ import annotations
 
 import base64
+import importlib.util
+import os
 import re
 import struct
 
@@ -17,6 +19,7 @@ from candia_spark.sources.adapters import (
     write_mgf,
 )
 from candia_spark.sources.mzml import (
+    _windows_for_file,
     detect_time_unit,
     extract_swath_windows,
     iter_spectra,
@@ -62,6 +65,48 @@ def test_swath_windows(spark):
     assert lowers == sorted(lowers)
     w0 = wins[0]
     assert w0["swath_upper"] > w0["swath_lower"]
+
+
+def _synthetic_mzml(out_dir) -> str:
+    """One sample of perfbench's seeded DIA mzML, 3 isolation windows."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "gen_mzml", os.path.join(repo, "perfbench", "gen_mzml.py")
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    paths, _ = gen.generate(str(out_dir), 5, samples=1, n_windows=3, rt_span=30.0)
+    return paths[0]
+
+
+def test_header_window_pass_matches_full_parse(tmp_path):
+    path = _synthetic_mzml(tmp_path)
+    with open(path, "rb") as f:
+        want = {
+            (s.target_mz - s.lower_off, s.target_mz + s.upper_off)
+            for s in iter_spectra(f)
+            if s.level == 2
+        }
+    assert len(want) == 3
+    assert _windows_for_file(path) == want
+
+
+def test_header_window_pass_decodes_no_binary(tmp_path):
+    """Every ``<binary>`` replaced by text that is not base64: the full
+    parse fails on it, the window pass reads headers only and still
+    yields every window."""
+    path = _synthetic_mzml(tmp_path)
+    want = _windows_for_file(path)
+    with open(path, encoding="utf-8") as f:
+        text = f.read()
+    bad = tmp_path / "bad.mzML"
+    bad.write_text(
+        re.sub(r"<binary>[^<]*</binary>", "<binary>not base64!</binary>", text),
+        encoding="utf-8",
+    )
+    with pytest.raises(ValueError), open(bad, "rb") as f:
+        list(iter_spectra(f))
+    assert _windows_for_file(str(bad)) == want
 
 
 def test_mzml_scan_table(spark):

@@ -332,6 +332,32 @@ def test_phash_near_dups_band_caps(spark):
     assert phash_near_dups(df, max_hamming=0, max_band_df=4).count() == 0
 
 
+def test_phash_hot_band_cap_is_recorded_without_a_job(spark, monkeypatch):
+    """A forced hot pHash band is recorded as ``hot_keys.band`` under the
+    caller's job group, and recording starts no Spark job: the call
+    starts as many jobs as the same call with recording switched off."""
+    from candia_spark import telemetry
+    from candia_spark.operators.multimodal import phash_near_dups
+
+    sc = spark.sparkContext
+    rows = [(i, bytes(200)) for i in range(8)]  # one shared value per band
+    df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
+
+    def jobs_for(tag: str) -> int:
+        sc.setJobGroup(tag, tag)
+        try:
+            phash_near_dups(df, max_hamming=0, max_band_df=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    recorded = jobs_for("hot_band")
+    assert telemetry.pop("hot_band")["hot_keys"] == {"band": 4}
+    monkeypatch.setattr(telemetry, "record", lambda op, **fields: None)
+    assert jobs_for("hot_band_silent") == recorded
+    assert telemetry.pop("hot_band_silent") == {}
+
+
 def test_dhash64_null_payload_is_empty(spark):
     """A NULL binary payload hashes like an empty one (the null-text
     doctrine applied to binary) instead of crashing the Arrow batch."""

@@ -26,7 +26,8 @@ spread over every core; 6-9 are dimension-sized. The
 materialization barriers sit after slicing (the optional parquet slice
 store) and after decomposition (``materialize.cut``, so the fleet runs
 once however many stages read the factors) — both shrink or re-key the
-data, exactly where the reference writes its stage files.
+data, exactly where the reference writes its stage files. The tiny
+header window set is cut too, because stages 1 and 2 both broadcast it.
 """
 
 from __future__ import annotations
@@ -413,13 +414,15 @@ def run_pipeline(
     """Stages 1-9 (+10 when ``mzxml_out`` is set). Returns the per-stage
     DataFrames for inspection/persistence.
 
-    The run is eager through stage 5: the decomposition fleet runs once,
-    inside this call, through ``materialize.cut``, and the returned
-    ``factors`` and stages 6-10 read the cut rows instead of re-running the
-    fleet once per consumer. The cut's row and partition counts are
-    recorded as telemetry op ``fleet``. On the cut's persist leg (executors
-    may be removed) the factors stay cached until the session's cache is
-    cleared, as every persist-leg cut does."""
+    The header window set is cut first (one header walk, its row count
+    recorded as telemetry op ``windows``). The run is eager through stage
+    5: the decomposition fleet runs once, inside this call, through
+    ``materialize.cut``, and the returned ``factors`` and stages 6-10 read
+    the cut rows instead of re-running the fleet once per consumer. The
+    cut's row and partition counts are recorded as telemetry op ``fleet``.
+    On the cut's persist leg (executors may be removed) the factors stay
+    cached until the session's cache is cleared, as every persist-leg cut
+    does."""
     from candia_spark.sources.mzml import (
         assign_windows,
         extract_swath_windows,
@@ -427,8 +430,12 @@ def run_pipeline(
     )
 
     # one header window set feeds both the point assignment and the
-    # adjustment, so the points are parsed once
-    windows = extract_swath_windows(spark, mzml_paths)
+    # adjustment, so the points are parsed once; it is cut so the header
+    # walk runs once too, not under each of the two broadcasts
+    windows, win_stats = cut(
+        extract_swath_windows(spark, mzml_paths), F.count(F.lit(1)).alias("rows")
+    )
+    telemetry.record("windows", rows=win_stats["rows"])
     scan_map = assign_windows(
         read_mzml_points(spark, mzml_paths, cfg.min_scan_intensity), windows
     )

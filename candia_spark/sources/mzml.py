@@ -20,10 +20,11 @@ schema):
 - malformed-spectrum guards: missing level / scan time / precursor info /
   m/z array -> skip + count (``msproc.py:119-152``)
 
-Scale: one Spark task per mzML file (``mapInPandas`` over a path list —
-files live on shared storage; a 100 TB corpus is many files, so
-parallelism = file count). Window assignment is NOT done per-point in
-Python as the reference does: the parser emits raw points and the tiny
+Scale: one Spark task per mzML file (``mapInPandas`` over a path frame
+built in the JVM, one partition per path, with no Python pass or shuffle
+ahead of the parse — files live on shared storage; a 100 TB corpus is
+many files, so parallelism = file count). Window assignment is NOT done
+per-point in Python as the reference does: the parser emits raw points and the tiny
 window table joins via the broadcast interval join
 (``operators.relational.interval_join``), keeping the hot path JVM-side.
 """
@@ -267,15 +268,25 @@ def _diagnostics_for_file(path: str) -> tuple:
     return (sample, n, n_prob, n_level, n_rt, n_prec, n_mz)
 
 
+def _path_frame(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """One ``path`` row per file, each in its own partition, built in the
+    JVM: no Python pass over pickled rows and no exchange ahead of the
+    per-file map."""
+    if not paths:
+        raise ValueError("no mzML paths given")
+    n = len(paths)
+    return spark.range(0, n, 1, n).select(
+        F.element_at(F.lit(list(paths)), (F.col("id") + 1).cast("int")).alias(
+            "path"
+        )
+    )
+
+
 def spectrum_diagnostics(spark: SparkSession, paths: list[str]) -> DataFrame:
     """F4 observability (SURVEY §2.2): distributed per-sample counts of
     processed vs malformed spectra — the ingest-quality report the
     reference logs per file (msproc.py:199-201). One task per file; the
     result is sample-count-sized."""
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        len(paths)
-    )
-
     def diag(iterator):
         import pandas as pd
 
@@ -283,17 +294,13 @@ def spectrum_diagnostics(spark: SparkSession, paths: list[str]) -> DataFrame:
             rows = [_diagnostics_for_file(p) for p in batch["path"]]
             yield pd.DataFrame(rows, columns=[f.name for f in DIAG_SCHEMA.fields])
 
-    return pdf.mapInPandas(diag, DIAG_SCHEMA)
+    return _path_frame(spark, paths).mapInPandas(diag, DIAG_SCHEMA)
 
 
 def read_mzml_points(
     spark: SparkSession, paths: list[str], min_intensity: float = 0.0
 ) -> DataFrame:
     """Distributed mzML -> long point table (one task per file)."""
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        len(paths)
-    )
-
     def parse(iterator):
         import pandas as pd
 
@@ -304,16 +311,12 @@ def read_mzml_points(
                     rows, columns=[f.name for f in POINT_SCHEMA.fields]
                 )
 
-    return pdf.mapInPandas(parse, POINT_SCHEMA)
+    return _path_frame(spark, paths).mapInPandas(parse, POINT_SCHEMA)
 
 
 def extract_swath_windows(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Distinct SWATH isolation windows across files, sorted by lower bound
     (msproc.py:524-556, 568-574)."""
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        len(paths)
-    )
-
     def extract(iterator):
         import pandas as pd
 
@@ -323,7 +326,10 @@ def extract_swath_windows(spark: SparkSession, paths: list[str]) -> DataFrame:
                 yield pd.DataFrame(wins, columns=["swath_lower", "swath_upper"])
 
     return (
-        pdf.mapInPandas(extract, WINDOW_SCHEMA).distinct().orderBy("swath_lower")
+        _path_frame(spark, paths)
+        .mapInPandas(extract, WINDOW_SCHEMA)
+        .distinct()
+        .orderBy("swath_lower")
     )
 
 

@@ -23,6 +23,7 @@ from candia_spark.pipeline import (
     select_best_models,
     time_mode_peaks,
 )
+from candia_spark.sources.mzml import extract_swath_windows
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SLICE = ["swath_lower_adjusted", "rt_window"]
@@ -112,6 +113,25 @@ def test_stages_after_the_cut_do_not_rerun_the_fleet(result):
     )
     for name in ("factors", "peaks", "best_models", "sample_modes"):
         assert not _has_fleet(result[name]), name
+
+
+def _has_header_walk(df) -> bool:
+    """True when the optimized plan holds the mzML header window pass."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return any(
+        "MapInPandas" in line and "extract(" in line for line in plan.splitlines()
+    )
+
+
+def test_header_windows_are_walked_once(spark, result):
+    """Stage 1's assignment and stage 2's adjustment both read the cut
+    window set: no plan after the cut holds the header walk, which the
+    lazy window set's plan does. The cut's row count is recorded."""
+    assert _has_header_walk(extract_swath_windows(spark, ["unread.mzML"]))
+    for name in ("scan_map", "adjusted"):
+        assert not _has_header_walk(result[name]), name
+    n_windows = REGEN.SYNTHETIC_SHAPE["n_windows"]
+    assert result["_telemetry"]["windows"] == {"rows": n_windows}
 
 
 def test_fleet_cut_is_recorded_under_the_job_group(spark, result):

@@ -69,14 +69,52 @@ def test_swath_windows(spark):
 
 def _synthetic_mzml(out_dir) -> str:
     """One sample of perfbench's seeded DIA mzML, 3 isolation windows."""
+    return _synthetic_mzmls(out_dir, 1)[0]
+
+
+def _synthetic_mzmls(out_dir, samples: int) -> list[str]:
+    """``samples`` files of perfbench's seeded DIA mzML, 3 windows each."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
         "gen_mzml", os.path.join(repo, "perfbench", "gen_mzml.py")
     )
     gen = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gen)
-    paths, _ = gen.generate(str(out_dir), 5, samples=1, n_windows=3, rt_span=30.0)
-    return paths[0]
+    paths, _ = gen.generate(
+        str(out_dir), 5, samples=samples, n_windows=3, rt_span=30.0
+    )
+    return paths
+
+
+def test_parse_runs_one_task_per_file_without_exchange(spark, tmp_path):
+    """The path frame is built in the JVM: no shuffle below the parse
+    ``MapInPandas``, one partition per path, each holding one file's
+    points and all of them."""
+    from pyspark.sql import functions as F
+
+    from candia_spark.sources.mzml import _points_for_file
+
+    paths = _synthetic_mzmls(tmp_path, 3)
+    df = read_mzml_points(spark, paths)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert any("MapInPandas" in ln and "parse(" in ln for ln in plan.splitlines())
+    assert "Exchange" not in plan
+    assert df.rdd.getNumPartitions() == len(paths)
+    per_part = (
+        df.groupBy(F.spark_partition_id().alias("part"))
+        .agg(F.countDistinct("sample").alias("samples"))
+        .collect()
+    )
+    assert len(per_part) == len(paths) and all(r.samples == 1 for r in per_part)
+    assert df.count() == sum(len(list(_points_for_file(p, 0.0))) for p in paths)
+
+
+def test_per_file_maps_refuse_an_empty_path_list(spark):
+    from candia_spark.sources.mzml import spectrum_diagnostics
+
+    for build in (read_mzml_points, extract_swath_windows, spectrum_diagnostics):
+        with pytest.raises(ValueError, match="no mzML paths"):
+            build(spark, [])
 
 
 def test_header_window_pass_matches_full_parse(tmp_path):

@@ -2,8 +2,11 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 "sf": ...}. Stderr carries one more JSON line, {"telemetry": {"q73":
-{"authority": {...}}, ...}}: the routing decisions each query's
-operators recorded (``candia_spark.telemetry``), keyed by short name.
+{"authority": {...}, "codegen": {"compiles": N}}, ...}}: the routing
+decisions each query's operators recorded (``candia_spark.telemetry``)
+and the classes Janino compiled during its runs, keyed by short name. A
+rise in compiles on a repeated plan shows a codegen-cache miss as a
+number rather than as unexplained wall time.
 
 ``--runs N`` (default 1) times every query N times and reports the
 per-query MINIMUM — the stable statistic on a box with ±20% run-to-run
@@ -70,7 +73,7 @@ def main() -> int:
     )
     cli = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from candia_spark.session import get_spark
+    from candia_spark.session import codegen_compiles, get_spark
     from candia_spark.plans.queries import QUERY_REGISTRY
 
     spark = get_spark(app_name="candia_spark_bench")
@@ -188,6 +191,7 @@ def main() -> int:
     # AnalysisException). Errors are recorded in the JSON instead.
     for name in names + extra:
         sc.setJobGroup(name, name)
+        compiles = codegen_compiles(spark)
         for _run in range(max(1, cli.runs)):
             t0 = time.perf_counter()
             try:
@@ -202,6 +206,9 @@ def main() -> int:
             recorded = telemetry.pop(name)
             if recorded:
                 telemetry_by_query[short(name)] = recorded
+        telemetry_by_query.setdefault(short(name), {})["codegen"] = {
+            "compiles": codegen_compiles(spark) - compiles
+        }
 
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])

@@ -19,6 +19,19 @@ applies scale-aware defaults everywhere:
   requirement. A session built elsewhere, such as the plain session
   ``__spark_entry__.entry`` is handed, keeps pyspark's own daemon: the
   conf is fixed once the SparkContext starts.
+- A generated-code cache that holds the program's working set
+  (``spark.sql.codegen.cache.maxEntries``). Spark's default of 100 entries
+  is smaller than the classes one corpus pass generates, so Janino
+  recompiled every plan on every pass; with the larger cache a plan shape
+  compiles once per JVM.
+- PySpark's DataFrame debugging off
+  (``spark.python.sql.dataFrameDebugging.enabled``). When on, every
+  ``F.*`` and ``Column`` call walks the Python stack and makes about six
+  extra py4j calls to record its file:line; off, error messages lose only
+  that "DataFrame context".
+
+Both are static confs, fixed when the session starts, so a session built
+elsewhere (the plain one ``__spark_entry__.entry`` is handed) gets neither.
 """
 
 from __future__ import annotations
@@ -26,6 +39,15 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Generated-code cache entries (Spark's default is 100). Distinct classes
+# compiled with an effectively unbounded cache, on 4 cores: one perfbench
+# `corpus` pass 268, `pipeline` 161, `relational` 146, and one `bench.py`
+# pass over all 131 queries at sf0.1 2,170 (warmup included). 4096 holds
+# the largest with about 1.9x headroom. An entry keeps its source (mean
+# 5.5-7.7 KB) and about 2.4 loaded classes of 2.2-2.8 KB each, so a full
+# cache is about 60 MB of a multi-GB driver.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -68,7 +90,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "candia_spark.worker_daemon")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled in this JVM so far: each is a miss of the
+    codegen cache. Read from Spark's ``CodegenMetrics``; starts no job."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType, TimestampType
 
 TABLE_NAMES = (
     "region",
@@ -40,6 +40,48 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 FANOUT_TABLES = frozenset({"documents", "embeddings"})
 
 
+# Inferring a parquet table's schema starts one Spark job (the footer
+# read); a read given the schema starts none. Each table path keeps the
+# schema last inferred for it with the key it was inferred under: the
+# status of its files and the one conf that changes how they decode
+# (TIMESTAMP(NANOS) as long on Spark <= 4.0). A rewritten table has new
+# part files, so its key changes and it is inferred again.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _file_status(path: str) -> tuple | None:
+    """(name, size, mtime_ns) of every file under ``path``; None when the
+    path is not on the local file system (it is then inferred per read)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    status = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            status.append((os.path.relpath(os.path.join(root, f), path),
+                           st.st_size, st.st_mtime_ns))
+    return tuple(sorted(status))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema at most once per
+    state of the files."""
+    status = _file_status(path)
+    if status is None:
+        return spark.read.parquet(path)
+    key = (status, spark.conf.get(_NANOS_AS_LONG, None))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def _normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to long nanoseconds regardless of Spark version.
 
@@ -67,7 +109,7 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, min_parallelism: int | None = None
 ) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = _normalize_event_ts(df)
     if name not in FANOUT_TABLES:

@@ -11,6 +11,7 @@ the bench, and eight tests to this exact divergence).
 from __future__ import annotations
 
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -88,3 +89,38 @@ def test_fanout_skipped_for_multi_file_input(spark, tmp_path):
     # and the single-file driver layout DOES fan out:
     one = load_table(spark, "/root/testdata/sf0.001", "documents", min_parallelism=4)
     assert "Exchange" in one._jdf.queryExecution().executedPlan().toString()
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"test_tables_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_of_unchanged_table_starts_no_job(spark, tmp_path):
+    spark.range(10).selectExpr("id", "id * 2 as v").write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    first = _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "lineitem"))
+    assert first >= 1  # the schema inference job
+    again = _jobs_started(spark, lambda: load_table(spark, str(tmp_path), "lineitem"))
+    assert again == 0
+    assert load_table(spark, str(tmp_path), "lineitem").columns == ["id", "v"]
+
+
+def test_rewritten_table_reads_its_new_column(spark, tmp_path):
+    path = str(tmp_path / "orders.parquet")
+    spark.range(5).selectExpr("id").write.parquet(path)
+    assert load_table(spark, str(tmp_path), "orders").columns == ["id"]
+    spark.range(5).selectExpr("id", "id + 100 as added").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = load_table(spark, str(tmp_path), "orders")
+    assert df.columns == ["id", "added"]
+    assert sorted(r.added for r in df.collect()) == [100, 101, 102, 103, 104]

@@ -11,11 +11,10 @@ This package re-expresses every stage Spark-first:
   partitioning, deterministic indexing, NN-PARAFAC, dedup, similarity).
 - ``candia_spark.functions`` — scalar/column helper functions (exact decimal
   aggregates, text analysis, fingerprints).
-- ``candia_spark.sources`` — readers/sinks (typed CSV scans, mzML stub,
-  ordered single-writer spectra sinks).
+- ``candia_spark.sources`` — readers/sinks (typed CSV scans, the mzML
+  parser, ordered single-writer spectra sinks).
 - ``candia_spark.plans`` — named end-to-end queries with DuckDB oracle SQL
   (the driver correctness surface).
-- ``candia_spark.streaming`` — Structured Streaming over event tables.
 - ``candia_spark.pipeline`` — the 10 CANDIA stages composed from operators.
 """
 

@@ -1,1 +1,1 @@
-from candia_spark.functions.numeric import dsum, davg, dround, cv_expr  # noqa: F401
+from candia_spark.functions.numeric import dsum, davg, cv_expr  # noqa: F401

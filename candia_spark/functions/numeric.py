@@ -48,10 +48,6 @@ def davg(col: Column | str, scale: int | None = None) -> Column:
     return (F.sum(c.cast(DEC)).cast("double") / F.count(c)).cast("double")
 
 
-def dround(col: Column, scale: int = 6) -> Column:
-    return F.round(col, scale).cast("double")
-
-
 def cv_expr(col: Column | str, scale: int | None = None) -> Column:
     """Coefficient of variation (population std / mean), oracle-exact.
 

@@ -67,11 +67,6 @@ def lang_id_from_distinct(distinct_tokens: Column) -> Column:
     return F.when(best["s"] > 0, best["g"]).otherwise(F.lit("und"))
 
 
-def lang_id(text_col: str = "text") -> Column:
-    """Predicted language = argmax marker hits over the text column."""
-    return lang_id_from_distinct(F.array_distinct(tokens(text_col)))
-
-
 def quality_score(text_col: str = "text") -> Column:
     """Deterministic [0,1] quality heuristic:
       0.4 * min(1, n_tokens/50)            (length)

@@ -900,56 +900,6 @@ def cluster_nearest_neighbors(
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    threshold: float = 0.9,
-    k: int = 8,
-    iters: int = 3,
-    scale: int = 1000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    clusters: DataFrame | None = None,
-) -> DataFrame:
-    """SemDeDup (Abbas et al.): embedding near-duplicates found INSIDE
-    k-means clusters only, with the larger-id member of each pair marked
-    for removal. Returns (cluster, id_a, id_b, cos, drop_id) for pairs
-    with cosine >= threshold.
-
-    The threshold test is exact: cos >= t is evaluated as dot > 0 AND
-    den * dot^2 >= num * n2_a * n2_b with t^2 = num/den taken from the
-    decimal literal, computed in decimal(38,0) — no floating-point
-    boundary AND no bigint wrap (den * dot^2 exceeds 2^63 already at
-    dim-64/scale-1000 with 4-digit thresholds; a silent wrap under
-    Spark's non-ANSI arithmetic would mark arbitrary non-duplicates for
-    deletion). Decimal(18,0) operands keep every product distinct from
-    the 38-digit cap, so the comparison is exact for any |dot|, n2 below
-    1e18 — far past any realistic dimension/scale. The kept set is
-    therefore reproducible across engines, partitionings and runs.
-    """
-    from fractions import Fraction
-
-    if not (0.0 < threshold <= 1.0):
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    t2 = Fraction(str(threshold)) ** 2
-    num, den = t2.numerator, t2.denominator
-    if den > 10**9:
-        raise ValueError(
-            f"threshold {threshold} needs a {den}-denominator rational; "
-            "use a short decimal literal (<= 4 places) so the exact "
-            "comparison stays within decimal(38,0)"
-        )
-
-    def _d18(c):
-        return c.cast("decimal(18,0)")
-
-    prs = _in_cluster_pairs(df, k, iters, scale, vec_col, id_col, clusters)
-    lhs = _d18(F.col("dot")) * _d18(F.col("dot")) * _d18(F.lit(den))
-    rhs = _d18(F.col("n2_a")) * _d18(F.col("n2_b")) * _d18(F.lit(num))
-    return prs.filter((F.col("dot") > 0) & (lhs >= rhs)).select(
-        "cluster", "id_a", "id_b", "cos", F.col("id_b").alias("drop_id")
-    )
-
-
 def kmeans_hierarchical(
     df: DataFrame,
     k1: int = 4,

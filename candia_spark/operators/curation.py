@@ -85,21 +85,6 @@ def pack_sequences(
     return out
 
 
-def idf_census(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Document-frequency census over whitespace tokens: (token, df) with
-    df = number of documents containing the token at least once. The
-    census is vocabulary-sized — orders of magnitude smaller than the
-    corpus — which is what makes it the broadcast side of every consumer.
-    """
-    return (
-        df.select(F.col(id_col), F.explode(F.array_distinct(tokens(text_col))).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
-
-
 def top_tfidf_terms(
     df: DataFrame,
     text_col: str = "text",
@@ -135,7 +120,7 @@ def top_tfidf_terms(
         # df(token) = number of documents containing it = row count per
         # token in tf (one row per distinct (doc, token)) — derived from
         # the aggregate already in the plan, so the corpus is tokenized
-        # and exploded ONCE, not a second time through idf_census
+        # and exploded ONCE, not a second time for a separate census
         census = tf.groupBy("token").agg(
             F.count(F.lit(1)).cast("bigint").alias("df")
         )
@@ -358,7 +343,8 @@ def score_percentiles(
     ``percent_rank()`` pulls 100 TB through ONE task. Here the cumulative
     sum runs over the BUCKET CENSUS (<= buckets+1 rows — the one place a
     single-partition window is harmless), and the corpus only does a map
-    (bucketing) plus a broadcast join against the tiny cumulative table.
+    (each score's bucket) plus a broadcast join against the tiny
+    cumulative table.
     Discretization uses floor of the exact score double, not decimal
     rounding: floor of identical IEEE doubles is engine-exact, where
     round-to-decimal of short-repr doubles is the known divergence
@@ -558,8 +544,7 @@ def corpus_diff(
     Scale: each side collapses to (id, digest) map-side — the full outer
     join exchanges 48-byte rows keyed by id, never text. One shuffle,
     AQE-handled; at 100 TB the practical deployment sorts/buckets both
-    snapshots by id at write time and the join becomes exchange-free
-    (operators.bucketing)."""
+    snapshots by id at write time and the join becomes exchange-free."""
     old_d = old_df.select(
         F.col(id_col),
         F.md5(F.col(text_col).cast("binary")).alias("old_digest"),
@@ -1061,105 +1046,6 @@ def dsir_select(
     )
 
 
-def dsir_reference_costs(
-    reference: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    ngram: int = 1,
-    buckets: int | None = None,
-) -> tuple[DataFrame, int, int]:
-    """Freeze :func:`dsir_select`'s model from a REFERENCE corpus
-    snapshot: returns (costs, c_toks, c_bits) where ``costs`` is the
-    (tok, tok_score) table — bits(target count) − bits(reference
-    count), absent-from-target priced 0 — and the totals are the
-    reference's own Σ n_tokens / Σ score_bits, i.e. the fixed
-    above-the-reference-mean selection threshold. This is what makes
-    DSIR STREAMABLE: batch dsir_select thresholds against the mean of
-    the batch being scored, which depends on how arrivals are split
-    into micro-batches; scoring each arrival against a frozen snapshot
-    (the standard production shape — the selection model is trained
-    once, applied to the firehose) makes every document's verdict a
-    pure function of its own row, so stream output ≡ batch output
-    row-for-row (the contamination_stream stance). ``ngram``/``buckets``
-    freeze the same hashed-n-gram feature space as
-    :func:`dsir_select` — the scorer must be handed matching values."""
-    from candia_spark.operators.materialize import cut
-
-    bits = lambda c: F.length(F.bin(c)).cast("bigint")  # noqa: E731
-    feats = _dsir_features(text_col, ngram, buckets)
-    toks = reference.select(F.explode(feats).alias("tok"))
-    src = toks.groupBy("tok").agg(bits(F.count(F.lit(1))).alias("src_bits"))
-    tgt = (
-        target.select(F.explode(feats).alias("tok"))
-        .groupBy("tok")
-        .agg(bits(F.count(F.lit(1))).alias("tgt_bits"))
-    )
-    costs, _ = cut(
-        src.join(tgt, "tok", "left").select(
-            "tok",
-            (F.coalesce("tgt_bits", F.lit(0)) - F.col("src_bits")).alias(
-                "tok_score"
-            ),
-        )
-    )
-    row = (
-        reference.select(F.explode(feats).alias("tok"))
-        .join(costs, "tok")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("tok_score").cast("bigint").alias("s"),
-        )
-        .collect()[0]
-    )
-    return costs, int(row["n"] or 0), int(row["s"] or 0)
-
-
-def dsir_score_fixed(
-    df: DataFrame,
-    costs: DataFrame,
-    c_toks: int,
-    c_bits: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram: int = 1,
-    buckets: int | None = None,
-) -> DataFrame:
-    """Score documents against a FROZEN DSIR model (the
-    :func:`dsir_reference_costs` output): same (id, n_tokens,
-    score_bits, selected) contract as :func:`dsir_select`, but the
-    selection threshold is the reference's fixed mean, and features the
-    reference never saw cost 0 (no evidence either way). Every row's
-    verdict depends only on that row + the broadcast-sized model, so
-    this is the micro-batch leg of the streaming gate.
-    ``ngram``/``buckets`` MUST match the values the model was frozen
-    with (the costs table's key lives in that feature space)."""
-    toks = df.select(
-        F.col(id_col),
-        F.explode(_dsir_features(text_col, ngram, buckets)).alias("tok"),
-    )
-    scored = (
-        toks.join(costs, "tok", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
-            F.sum(F.coalesce("tok_score", F.lit(0)))
-            .cast("bigint")
-            .alias("score_bits"),
-        )
-    )
-    ct = F.lit(int(c_toks)).cast("decimal(38,0)")
-    cb = F.lit(int(c_bits)).cast("decimal(38,0)")
-    return scored.select(
-        F.col(id_col),
-        "n_tokens",
-        "score_bits",
-        (F.col("score_bits").cast("decimal(38,0)") * ct
-         > cb * F.col("n_tokens").cast("decimal(38,0)"))
-        .cast("bigint")
-        .alias("selected"),
-    )
-
-
 def quality_classifier_weights(
     pos: DataFrame,
     neg: DataFrame,
@@ -1226,8 +1112,7 @@ def quality_classifier_score(
     (term frequency implicit in the sum), unseen features weigh 0, and
     ``keep = 1`` iff the per-feature mean clears ``threshold`` =
     (num, den): ``score_w·den > num·n_tokens``, cross-multiplied in
-    decimal(38,0) — division-free, sign-safe (weights can be negative),
-    the dsir_score_fixed device with an explicit frozen threshold.
+    decimal(38,0) — division-free, sign-safe (weights can be negative).
 
     Output one row per INPUT document: (id, n_tokens, score_w, keep);
     featureless docs (empty text, or fewer than ``ngram`` tokens) keep
@@ -1236,9 +1121,8 @@ def quality_classifier_score(
     non-empty-only contract).
 
     The verdict is a pure function of the row + the broadcast model +
-    the frozen threshold, so this operator IS the micro-batch leg of
-    its streaming twin (:func:`candia_spark.streaming.quality_stream`)
-    — stream ≡ batch row-for-row, the dsir-gate stance.
+    the frozen threshold, so any split of the input into batches gives
+    the same verdicts row-for-row.
 
     Scale shape: explode features, ONE broadcast-hash join against the
     model (explicitly broadcast — it is bounded by ``buckets`` or the
@@ -2788,27 +2672,6 @@ def _normalize_phrases(phrases: list[str]) -> list[str]:
     return sorted(norm_set)
 
 
-def blocklist_phrase_table(spark, phrases: list[str]) -> DataFrame:
-    """Build the PERSISTABLE phrase table the join engine collides
-    against (ADVICE r15: the 50k+-phrase lists the engine targets should
-    ship through the driver ONCE, not per gate call): normalized
-    distinct phrases with their word counts, stamped
-    ``{"normalized": 1}`` in field metadata (the compact_corpus_state
-    stamp discipline — the stamp travels through a parquet round-trip,
-    so :func:`blocklist_filter` can trust a reloaded table skipped no
-    normalization). Write it once per list life, pass it to every gate
-    as ``phrases_df=``.
-
-    Output: (phrase, n_words) — list-sized broadcast material."""
-    norm = _normalize_phrases(phrases)
-    return spark.createDataFrame(
-        [(p, len(p.split(" "))) for p in norm], "phrase string, n_words int"
-    ).select(
-        F.col("phrase").alias("phrase", metadata={"normalized": 1}),
-        F.col("n_words"),
-    )
-
-
 def blocklist_filter(
     df: DataFrame,
     phrases: list[str] | None = None,
@@ -2863,15 +2726,16 @@ def blocklist_filter(
       per-row surrogate) when rows can collide.
 
     Repeated gates against one big list should build the phrase table
-    ONCE (:func:`blocklist_phrase_table`, typically persisted to
-    parquet) and pass it as ``phrases_df=`` (join engine only — the
+    ONCE — (phrase, n_words) rows of the normalized distinct phrases,
+    ``phrase`` stamped ``{"normalized": 1}``, typically persisted to
+    parquet — and pass it as ``phrases_df=`` (join engine only — the
     inline engine compiles phrases into the plan, which requires the
     driver-side list): the list then never re-ships through the driver
     per call (ADVICE r15). A ``phrases_df`` whose ``phrase`` field
     carries a ``normalized`` stamp other than 1 raises (a foreign
     un-normalized table would silently miss punctuated matches);
     tables without a stamp pass — best-effort on provenance, strict on
-    detected mismatch (the compact_corpus_state doctrine)."""
+    detected mismatch."""
     if engine not in ("inline", "join"):
         raise ValueError(f"engine must be 'inline' or 'join', got {engine!r}")
     if phrases_df is not None:
@@ -2894,8 +2758,8 @@ def blocklist_filter(
             ):
                 raise ValueError(
                     "phrases_df is stamped as NOT normalized — build it "
-                    "with blocklist_phrase_table so phrase and text share "
-                    "one normalization"
+                    "from phrases normalized as the text is, so phrase "
+                    "and text share one normalization"
                 )
     elif not phrases:
         raise ValueError("phrases must be a non-empty list")

@@ -65,23 +65,6 @@ def _shingle_array(t: Column, n: int) -> Column:
     return acc
 
 
-def word_ngrams(
-    df: DataFrame, n: int = 2, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Distinct word n-gram shingles per document: (id, shingle).
-
-    Per-row ``array_distinct`` instead of a global distinct(): duplicates
-    only arise within one document, so the result is identical and the
-    full-corpus shuffle disappears (see word_ngram_hashes)."""
-    tdf = df.select(F.col(id_col), tokens_col(text_col).alias("__t"))
-    return tdf.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(_shingle_array(F.col("__t"), n))).alias(
-            "shingle"
-        ),
-    )
-
-
 def word_ngram_hashes(
     df: DataFrame, n: int = 2, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -399,18 +382,6 @@ def _jaccard_mass_stats(index: DataFrame) -> dict:
         "total": total, "top_mass_frac": frac, "skewed": skewed,
         "index_rows": index_rows,
     }
-
-
-def _jaccard_mass_is_skewed(index: DataFrame) -> bool:
-    """Standalone skew probe over an index (scale harnesses call this to
-    report the head-mass statistic next to mode timings). Records only
-    the census keys of the ``jaccard`` telemetry entry — never ``mode``/
-    ``auto`` — so the last real routing record is not overwritten."""
-    s = _jaccard_mass_stats(index)
-    telemetry.record(
-        "jaccard", top_mass_frac=s["top_mass_frac"], skewed=s["skewed"]
-    )
-    return s["skewed"]
 
 
 def ngram_jaccard_pairs(
@@ -911,151 +882,6 @@ def _band_table(
     )
 
 
-def incremental_corpus_state(
-    corpus_df: DataFrame | None = None,
-    num_hashes: int = 32,
-    bands: int = 16,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    corpus_index: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The persistable per-corpus artifacts for ROLLING incremental
-    dedup: ``(bands_df, sets_df)`` where bands_df is (corpus_id,
-    band_idx, band_hash) — the banded-minhash table new batches collide
-    against — and sets_df is (corpus_id, shingles: sorted array<bigint>)
-    — the exact-verify side. Write both to parquet once per corpus life
-    (partition/bucket bands_df by band_hash at real scale), then pass
-    them to :func:`incremental_near_dups` as ``corpus_bands`` /
-    ``corpus_sets``: each batch then pays O(batch) tokenize/hash work
-    plus joins against the STORED tables — the corpus text is never
-    re-tokenized, re-hashed or re-minhashed per batch, which is the
-    difference between per-batch cost tracking the batch and tracking
-    the corpus (measured in SCALING_r06.json incremental_dedup).
-
-    Pass ``corpus_index`` (a :func:`shingle_index`) instead of
-    ``corpus_df`` when the index already exists — the state derives from
-    it without another corpus scan."""
-    if corpus_df is None and corpus_index is None:
-        raise ValueError(
-            "incremental_corpus_state needs corpus_df or corpus_index"
-        )
-    idx = (
-        corpus_index
-        if corpus_index is not None
-        else shingle_index(corpus_df, n, text_col, id_col)
-    )
-    # Stamp the shingle/minhash geometry into the state's schema metadata
-    # (Spark field metadata survives the parquet round-trip): a later
-    # batch run with different n/num_hashes/bands would silently compare
-    # different shingle and band universes — wrong jaccard values and
-    # missed duplicates instead of an error — so incremental_near_dups
-    # asserts these match its call parameters before joining.
-    geom = {"n": n, "num_hashes": num_hashes, "bands": bands}
-    agg = _minhash_agg(idx, num_hashes, id_col)
-    bands_df = _band_table(agg, num_hashes, bands, id_col).select(
-        F.col(id_col).alias("corpus_id"),
-        "band_idx",
-        F.col("band_hash").alias("band_hash", metadata=geom),
-    )
-    sets_df = idx.groupBy(id_col).agg(
-        F.sort_array(F.collect_list("shingle")).alias("shingles")
-    ).select(
-        F.col(id_col).alias("corpus_id"),
-        F.col("shingles").alias("shingles", metadata={"n": n}),
-    )
-    return bands_df, sets_df
-
-
-def compact_corpus_state(
-    corpus_bands: DataFrame,
-    corpus_sets: DataFrame,
-    batch_df: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 16,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    batch_index: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The periodic compaction job the rolling near-dedup contract
-    defers (streaming.dedup_stream / incremental_vs_corpus_stream tails):
-    fold a processed batch back into the persisted corpus state so the
-    NEXT batch also collides against today's documents. Returns the
-    ``(bands_delta, sets_delta)`` rows to APPEND to the stored
-    :func:`incremental_corpus_state` tables — deltas, not a rewritten
-    state, because at corpus scale the state is an append-only
-    partitioned table (key each compaction's append by batch id with
-    dynamic partition overwrite, the same replay-idempotence device as
-    ``streaming.write_dedup_batch``) and rewriting terabytes of bands
-    per batch would make compaction cost track the corpus instead of
-    the batch.
-
-    Semantics: ``stored state + delta == incremental_corpus_state(
-    corpus ∪ batch)`` row-for-row (pinned in tests), under the rolling
-    ownership rule — a batch id ALREADY PRESENT in the stored state is
-    skipped entirely (the corpus owns it), so replaying a batch or
-    re-ingesting an already-censused document cannot double its rows.
-    The geometry stamp is asserted against the call parameters up front
-    (:func:`_assert_state_geometry`) and travels on the delta, so a
-    later reader of the appended table sees one consistent stamp.
-
-    Per-batch cost: batch tokenize/minhash (shared with the dedup pass
-    itself via ``batch_index``) plus one id anti-join against a
-    one-column scan of the stored sets — nothing corpus-sized is
-    re-hashed or shuffled. Callers that deduplicate before compacting
-    pass the SURVIVING batch docs as ``batch_df``."""
-    _assert_state_geometry(corpus_bands, corpus_sets, n, num_hashes, bands)
-    bands_new, sets_new = incremental_corpus_state(
-        batch_df,
-        num_hashes=num_hashes,
-        bands=bands,
-        n=n,
-        text_col=text_col,
-        id_col=id_col,
-        corpus_index=batch_index,
-    )
-    # the stored sets table is the one-row-per-doc side: its id column
-    # scans narrow (48 bytes/doc) and anti-joins both delta halves
-    owned = corpus_sets.select("corpus_id")
-    return (
-        bands_new.join(owned, "corpus_id", "left_anti"),
-        sets_new.join(owned, "corpus_id", "left_anti"),
-    )
-
-
-def _assert_state_geometry(
-    corpus_bands: DataFrame,
-    corpus_sets: DataFrame,
-    n: int,
-    num_hashes: int,
-    bands: int,
-) -> None:
-    """Fail fast when a persisted corpus state was built with a different
-    shingle/minhash geometry than the current call (advice r6 #2): the
-    stamped field metadata travels through parquet, so a reloaded state
-    still carries the n/num_hashes/bands it was built with. States from
-    other producers (no stamp) pass unchecked — the contract is
-    best-effort on provenance, strict on detected mismatch."""
-    expect = {"n": n, "num_hashes": num_hashes, "bands": bands}
-    for df, field_name, keys in (
-        (corpus_bands, "band_hash", ("n", "num_hashes", "bands")),
-        (corpus_sets, "shingles", ("n",)),
-    ):
-        for field in df.schema.fields:
-            if field.name != field_name or not field.metadata:
-                continue
-            for key in keys:
-                if key in field.metadata and int(field.metadata[key]) != expect[key]:
-                    raise ValueError(
-                        f"corpus state was built with {key}="
-                        f"{int(field.metadata[key])} but this call uses "
-                        f"{key}={expect[key]} — the two would compare "
-                        "different shingle/band universes; rebuild the "
-                        "state or match the parameters"
-                    )
-
-
 def incremental_near_dups(
     new_df: DataFrame,
     corpus_df: DataFrame,
@@ -1068,8 +894,6 @@ def incremental_near_dups(
     max_corpus_bucket: int | None = None,
     new_index: DataFrame | None = None,
     corpus_index: DataFrame | None = None,
-    corpus_bands: DataFrame | None = None,
-    corpus_sets: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicates of an INCOMING batch against an EXISTING corpus:
     (new_id, corpus_id, n_common, size_new, size_corpus, jaccard) for
@@ -1092,29 +916,15 @@ def incremental_near_dups(
     (the candidates-mode formulation of :func:`ngram_jaccard_pairs`,
     oriented: sides stay labeled new/corpus instead of canonicalized).
 
-    At 100 TB the corpus side is a materialized artifact reused across
-    batches, at one of two levels:
-
-    - ``corpus_index`` (a persisted :func:`shingle_index`): skips
-      re-tokenizing the corpus text, but still re-minhashes/re-bands the
-      index and rebuilds the set arrays per call — per-batch cost is
-      corpus-LINEAR (one index scan + aggs).
-    - ``corpus_bands`` + ``corpus_sets`` (from
-      :func:`incremental_corpus_state`, persisted): the FULL rolling
-      contract — per batch, the corpus contributes only a columnar scan
-      of the two stored tables into the candidate/verify joins (no
-      groupBy, no minhash, no per-batch corpus aggregation at all; with
-      bands_df bucket-stored by band_hash even the join shuffle of the
-      corpus side disappears, and a small batch broadcasts into it).
-      Measured (SCALING_r06.json incremental_dedup): per-batch wall
-      stays near-flat as the corpus grows 10x->50x, while the fresh path
-      grows with the corpus. Must be passed together; ``corpus_df`` may
-      then be None.
+    ``corpus_index`` (a persisted :func:`shingle_index`) skips
+    re-tokenizing the corpus text, but still re-minhashes/re-bands the
+    index and rebuilds the set arrays per call — per-batch cost is
+    corpus-LINEAR (one index scan + aggs).
 
     ``new_index`` exists for the parallel reason (a caller that already
     indexed the batch for exact dedup shares the scan).
 
-    ``max_corpus_bucket`` bounds hot buckets in that regime: a corpus
+    ``max_corpus_bucket`` bounds hot buckets on the corpus side: a corpus
     band bucket holding a giant near-dup cluster pairs EVERY colliding
     batch doc with the whole cluster, so when set, each corpus bucket
     keeps only its ``max_corpus_bucket`` min-id members as candidates —
@@ -1129,37 +939,24 @@ def incremental_near_dups(
     :func:`minhash_lsh_pairs`' star cap. Default None: exact candidate
     list (the q54 oracle certifies that form).
     """
-    if (corpus_bands is None) != (corpus_sets is None):
-        raise ValueError(
-            "corpus_bands and corpus_sets must be passed together (both "
-            "halves of incremental_corpus_state) — one without the other "
-            "would silently mix corpus generations"
-        )
     new_idx = (
         new_index
         if new_index is not None
         else shingle_index(new_df, n, text_col, id_col)
     )
     new_agg = _minhash_agg(new_idx, num_hashes, id_col)
-    if corpus_bands is not None:
-        _assert_state_geometry(corpus_bands, corpus_sets, n, num_hashes, bands)
-        corp_banded = corpus_bands.select("corpus_id", "band_idx", "band_hash")
-        corp_sets = corpus_sets.select(
-            "corpus_id", F.col("shingles").alias("__set_c")
-        )
-    else:
-        corp_idx = (
-            corpus_index
-            if corpus_index is not None
-            else shingle_index(corpus_df, n, text_col, id_col)
-        )
-        corp_agg = _minhash_agg(corp_idx, num_hashes, id_col)
-        corp_banded = _band_table(corp_agg, num_hashes, bands, id_col).select(
-            F.col(id_col).alias("corpus_id"), "band_idx", "band_hash"
-        )
-        corp_sets = corp_idx.groupBy(id_col).agg(
-            F.sort_array(F.collect_list("shingle")).alias("__set_c")
-        ).select(F.col(id_col).alias("corpus_id"), "__set_c")
+    corp_idx = (
+        corpus_index
+        if corpus_index is not None
+        else shingle_index(corpus_df, n, text_col, id_col)
+    )
+    corp_agg = _minhash_agg(corp_idx, num_hashes, id_col)
+    corp_banded = _band_table(corp_agg, num_hashes, bands, id_col).select(
+        F.col(id_col).alias("corpus_id"), "band_idx", "band_hash"
+    )
+    corp_sets = corp_idx.groupBy(id_col).agg(
+        F.sort_array(F.collect_list("shingle")).alias("__set_c")
+    ).select(F.col(id_col).alias("corpus_id"), "__set_c")
     if max_corpus_bucket is not None:
         wb = Window.partitionBy("band_idx", "band_hash").orderBy("corpus_id")
         corp_banded = (
@@ -1599,44 +1396,6 @@ def canonical_docs(
     )
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash per document over word tokens: bit j of the signature
-    is 1 iff the sum over tokens of sign(bit j of xxhash64(token)) is
-    positive. Output: (id, simhash: bigint).
-
-    Entirely built-in expressions: explode tokens, per-bit +-1 sums via
-    bitwise ops, one groupBy.
-    """
-    toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
-    h = F.xxhash64(F.col("tok"))
-    # branch-free +-1: (bit*2 - 1). The when/otherwise form generates ~3x
-    # the janino source for the same values — on a 64-column select that
-    # is a measurable compile + execute tax.
-    per_bit = toks.select(
-        F.col(id_col),
-        *[
-            (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{j}")
-            for j in range(64)
-        ],
-    )
-    sums = per_bit.groupBy(id_col).agg(
-        *[F.sum(f"b{j}").alias(f"b{j}") for j in range(64)]
-    )
-    sig = sums.select(
-        F.col(id_col),
-        sum(
-            [
-                F.shiftleft((F.col(f"b{j}") > 0).cast("bigint"), j)
-                for j in range(64)
-            ],
-            F.lit(0).cast("bigint"),
-        ).alias("simhash"),
-    )
-    return sig
-
-
 def simhash_bits_md5(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1647,12 +1406,9 @@ def simhash_bits_md5(
     ANSI engines that don't wrap on signed overflow.
 
     Bit j of a token = bit (j mod 4) of hex nibble j//4 of md5(token);
-    signature bit j = 1 iff the +-1 sum over tokens is > 0 — the same
-    aggregation contract as :func:`simhash_signatures`, which remains the
-    production default (xxhash64 on the JVM is much cheaper than md5 and a
-    bigint groups with a narrower shuffle key). This variant exists so the
-    driver's DuckDB oracle can recompute the FULL algorithm value-exactly
-    (q28); the shared aggregation logic means the gate certifies both.
+    signature bit j = 1 iff the +-1 sum over tokens is > 0. md5 costs
+    more on the JVM than xxhash64, but it lets the driver's DuckDB oracle
+    recompute the FULL algorithm value-exactly (q28).
     """
     toks = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("tok"))
     # only the first 16 hex chars (64 bits) matter; two 8-char chunks become
@@ -1669,8 +1425,8 @@ def simhash_bits_md5(
         shift = 4 * (7 - nib_in_chunk) + (j % 4)
         return F.shiftright(chunk, shift).bitwiseAND(F.lit(1))
 
-    # branch-free +-1 (see simhash_signatures: same values, ~3x less
-    # generated code than when/otherwise on a 64-column select)
+    # branch-free +-1 (same values, ~3x less generated code than
+    # when/otherwise on a 64-column select)
     per_bit = chunked.select(
         F.col(id_col),
         *[(_bit(j) * 2 - 1).alias(f"b{j}") for j in range(64)],
@@ -1830,8 +1586,7 @@ def block_census(
     first occurrence. Write to parquet once per corpus life (bucket by
     block at real scale) and hand it to :func:`remove_duplicate_blocks`
     as ``corpus_firsts``: each ingestion batch then rewrites against the
-    STORED census without ever re-splitting the corpus — the same
-    rolling-ingestion contract as :func:`incremental_corpus_state`."""
+    STORED census without ever re-splitting the corpus."""
     _, occurrences = _block_base_and_occurrences(
         df, block_words, text_col, id_col
     )
@@ -1857,9 +1612,8 @@ def compact_block_census(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Fold a processed ingestion batch into the persisted
-    :func:`block_census` — the block-dedup half of the periodic
-    compaction job (:func:`compact_corpus_state` is the near-dedup
-    half). Returns the DELTA census rows to APPEND to the stored table:
+    :func:`block_census` — the periodic compaction job of rolling block
+    dedup. Returns the DELTA census rows to APPEND to the stored table:
     the batch's census-NOVEL blocks with their batch-internal first
     occurrence. Censused blocks produce no delta row — the corpus owns
     them (the rolling ownership rule :func:`remove_duplicate_blocks`
@@ -1872,8 +1626,7 @@ def compact_block_census(
     semantics q78's oracle certifies — ownership by ingestion order —
     which is the semantics a pipeline that cannot rewrite shipped
     documents actually wants. Replay-idempotence belongs to the sink:
-    key each append by batch id with dynamic partition overwrite, as
-    with :func:`compact_corpus_state`.
+    key each append by batch id with dynamic partition overwrite.
 
     Per-batch cost: one batch split (shared shape with the rewrite pass)
     plus a LEFT ANTI join against a block-column scan of the stored
@@ -2595,38 +2348,10 @@ def gram_owner_census(
     :func:`exact_substring_dedup` as ``corpus_owners``: each ingestion
     batch then rewrites against the STORED census without ever
     re-tokenizing the corpus — the same rolling-ingestion contract as
-    :func:`block_census` / :func:`incremental_corpus_state`."""
+    :func:`block_census`."""
     occ = _gram_occurrences(df, k, text_col, id_col)
     return occ.groupBy("__g").agg(F.min(id_col).alias("owner_id")).select(
         F.col("__g").alias("gram"), "owner_id"
-    )
-
-
-def compact_gram_census(
-    corpus_owners: DataFrame,
-    batch_df: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Fold a processed ingestion batch into the persisted
-    :func:`gram_owner_census` — the exact-substring half of the
-    periodic compaction job. Returns the DELTA rows to APPEND: the
-    batch's census-NOVEL grams with their batch-internal first owner.
-    Censused grams produce no delta (the corpus owns them — rolling
-    ownership by ingestion order, the q78 stance), so stored rows are
-    never rewritten and the sink stays append-only; replay idempotence
-    belongs to the sink (key appends by batch id with dynamic partition
-    overwrite, as with :func:`compact_corpus_state`).
-
-    ``stored + delta == gram_owner_census(corpus ∪ batch)`` whenever
-    every corpus id orders before every batch id (pinned in tests);
-    under interleaved ids the compacted census encodes rolling
-    ownership, which is what a pipeline that cannot rewrite shipped
-    documents wants."""
-    batch_census = gram_owner_census(batch_df, k, text_col, id_col)
-    return batch_census.join(
-        corpus_owners.select("gram"), "gram", "left_anti"
     )
 
 
@@ -2704,9 +2429,7 @@ def exact_substring_dedup(
     stored census without re-tokenizing the corpus — censused grams are
     corpus-owned outright (every batch occurrence covered; ownership by
     ingestion order, the q78 stance), batch-novel grams use the
-    batch-internal first-owner rule, and
-    :func:`compact_gram_census` then folds the batch's novel grams back
-    into the store as append-only deltas. When every corpus id orders
+    batch-internal first-owner rule. When every corpus id orders
     before every batch id, stored + rewrite ≡ the batch slice of a full
     from-scratch run (pinned in tests). Per-batch cost tracks the
     BATCH: one batch tokenize + one keyed probe of the stored census

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     LongType,
     StringType,
@@ -114,134 +113,6 @@ def real_image_features(payload: bytes, feature_dim: int) -> np.ndarray:
     flat = decode_image(payload).reshape(-1).astype(np.float64)
     chunks = np.array_split(flat, feature_dim)
     return np.array([c.mean() if c.size else 0.0 for c in chunks])
-
-
-def resize_plumbing(
-    df: DataFrame,
-    binary_col: str = "payload",
-    id_col: str = "doc_id",
-    target_h: int = 8,
-    target_w: int = 8,
-    decoder: str = "stub",
-) -> DataFrame:
-    """Image-style resize: decode the binary payload to a grayscale
-    grid, area-average down to (target_h, target_w), and re-encode the
-    resized pixels as a binary payload.
-
-    ``decoder="stub"`` (default) reads the payload's bytes as a square
-    grid (side = floor(sqrt(n_bytes)), row-major uint8 — the
-    deterministic no-codec stand-in, same stance as ``_fake_decode``);
-    ``decoder="real"`` decodes an ACTUAL image (:func:`decode_image` —
-    uncompressed BMP / binary PNM; the R+G+B gray is scaled back to the
-    0..255 band via integer //3 so both legs emit comparable uint8
-    rasters), strict on undecodable payloads. The area-average resize,
-    batch shape, schema, and the binary-in / binary-out contract are
-    shared by both legs. ``src_side`` reports the decoded height
-    (== the square's side on the stub leg).
-
-    Output: (id, src_side, height, width, resized: binary).
-    """
-    if decoder not in ("stub", "real"):
-        raise ValueError(f"decoder must be 'stub' or 'real', got {decoder!r}")
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("src_side", LongType()),
-            StructField("height", LongType()),
-            StructField("width", LongType()),
-            StructField("resized", BinaryType()),
-        ]
-    )
-    narrowed = df.select(id_col, binary_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"ids": [], "side": [], "out": []}
-            for i, payload in zip(pdf[id_col], pdf[binary_col]):
-                raw = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if decoder == "real" and raw.size:
-                    # genuine codec leg: R+G+B gray back to the 0..255
-                    # band (integer floor-div — deterministic)
-                    img = (decode_image(raw.tobytes()) // 3).astype(
-                        np.float64
-                    )
-                    side = img.shape[0]
-                elif (side := int(np.sqrt(raw.size))) == 0:
-                    img = np.zeros((1, 1), dtype=np.float64)
-                    side = 1
-                else:
-                    # decode stub: square crop of the byte stream
-                    img = raw[: side * side].reshape(side, side).astype(np.float64)
-                # area-average resize: mean over each target cell's source
-                # box (edges by rounded proportional split — exact for
-                # integer ratios, deterministic always)
-                ys = np.linspace(0, img.shape[0], target_h + 1).round().astype(int)
-                xs = np.linspace(0, img.shape[1], target_w + 1).round().astype(int)
-                out = np.zeros((target_h, target_w), dtype=np.float64)
-                for r in range(target_h):
-                    for c in range(target_w):
-                        cell = img[ys[r] : max(ys[r + 1], ys[r] + 1),
-                                   xs[c] : max(xs[c + 1], xs[c] + 1)]
-                        out[r, c] = cell.mean()
-                rows["ids"].append(int(i))
-                rows["side"].append(side)
-                # encode stub: row-major uint8 bytes
-                rows["out"].append(out.round().clip(0, 255).astype(np.uint8).tobytes())
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(rows["ids"], dtype="int64"),
-                    "src_side": pd.Series(rows["side"], dtype="int64"),
-                    "height": pd.Series([target_h] * len(rows["ids"]), dtype="int64"),
-                    "width": pd.Series([target_w] * len(rows["ids"]), dtype="int64"),
-                    "resized": rows["out"],
-                }
-            )
-
-    return narrowed.mapInPandas(run, out_schema)
-
-
-def frame_sample_plumbing(
-    df: DataFrame,
-    binary_col: str = "payload",
-    id_col: str = "doc_id",
-    n_frames: int = 4,
-) -> DataFrame:
-    """Video-style frame sampling: one output row per sampled frame with a
-    per-frame feature stub (byte-slice digest). Real codecs would replace
-    the slicing; the fan-out shape (explode to frames) is the real part.
-
-    Output: (id, frame_idx, frame_bytes, frame_digest).
-    """
-    out_schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("frame_idx", LongType()),
-            StructField("frame_bytes", LongType()),
-            StructField("frame_digest", DoubleType()),
-        ]
-    )
-    narrowed = df.select(id_col, binary_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"ids": [], "idx": [], "nb": [], "dg": []}
-            for i, payload in zip(pdf[id_col], pdf[binary_col]):
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                for j, chunk in enumerate(np.array_split(arr, n_frames)):
-                    rows["ids"].append(int(i))
-                    rows["idx"].append(j)
-                    rows["nb"].append(int(chunk.size))
-                    rows["dg"].append(float(chunk.sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(rows["ids"], dtype="int64"),
-                    "frame_idx": pd.Series(rows["idx"], dtype="int64"),
-                    "frame_bytes": pd.Series(rows["nb"], dtype="int64"),
-                    "frame_digest": pd.Series(rows["dg"], dtype="float64"),
-                }
-            )
-
-    return narrowed.mapInPandas(run, out_schema)
 
 
 def decode_image(payload: bytes) -> np.ndarray:
@@ -334,8 +205,8 @@ def decode_image(payload: bytes) -> np.ndarray:
 
 def _grid_sums_real(payload: bytes) -> tuple[list, list]:
     """The real-codec grid stage of :func:`dhash64`: decode, then
-    area-average down to the 8x9 dHash grid with the same rounded
-    proportional boxes as :func:`resize_plumbing` — kept as integer
+    area-average down to the 8x9 dHash grid with rounded proportional
+    boxes (``linspace(0, side, n + 1).round()``) — kept as integer
     (sum, count) pairs so the bit rule's cross-multiplied mean
     comparisons stay exact."""
     img = decode_image(payload)
@@ -385,11 +256,11 @@ def dhash64(
     byte-chunk stand-in above — never crashes, any payload; ``"real"``
     decodes the payload as an ACTUAL image (:func:`decode_image` —
     pure-numpy uncompressed BMP / binary PNM) and area-averages it to
-    the 8x9 grid with :func:`resize_plumbing`'s rounded proportional
-    boxes, still as integer (sum, count) pairs so every bit stays
-    exact; undecodable payloads raise loudly (filter upstream). Both
-    legs share one bit-packing implementation, pytest-pinned against a
-    hand-computed dHash on a hand-built BMP/PPM pair.
+    the 8x9 grid with rounded proportional boxes, still as integer
+    (sum, count) pairs so every bit stays exact; undecodable payloads
+    raise loudly (filter upstream). Both legs share one bit-packing
+    implementation, pytest-pinned against a hand-computed dHash on a
+    hand-built BMP/PPM pair.
 
     Output: (id, n_bytes, h_hi, h_lo, band0..band3) — the hash packed
     as two 32-bit halves (bit j of the hash is bit j of h_hi for
@@ -576,96 +447,6 @@ def phash_near_dups(
         F.col("h_lo").alias("__loa"),
     )
     b = sig.select(
-        F.col(id_col).alias("id_b"),
-        F.col("h_hi").alias("__hib"),
-        F.col("h_lo").alias("__lob"),
-    )
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.bit_count(F.col("__hia").bitwiseXOR(F.col("__hib")))
-                + F.bit_count(F.col("__loa").bitwiseXOR(F.col("__lob")))
-            )
-            .cast("bigint")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= F.lit(int(max_hamming)))
-    )
-
-
-def incremental_phash_dups(
-    batch: DataFrame,
-    stored_signatures: DataFrame,
-    max_hamming: int = 6,
-    binary_col: str = "payload",
-    id_col: str = "doc_id",
-    max_band_df: int | None = None,
-    max_band_frac: float | None = None,
-    n_bands: int = 4,
-) -> DataFrame:
-    """Rolling-ingestion image near-dedup: the arriving batch's pHash
-    pairs against (persisted corpus signatures ∪ the batch itself) —
-    the :func:`candia_spark.operators.dedup.incremental_near_dups`
-    contract on the perceptual-hash family. Returns every verified
-    pair with AT LEAST ONE batch side (batch-vs-corpus and
-    batch-vs-batch; corpus-internal pairs were found when those images
-    arrived), (id_a, id_b, hamming), id_a < id_b — exactly the
-    batch-involving slice of a full :func:`phash_near_dups` run over
-    corpus ∪ batch (pinned in tests), while the corpus pays nothing
-    but a band-keyed probe of its STORED signature table (persist
-    :func:`dhash64` output once per corpus life; bucket by band at
-    real scale). Appending the batch's signature rows to the store
-    closes the rolling loop — signatures are pure per-row functions,
-    so compaction is a plain append, no delta logic needed.
-
-    RECALL CONTRACT: identical to :func:`phash_near_dups` — the default
-    ``n_bands=4`` guarantees a banded candidate only to Hamming 3;
-    batch-involving pairs at distance 4..``max_hamming`` surface iff a
-    band matches; ``n_bands=8`` is complete to 7 (and must match the
-    banding the batch≡full-scan equivalence is judged against).
-
-    Candidate mass tracks the BATCH: Σ over band values of
-    df_store × df_batch — the same banded-birthday shape as the full
-    scan with one side batch-sized; the two-cap knobs apply to the
-    combined band census as in :func:`phash_near_dups`."""
-    if not (0 <= max_hamming <= 64):
-        raise ValueError(f"max_hamming must be in [0, 64], got {max_hamming}")
-    from candia_spark.operators.dedup import _cap_hot_keys
-    from candia_spark.operators.materialize import cut
-
-    sig_batch, _ = cut(
-        dhash64(batch, binary_col=binary_col, id_col=id_col)
-    )
-    allsig = stored_signatures.select(sig_batch.columns).unionByName(
-        sig_batch
-    )
-
-    left = _phash_bands(allsig, id_col, n_bands)
-    left, _, _ = _cap_hot_keys(
-        left, None, "band", id_col, max_band_df, max_band_frac
-    )
-    right = _phash_bands(sig_batch, id_col, n_bands).withColumnRenamed(
-        id_col, "__bid"
-    )
-    cands = (
-        left.join(right, "band")
-        .filter(F.col(id_col) != F.col("__bid"))
-        .select(
-            F.least(id_col, "__bid").alias("id_a"),
-            F.greatest(id_col, "__bid").alias("id_b"),
-        )
-        .distinct()
-    )
-    a = allsig.select(
-        F.col(id_col).alias("id_a"),
-        F.col("h_hi").alias("__hia"),
-        F.col("h_lo").alias("__loa"),
-    )
-    b = allsig.select(
         F.col(id_col).alias("id_b"),
         F.col("h_hi").alias("__hib"),
         F.col("h_lo").alias("__lob"),

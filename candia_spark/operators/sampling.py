@@ -57,14 +57,6 @@ def sample_flag(key_col: Column | str, fraction: float, salt: str = "") -> Colum
     return F.substring(digest, 1, 4) < F.lit(sample_threshold(fraction))
 
 
-def deterministic_sample(
-    df: DataFrame, fraction: float, key_col: str, salt: str = ""
-) -> DataFrame:
-    """The rows whose :func:`sample_flag` is true — a plain filter, so
-    Catalyst pushes it into the scan like any other predicate."""
-    return df.filter(sample_flag(key_col, fraction, salt))
-
-
 def stratified_sample_counts(
     df: DataFrame,
     strata: list[str],

@@ -1843,10 +1843,9 @@ def _check_cell_balance(cells: DataFrame, max_cell_frac: float) -> None:
 
 
 def _stamped(df: DataFrame, field_name: str, geom: dict) -> DataFrame:
-    """Stamp ``geom`` into ``field_name``'s field metadata — the
-    compact_corpus_state discipline (dedup.py) applied to the IVFADC
-    index pieces: Spark field metadata survives both localCheckpoint
-    and the parquet round-trip, so a reloaded piece still carries the
+    """Stamp ``geom`` into ``field_name``'s field metadata on the IVFADC
+    index pieces: Spark field metadata survives both localCheckpoint and
+    the parquet round-trip, so a reloaded piece still carries the
     geometry it was built with and a mismatched search raises loudly
     instead of returning wrong distances (VERDICT r15 missing #6)."""
     return df.select(
@@ -1869,7 +1868,7 @@ def _assert_index_geometry(
     function of (m, codewords, scale, coarse_scale, residual-vs-raw),
     so a mismatch silently mis-ranks every query. Pieces from other
     producers (no stamp) pass unchecked — best-effort on provenance,
-    strict on detected mismatch (the _assert_state_geometry stance)."""
+    strict on detected mismatch."""
     for f in df.schema.fields:
         if f.name != field_name or not f.metadata:
             continue
@@ -2058,14 +2057,14 @@ def ivfadc_encode_batch(
     scale: int = 127,
 ) -> DataFrame:
     """Encode an arriving batch under a FROZEN residual IVFADC index —
-    the rolling-ingestion half the other four persisted-state families
-    already have (VERDICT r15 next #1): cells assign against the stored
-    centroid table (the same nprobe=1 device as the build, so rolled
-    and rebuilt assignments agree by construction), residuals subtract
+    the rolling-ingestion half of the index (VERDICT r15 next #1): cells
+    assign against the stored centroid table (the same nprobe=1 device
+    as the build, so rolled and rebuilt assignments agree by
+    construction), residuals subtract
     the stored integer cell centroids, codes come from the stored
-    codebook — NO training state changes. Append the output to the
-    persisted ``encoded_cells`` (:func:`append_ivfadc_batch`) and every
-    later search sees the batch.
+    codebook — NO training state changes. Union the output into the
+    ``encoded_cells`` a search is given and every later search sees the
+    batch.
 
     The frozen-index contract is the paper's deployment shape (Jégou et
     al. 2011 §V: train once on a sample, encode forever) — and its
@@ -2134,311 +2133,6 @@ def ivfadc_encode_batch(
         if f.name == "cw" and f.metadata and "codewords" in f.metadata:
             out_geom["codewords"] = int(f.metadata["codewords"])
     return _stamped(enc, "code", out_geom)
-
-
-def write_ivfadc_index(index: dict[str, DataFrame], path: str) -> None:
-    """Persist the stamped index pieces under ``path``:
-    ``centroids`` / ``cell_centroids`` / ``codebook`` as plain parquet
-    (k-, k-, and m*K-row broadcast material) and ``encoded_cells``
-    PARTITIONED BY (bucket, _batch_id) — the storage half of VERDICT
-    r15 missing #2: with codes laid out by coarse cell, a search that
-    probes nprobe of coarse_k cells prunes SCAN BYTES via partition
-    pruning (:func:`ivfadc_search_index` pushes ``bucket IN (...)``
-    into the scan), not just join output. ``_batch_id`` nests under
-    bucket so rolling appends (:func:`append_ivfadc_batch`) are
-    replay-idempotent via dynamic partition overwrite — the
-    write_dedup_batch device; the base build writes ``_batch_id=0``.
-
-    The ``quantized_corpus`` piece (id, qvec int8 lanes — present in
-    every :func:`ivfadc_build_index` output, optional in a hand-built
-    dict) is persisted under ``_batch_id`` partitions and rolled by
-    appends exactly like the codes, so the exact re-rank stage
-    (:func:`ivfadc_search_index` ``rerank_shortlist=``) also reads
-    stored integers — the fully-persisted path never touches the float
-    payload.
-
-    Geometry stamps ride the regular columns (``sv``/``cvec``/``cw``/
-    ``code``/``qvec`` — NEVER a partition column, whose field metadata
-    parquet drops), so a reloaded index still fails fast on a
-    mismatched search."""
-    for name in ("centroids", "cell_centroids", "codebook"):
-        index[name].write.mode("overwrite").parquet(f"{path}/{name}")
-    (
-        index["encoded_cells"]
-        .withColumn("_batch_id", F.lit(0))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "_batch_id")
-        .parquet(f"{path}/encoded_cells")
-    )
-    if "quantized_corpus" in index:
-        (
-            index["quantized_corpus"]
-            .withColumn("_batch_id", F.lit(0))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{path}/quantized_corpus")
-        )
-
-
-def read_ivfadc_index(
-    spark, path: str, id_col: str = "vec_id"
-) -> dict[str, DataFrame]:
-    """Load a :func:`write_ivfadc_index` layout. ``bucket`` comes back
-    as a PARTITION column (type-inferred int) and is cast to bigint so
-    joins and hash gates see the written type; ``_batch_id`` is
-    internal to the append protocol and dropped. Field-metadata stamps
-    on the regular columns survive the round-trip (asserted by the
-    search paths)."""
-    out = {
-        name: spark.read.parquet(f"{path}/{name}")
-        for name in ("centroids", "cell_centroids", "codebook")
-    }
-    enc = spark.read.parquet(f"{path}/encoded_cells")
-    out["encoded_cells"] = enc.select(
-        id_col, "sub", "code", F.col("bucket").cast("bigint").alias("bucket")
-    )
-    from pyspark.errors import AnalysisException
-
-    try:
-        # optional piece (pre-r16 layouts lack it); the try is
-        # filesystem-agnostic where a local isdir probe would not be —
-        # and narrowed to the missing-path error class so a CORRUPT
-        # store still raises instead of silently dropping the piece
-        out["quantized_corpus"] = spark.read.parquet(
-            f"{path}/quantized_corpus"
-        ).select(id_col, "qvec")
-    except AnalysisException:
-        pass
-    return out
-
-
-def append_ivfadc_batch(
-    batch: DataFrame,
-    batch_id: int,
-    path: str,
-    m: int = 8,
-    coarse_scale: int = 1000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = 127,
-) -> None:
-    """Roll an arriving batch into a persisted IVFADC index: encode it
-    under the stored frozen pieces (:func:`ivfadc_encode_batch`) and
-    land the codes under ``(bucket, _batch_id=batch_id)`` partitions
-    via dynamic partition overwrite — replaying a (deterministic)
-    batch replaces its own partitions byte-for-byte and touches no
-    other batch (the write_dedup_batch exactly-once device).
-
-    The rolling OWNERSHIP rule (the compact_corpus_state doctrine): an
-    id already present in the stored index under a DIFFERENT batch is
-    skipped entirely — re-ingesting an already-indexed vector cannot
-    double its (id, sub) rows, which would corrupt every ADC sum that
-    touches it. The ownership spine reads one narrow column of the
-    stored codes with the replayed batch's own partitions pruned out
-    (``_batch_id != batch_id``), so a replay still rewrites itself.
-
-    Per-batch cost: the batch encode (pure maps + one keyed shuffle of
-    batch*m rows) plus the one-column ownership scan — nothing
-    corpus-sized is re-encoded or shuffled."""
-    if int(batch_id) == 0:
-        raise ValueError(
-            "batch_id 0 is reserved for the base build "
-            "(write_ivfadc_index); appends start at 1"
-        )
-    spark = batch.sparkSession
-    idx = read_ivfadc_index(spark, path, id_col)
-    owned = (
-        spark.read.parquet(f"{path}/encoded_cells")
-        .filter(F.col("_batch_id") != int(batch_id))
-        .select(id_col)
-        .distinct()
-    )
-    fresh = batch.join(owned, id_col, "left_anti")
-    # materialized: the surviving batch feeds the encode AND (when the
-    # store carries the quantized piece) the re-rank lane append — one
-    # ownership anti-join, not one per consumer
-    from candia_spark.operators.materialize import cut
-
-    fresh, _ = cut(fresh)
-    enc = ivfadc_encode_batch(
-        fresh, idx["centroids"], idx["cell_centroids"], idx["codebook"],
-        m=m, coarse_scale=coarse_scale, vec_col=vec_col, id_col=id_col,
-        scale=scale,
-    )
-    (
-        enc.withColumn("_batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "_batch_id")
-        .parquet(f"{path}/encoded_cells")
-    )
-    # a dynamic overwrite REPLACES part files in-place; the session's
-    # shared FileStatusCache still lists the dead ones, so any reader
-    # created after a replay would FAILED_READ_FILE — invalidate the
-    # path's cached listing at commit (the REFRESH TABLE device)
-    spark.catalog.refreshByPath(f"{path}/encoded_cells")
-    if "quantized_corpus" in idx:
-        (
-            quantize_int8(
-                fresh.select(id_col, vec_col), vec_col, id_col, scale
-            )
-            .withColumn("_batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{path}/quantized_corpus")
-        )
-        spark.catalog.refreshByPath(f"{path}/quantized_corpus")
-
-
-def compact_ivfadc_index(spark, src: str, dest: str, id_col: str = "vec_id") -> None:
-    """The periodic compaction job the rolling ANN store needs (the
-    compact_corpus_state role for this family): every
-    :func:`append_ivfadc_batch` lands its own ``(bucket, _batch_id)``
-    leaf partitions, so a long-rolling index accumulates one small
-    file per (bucket, batch) — the classic small-files tax on scan
-    setup and footer reads. Compaction rewrites the whole store to
-    ``dest`` with every code under the base ``_batch_id=0`` partition,
-    repartitioned by bucket so each cell lands as one file.
-
-    ``dest`` must differ from ``src`` — compaction NEVER overwrites
-    the store it is reading (a self-overwrite races the scan); the
-    caller swaps paths (or a symlink/manifest) after the job commits,
-    the standard blue/green layout move. Searches against ``dest``
-    are row-identical to ``src`` (pytest-pinned) and the geometry
-    stamps travel with the regular columns.
-
-    After compaction the ownership spine's "exclude my own batch"
-    partition filter still works for NEW appends (they use fresh batch
-    ids; id 0 stays reserved), and replaying a pre-compaction batch id
-    against the compacted store is a no-op by the ownership rule —
-    every id is already owned by partition 0."""
-    if src.rstrip("/") == dest.rstrip("/"):
-        raise ValueError(
-            "compact_ivfadc_index must write to a DIFFERENT path — "
-            "overwriting the store being read races the scan; write to "
-            "dest and swap"
-        )
-    for name in ("centroids", "cell_centroids", "codebook"):
-        spark.read.parquet(f"{src}/{name}").write.mode("overwrite").parquet(
-            f"{dest}/{name}"
-        )
-    (
-        spark.read.parquet(f"{src}/encoded_cells")
-        .drop("_batch_id")
-        .repartition("bucket")
-        .withColumn("_batch_id", F.lit(0))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "_batch_id")
-        .parquet(f"{dest}/encoded_cells")
-    )
-    from pyspark.errors import AnalysisException
-
-    try:
-        qz = spark.read.parquet(f"{src}/quantized_corpus")
-    except AnalysisException:
-        qz = None
-    if qz is not None:
-        (
-            qz.drop("_batch_id")
-            .withColumn("_batch_id", F.lit(0))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(f"{dest}/quantized_corpus")
-        )
-    spark.catalog.refreshByPath(f"{dest}/encoded_cells")
-
-
-def ivfadc_search_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 8,
-    codewords: int = 16,
-    nprobe: int = 3,
-    coarse_scale: int = 1000,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    scale: int = 127,
-    prune_scan: bool = True,
-    broadcast_lut: bool = True,
-    rerank_shortlist: int | None = None,
-) -> DataFrame:
-    """Search a PERSISTED index with SCAN pruning — the piece that makes
-    the q127 docstring's "search touches only the probed codes"
-    literally true (VERDICT r15 missing #2): the query batch's probes
-    are computed first (a pure map over the queries against the k-row
-    centroid table), their distinct bucket union collected (at most
-    coarse_k integers — list-sized driver material, same class as a
-    census read), and pushed as a ``bucket IN (...)`` partition filter
-    into the encoded_cells scan. The physical plan then shows
-    ``PartitionFilters`` on the scan (plan-pinned) and nprobe prunes
-    BYTES READ, not just join output — at 100 TB the scan is the cost.
-
-    ``prune_scan=False`` (or a probe union covering every cell) reads
-    the whole table; results are identical either way (the broadcast
-    LUT join drops non-probed cells regardless — equivalence
-    pytest-pinned).
-
-    ``rerank_shortlist=R`` runs the full IVFADC+R stage
-    (:func:`pq_topk_rerank`) against the STORED quantized corpus —
-    the index must have been written with its ``quantized_corpus``
-    piece (every :func:`ivfadc_build_index` output has one; appends
-    roll it) — so even the exact re-rank reads persisted integers; the
-    float payload is never touched. Output switches to the re-rank
-    shape (query_id, vec_id, score, rank)."""
-    idx = read_ivfadc_index(spark, path, id_col)
-    if rerank_shortlist is not None and "quantized_corpus" not in idx:
-        raise ValueError(
-            "rerank_shortlist needs the index's quantized_corpus piece — "
-            "rebuild/rewrite the index with write_ivfadc_index on an "
-            "ivfadc_build_index output (pre-r16 layouts lack it)"
-        )
-    if prune_scan:
-        from candia_spark.operators.clustering import kmeans_probe_cells
-
-        probed = kmeans_probe_cells(
-            queries.select(query_id_col, vec_col), idx["centroids"],
-            nprobe=nprobe, scale=coarse_scale, vec_col=vec_col,
-            id_col=query_id_col,
-        ).select("cluster").distinct().collect()
-        buckets = sorted(int(r["cluster"]) for r in probed)
-        # filter on the PARTITION column BEFORE the bigint cast so the
-        # predicate reaches the scan as a partition filter
-        enc = (
-            spark.read.parquet(f"{path}/encoded_cells")
-            .filter(F.col("bucket").isin(buckets))
-            .select(
-                id_col, "sub", "code",
-                F.col("bucket").cast("bigint").alias("bucket"),
-            )
-        )
-    else:
-        enc = idx["encoded_cells"]
-    pieces = dict(
-        codebook=idx["codebook"], encoded_cells=enc,
-        centroids=idx["centroids"], cell_centroids=idx["cell_centroids"],
-    )
-    if rerank_shortlist is not None:
-        return pq_topk_rerank(
-            None, queries, k=k, shortlist=rerank_shortlist, m=m,
-            codewords=codewords, nprobe=nprobe, coarse_scale=coarse_scale,
-            vec_col=vec_col, id_col=id_col, query_id_col=query_id_col,
-            scale=scale, quantized_corpus=idx["quantized_corpus"],
-            broadcast_lut=broadcast_lut, **pieces,
-        )
-    return pq_topk_ivfadc_residual(
-        None, queries, k=k, m=m, codewords=codewords, nprobe=nprobe,
-        coarse_scale=coarse_scale, vec_col=vec_col, id_col=id_col,
-        query_id_col=query_id_col, scale=scale,
-        broadcast_lut=broadcast_lut, **pieces,
-    )
 
 
 def split_hot_cells(
@@ -2595,11 +2289,7 @@ def pq_topk_ivfadc_residual(
     join (cell centroids, coarse_k rows) on each side of the encode —
     nothing corpus-sized shuffles after encode. Search COMPUTE touches
     only the probed ~nprobe/coarse_k fraction (the LUT join drops the
-    rest); search SCAN BYTES prune to that fraction too when the codes
-    are stored bucket-partitioned and read through
-    :func:`ivfadc_search_index`, which pushes the probed-bucket union
-    into the scan as a partition filter — an in-memory or unpartitioned
-    ``encoded_cells`` still scans all codes. Pass ``centroids`` /
+    rest); search SCAN BYTES still cover all codes. Pass ``centroids`` /
     ``cell_centroids`` / ``codebook`` / ``encoded_cells`` (persisted
     from a prior build; encoded_cells = (id, sub, code, bucket)) to
     search without re-training or re-encoding. ``max_cell_frac`` arms

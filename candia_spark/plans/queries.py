@@ -1638,9 +1638,7 @@ def q36_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="sessionize (streaming-adjacent, north star)",
 )
 def q37_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30 min) via lag + running sum — the batch
-    mirror of the Structured Streaming session operator
-    (candia_spark.streaming)."""
+    """Gap-based sessionization (30 min) via lag + running sum."""
     e = _t(spark, sf_dir, "events").select(
         "user_id", F.expr("ts div 1000").alias("t")
     )
@@ -5150,8 +5148,7 @@ def q97_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     EVERY document (Σ weight per feature occurrence, bigint) and keep
     those whose per-feature mean clears the frozen 1/2 threshold by
     exact decimal cross-multiply. The scorer's verdict is a pure
-    function of row + broadcast model + threshold, so its streaming
-    twin (quality_stream) is batch-identical by construction."""
+    function of row + broadcast model + threshold."""
     from candia_spark.operators.curation import (
         quality_classifier_score,
         quality_classifier_weights,
@@ -8565,15 +8562,13 @@ def q131_rolling_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.similarity.ivfadc_build_index + ivfadc_encode_batch):
     the index trains on the BASE split only (vec_id % 5 != 4), then the
     held-out batch encodes under the FROZEN
-    centroids/cell_centroids/codebook — the fifth persisted-state
-    rolling family (VERDICT r15 next #1). The output is every encoded
-    batch row (id, sub, code, bucket), so the oracle gates the complete
-    encode-append contract: frozen assignment, frozen residuals, frozen
-    codes — not just the slice a top-k search happens to touch. The
-    storage half (partitioned append, replay idempotence, ownership
-    rule) and the search-over-rolled == search-over-rebuilt equivalence
-    are pytest-pinned (test_r16_ops); the per-batch recall-drift audit
-    is SCALING_r16's drift leg."""
+    centroids/cell_centroids/codebook (VERDICT r15 next #1). The output
+    is every encoded batch row (id, sub, code, bucket), so the oracle
+    gates the complete encode contract: frozen assignment, frozen
+    residuals, frozen codes — not just the slice a top-k search happens
+    to touch. Rolled == rebuilt is pytest-pinned (test_r15_ops grand
+    equivalence); the per-batch recall-drift audit is SCALING_r16's
+    drift leg."""
     from candia_spark.operators.similarity import (
         ivfadc_build_index,
         ivfadc_encode_batch,

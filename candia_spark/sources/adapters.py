@@ -136,75 +136,6 @@ def strip_modifications(df: DataFrame, seq_col: str = "sequence") -> DataFrame:
     )
 
 
-DOCUMENTS_JSONL_SCHEMA = (
-    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
-)
-
-
-def read_documents_jsonl(
-    spark: SparkSession, path: str, schema: str = DOCUMENTS_JSONL_SCHEMA
-) -> DataFrame:
-    """Read a JSON-Lines document corpus (the interchange format of crawled
-    text datasets: one JSON object per line, gzip-splittable per file).
-
-    The schema is EXPLICIT, never inferred: on a 100 TB corpus, schema
-    inference is a full extra pass over every byte before the first real
-    job, and a single malformed line silently widens a column to string.
-    PERMISSIVE mode routes malformed lines to ``_corrupt_record`` instead
-    of failing the batch — the same malformed-input stance as the mzML
-    reader's diagnostics (F4) — and the reader parallelizes per file
-    split like any text source.
-    """
-    if not isinstance(schema, str):
-        raise TypeError(
-            "schema must be a DDL string (e.g. 'doc_id BIGINT, text "
-            "STRING'); the corrupt-record column is appended automatically"
-        )
-    if "_corrupt_record" not in schema:
-        schema = schema + ", _corrupt_record STRING"
-    return (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-    )
-
-
-def write_documents_jsonl(df: DataFrame, path: str) -> None:
-    """Write a document corpus as JSON-Lines (one object per line, one
-    file per partition — the layout downstream tokenizer/training jobs
-    stream). Distributed writer: no driver collection.
-
-    A frame that came from :func:`read_documents_jsonl` carries the
-    reader-internal ``_corrupt_record`` diagnostic column; it is dropped
-    here (ADVICE r5) so read->write round-trips emit clean records, not
-    the parse plumbing."""
-    if "_corrupt_record" in df.columns:
-        df = df.drop("_corrupt_record")
-    df.write.mode("overwrite").json(path)
-
-
-def read_documents_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Read a document corpus stored as ORC — the columnar interchange
-    format Hive-lineage pipelines hand over (schema travels in the file
-    footer, so no inference pass and no DDL argument; predicate pushdown
-    and column pruning work exactly as for parquet). Use parquet for new
-    data; this reader exists so an existing ORC corpus needs no
-    conversion step before entering the engine."""
-    return spark.read.orc(path)
-
-
-def write_documents_orc(
-    df: DataFrame, path: str, compression: str = "zlib"
-) -> None:
-    """Write a document corpus as ORC (one file per partition,
-    distributed writer — no driver collection). ``zlib`` is ORC's
-    portable default; pass ``"snappy"`` to favor speed over size."""
-    if "_corrupt_record" in df.columns:
-        df = df.drop("_corrupt_record")
-    df.write.mode("overwrite").option("compression", compression).orc(path)
-
-
 WET_REQUIRED_HEADER = "WARC-Type"
 
 
@@ -251,26 +182,6 @@ def read_wet_records(
     header value so the truncation is detectable downstream."""
     raw = spark.read.option("lineSep", "WARC/1.0").text(path)
     return _wet_project(raw, keep_raw)
-
-
-def read_wet_records_stream(
-    spark: SparkSession,
-    path: str,
-    keep_raw: bool = False,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """The STREAMING twin of :func:`read_wet_records`: a file-stream
-    text source over a landing directory of WET files (new files picked
-    up per micro-batch — the Common Crawl firehose shape) projected
-    through the IDENTICAL expression set (shared ``_wet_project``), so
-    batch ≡ stream holds by construction, malformed routing included.
-    Stateless projection: safe under any trigger, no watermark.
-    ``max_files_per_trigger`` bounds micro-batch size (and lets tests
-    force multi-batch arrivals)."""
-    reader = spark.readStream.option("lineSep", "WARC/1.0")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return _wet_project(reader.text(path), keep_raw)
 
 
 def _wet_project(raw: DataFrame, keep_raw: bool) -> DataFrame:

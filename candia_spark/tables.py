@@ -25,7 +25,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Tables whose queries do heavy per-row expression work (tokenize /
 # shingle / hash / vector math). The driver's test parquet is ONE row

@@ -12,7 +12,7 @@ partitions): ``op`` then maps to a list of field dicts.
 
 Records made with no job group share one entry per op that later calls
 update in place (``append`` keeps only the last call), so the registry
-stays bounded in tests, scripts and streaming loops that never pop.
+stays bounded in tests, scripts and loops that never pop.
 """
 
 from __future__ import annotations

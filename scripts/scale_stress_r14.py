@@ -14,12 +14,6 @@
   falling per-vector cost; the trained codebook also must not increase
   total encode distortion vs the first-k stub (ratio reported).
 
-- ``wetingest``: the batch twin of the WET ingest chain (shared
-  _wet_project + frozen quality/langid gates + exactly-once sink) over
-  a generated WET landing dir at x10/x25/x50. Claim: record split is
-  JVM lineSep, gates are per-row maps + broadcast models — linear in
-  records, falling per-record cost.
-
 - ``psl``: load_psl wildcard expansion against a growing observed-host
   census. Claim: driver parse is constant (~file size); the grounding
   join is distinct-hosts x broadcast wildcard bases — linear in hosts.
@@ -35,7 +29,7 @@
   recall/cost trade is a measured number, not a guess.
 
 Usage: python scripts/scale_stress_r14.py [--sizes 10 25 50] [--runs 2]
-       [--only repin pqtrain wetingest psl phash8]
+       [--only repin pqtrain psl phash8]
 
 Partial ``--only`` runs MERGE into SCALING_r14.json (the r9 harness
 convention)."""
@@ -45,10 +39,8 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import subprocess
 import sys
-import tempfile
 
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 
@@ -65,7 +57,6 @@ def _mat(df):
     return df.localCheckpoint(eager=True)
 
 BASE_VECS = 2_000
-BASE_RECS = 2_000
 BASE_HOSTS = 2_000
 BASE_IMGS = 2_000
 DIM = 64
@@ -207,71 +198,6 @@ def run_pqtrain(spark, n_vecs: int, runs: int) -> dict:
     }
 
 
-def _write_wet_dir(spark, n_recs: int, path: str) -> None:
-    from candia_spark.sources.adapters import write_wet_records
-
-    text = F.concat_ws(
-        " ",
-        *[F.md5((F.col("id") + F.lit(i * 7919)).cast("string"))
-          for i in range(4)],
-        F.lit("good the of and der und das"),
-    )
-    df = spark.range(n_recs).select(
-        F.concat(F.lit("<urn:uuid:"), F.col("id").cast("string"),
-                 F.lit(">")).alias("record_id"),
-        F.concat(F.lit("http://h/"), F.col("id").cast("string")).alias(
-            "target_uri"),
-        F.lit("2020-01-01T00:00:00Z").alias("warc_date"),
-        text.alias("text"),
-    )
-    write_wet_records(df, path)
-
-
-def run_wetingest(spark, n_recs: int, runs: int) -> dict:
-    from candia_spark.operators.curation import (
-        multiclass_classifier_weights,
-        quality_classifier_weights,
-    )
-    from candia_spark.sources.adapters import read_wet_records
-    from candia_spark.streaming import write_wet_ingest_batch
-
-    tmp = tempfile.mkdtemp(prefix="ss_wet_")
-    try:
-        _write_wet_dir(spark, n_recs, os.path.join(tmp, "in"))
-        qw = _mat(quality_classifier_weights(
-            spark.createDataFrame([(1, "good good fine")],
-                                  "doc_id bigint, text string"),
-            spark.createDataFrame([(2, "bad bad good")],
-                                  "doc_id bigint, text string"),
-        ))
-        lw = _mat(multiclass_classifier_weights(
-            spark.createDataFrame(
-                [("en", "the of and good"), ("de", "der und das bad")],
-                "label string, text string",
-            )
-        ))
-        best = None
-        import time as _t
-
-        for i in range(max(1, runs)):
-            ss.reclaim()
-            t0 = _t.perf_counter()
-            write_wet_ingest_batch(
-                read_wet_records(spark, os.path.join(tmp, "in")),
-                i, os.path.join(tmp, f"out{i}"),
-                quality_weights=qw, langid_weights=lw,
-            )
-            sec = _t.perf_counter() - t0
-            best = sec if best is None else min(best, sec)
-        return {
-            "n_records": n_recs,
-            "sec": round(best, 3),
-            "us_per_record": round(best * 1e6 / n_recs, 2),
-        }
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def run_psl(spark, n_hosts: int, runs: int) -> dict:
     from candia_spark.operators.curation import load_psl
 
@@ -391,7 +317,6 @@ def run_tivf(spark, n_vecs: int, runs: int) -> dict:
 LEGS = {
     "pqtrain": (run_pqtrain, BASE_VECS),
     "tivf": (run_tivf, BASE_VECS),
-    "wetingest": (run_wetingest, BASE_RECS),
     "psl": (run_psl, BASE_HOSTS),
     "phash8": (run_phash8, BASE_IMGS),
 }

@@ -1,30 +1,21 @@
 """Round-16 scaling sections, written to SCALING_r16.json:
 
-- ``scan_pruning``: the storage half of the IVFADC story (VERDICT r15
-  missing #2) — the index persisted PARTITIONED BY bucket, then nprobe
-  swept: BYTES under the probed partitions vs total stored bytes (what
-  partition pruning actually reads) and pruned-vs-unpruned search wall.
-  The claim: scan bytes track the probed fraction, so nprobe prunes
-  I/O, not just join output.
-
 - ``rolling_drift``: the retrain signal (VERDICT r15 next #1c) — the
   index trains ONCE on the base corpus, then drifting batches roll in
-  through ``append_ivfadc_batch`` (each batch's cluster structure
-  shifted further from the training sample); after every append,
+  through ``ivfadc_encode_batch`` (each batch's cluster structure
+  shifted further from the training sample); after every batch,
   recall@10 of the FROZEN index on queries drawn from the new batch,
   vs exact truth over the rolled corpus. A falling curve is the
   measured "retrain now" instrument a deployment reads.
 
-- ``append_cost``: per-batch append wall with a CONSTANT batch against
-  a growing stored corpus — encode cost must track the batch; the
-  ownership spine is a one-column partition-pruned scan whose growth
-  is the measured (and bounded) corpus-dependent term.
-
 - ``split_cost``: the hot-cell split remedy on a planted skewed corpus
   at each size — max_cell_frac before/after and the split's wall.
 
+The ``scan_pruning`` and ``append_cost`` sections of SCALING_r16.json
+measured the persisted index store, which is no longer in the package.
+
 Usage: python scripts/scale_stress_r16.py [--sizes 10 25] [--runs 2]
-       [--only scan_pruning rolling_drift append_cost split_cost]
+       [--only rolling_drift split_cost]
 
 Partial ``--only`` runs MERGE into SCALING_r16.json (the r9 harness
 convention)."""
@@ -34,9 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
@@ -52,93 +41,6 @@ import scale_stress_r15 as r15  # noqa: E402
 BASE_VECS = 2_000
 K_TRUTH = 10
 KW = dict(m=8, codewords=16, coarse_k=16, coarse_iters=2, pq_iters=2)
-
-
-def _dir_bytes(path):
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
-
-
-def run_scan_pruning(spark, sizes, runs):
-    from candia_spark.operators.clustering import kmeans_probe_cells
-    from candia_spark.operators.similarity import (
-        ivfadc_build_index,
-        ivfadc_search_index,
-        write_ivfadc_index,
-    )
-
-    out = {"claim": (
-        "encoded_cells persisted PARTITIONED BY bucket: the probed "
-        "partitions' bytes are the bytes a pruned search reads. The "
-        "query batch is FOCUSED (two of the 32 planted clusters — the "
-        "targeted-retrieval shape partition pruning exists for): its "
-        "probed-bucket union is a proper subset, so bytes_frac tracks "
-        "the union's share and grows with nprobe toward 1.0; a "
-        "corpus-wide query batch probes every cell and prunes nothing "
-        "(measured in the first cut of this leg — kept as the "
-        "documented contrast in the claim, not a defect: pruning is a "
-        "property of the BATCH's probe union, not of nprobe alone)"
-    ), "sizes": {}}
-    for k in sizes:
-        emb = r15._mat(
-            r15._clustered_embeddings(spark, BASE_VECS * k)
-        )
-        # focused batch: clusters 0 and 1 only (cluster = vec_id % 32
-        # in the generator), thinned to a realistic query-batch size
-        qs = r15._mat(
-            emb.filter(
-                (F.col("vec_id") % 32 < 2) & (F.col("vec_id") % 7 == 0)
-            ).select(F.col("vec_id").alias("query_id"), "embedding")
-        )
-        idx = ivfadc_build_index(emb, **KW)
-        tmp = tempfile.mkdtemp(prefix=f"sp{k}_")
-        path = os.path.join(tmp, "ix")
-        write_ivfadc_index(idx, path)
-        enc_path = os.path.join(path, "encoded_cells")
-        total_bytes = _dir_bytes(enc_path)
-        per_bucket = {
-            d: _dir_bytes(os.path.join(enc_path, d))
-            for d in os.listdir(enc_path)
-            if d.startswith("bucket=")
-        }
-        points = []
-        for nprobe in (1, 2, 4, 8, 16):
-            probed = kmeans_probe_cells(
-                qs, idx["centroids"], nprobe=nprobe, id_col="query_id"
-            ).select("cluster").distinct().collect()
-            buckets = {int(r["cluster"]) for r in probed}
-            probed_bytes = sum(
-                b for d, b in per_bucket.items()
-                if int(d.split("=")[1]) in buckets
-            )
-            walls = {"pruned": [], "full": []}
-            for _ in range(runs):
-                for mode, prune in (("pruned", True), ("full", False)):
-                    t0 = time.perf_counter()
-                    ivfadc_search_index(
-                        spark, path, qs, k=K_TRUTH, nprobe=nprobe,
-                        m=KW["m"], codewords=KW["codewords"],
-                        prune_scan=prune,
-                    ).count()
-                    walls[mode].append(time.perf_counter() - t0)
-            points.append({
-                "nprobe": nprobe,
-                "n_probed_buckets": len(buckets),
-                "probed_bytes": probed_bytes,
-                "total_bytes": total_bytes,
-                "bytes_frac": round(probed_bytes / total_bytes, 4),
-                "even_frac": round(nprobe / KW["coarse_k"], 4),
-                "search_wall_pruned_s": round(min(walls["pruned"]), 3),
-                "search_wall_full_s": round(min(walls["full"]), 3),
-            })
-            print(json.dumps({"scan_pruning": k, **points[-1]}), flush=True)
-        out["sizes"][str(k)] = {
-            "n_vectors": BASE_VECS * k, "points": points,
-        }
-        shutil.rmtree(tmp)
-    return out
 
 
 def _drifted_batch(spark, n, batch_idx, lane_shift):
@@ -159,11 +61,10 @@ def _drifted_batch(spark, n, batch_idx, lane_shift):
 
 def run_rolling_drift(spark, sizes, runs, n_batches=4, shift=6.0):
     from candia_spark.operators.similarity import (
-        append_ivfadc_batch,
         cosine_topk_int8,
         ivfadc_build_index,
-        ivfadc_search_index,
-        write_ivfadc_index,
+        ivfadc_encode_batch,
+        pq_topk_ivfadc_residual,
     )
 
     out = {"claim": (
@@ -182,9 +83,12 @@ def run_rolling_drift(spark, sizes, runs, n_batches=4, shift=6.0):
         n = BASE_VECS * k
         base = r15._mat(r15._clustered_embeddings(spark, n))
         idx = ivfadc_build_index(base, **KW)
-        tmp = tempfile.mkdtemp(prefix=f"drift{k}_")
-        path = os.path.join(tmp, "ix")
-        write_ivfadc_index(idx, path)
+        frozen = dict(
+            centroids=idx["centroids"],
+            cell_centroids=idx["cell_centroids"],
+            codebook=idx["codebook"],
+        )
+        encoded = idx["encoded_cells"]
         rolled = base
         curve = []
         for b in range(1, n_batches + 1):
@@ -192,7 +96,9 @@ def run_rolling_drift(spark, sizes, runs, n_batches=4, shift=6.0):
             lane_shift = (b - 1) * shift
             batch = r15._mat(_drifted_batch(spark, n // 4, b, lane_shift))
             t0 = time.perf_counter()
-            append_ivfadc_batch(batch, b, path, m=KW["m"])
+            encoded = r15._mat(encoded.unionByName(
+                ivfadc_encode_batch(batch, **frozen, m=KW["m"])
+            ))
             wall = time.perf_counter() - t0
             rolled = r15._mat(rolled.unionByName(batch))
             qs = r15._mat(
@@ -201,56 +107,17 @@ def run_rolling_drift(spark, sizes, runs, n_batches=4, shift=6.0):
                 )
             )
             truth = cosine_topk_int8(rolled, qs, k=K_TRUTH)
-            approx = ivfadc_search_index(
-                spark, path, qs, k=K_TRUTH, nprobe=4,
-                m=KW["m"], codewords=KW["codewords"],
+            approx = pq_topk_ivfadc_residual(
+                None, qs, k=K_TRUTH, nprobe=4, encoded_cells=encoded,
+                **frozen, **KW,
             )
             rec = r15._mean_recall(spark, truth, approx)
             curve.append({
                 "batch": b, "lane_shift": lane_shift,
-                "recall_at_10": rec, "append_wall_s": round(wall, 3),
+                "recall_at_10": rec, "encode_wall_s": round(wall, 3),
             })
             print(json.dumps({"rolling_drift": k, **curve[-1]}), flush=True)
         out["sizes"][str(k)] = {"n_base_vectors": n, "curve": curve}
-        shutil.rmtree(tmp)
-    return out
-
-
-def run_append_cost(spark, sizes, runs, batch_vecs=2_000):
-    from candia_spark.operators.similarity import (
-        append_ivfadc_batch,
-        ivfadc_build_index,
-        write_ivfadc_index,
-    )
-
-    out = {"claim": (
-        "append cost tracks the BATCH: the encode is pure maps + one "
-        "batch*m keyed shuffle; the only corpus-dependent term is the "
-        "one-column ownership spine scan, measured here as the slope "
-        "of append wall vs stored-corpus size at constant batch"
-    ), "sizes": {}}
-    for k in sizes:
-        n = BASE_VECS * k
-        base = r15._mat(r15._clustered_embeddings(spark, n))
-        idx = ivfadc_build_index(base, **KW)
-        tmp = tempfile.mkdtemp(prefix=f"apc{k}_")
-        path = os.path.join(tmp, "ix")
-        write_ivfadc_index(idx, path)
-        batch = r15._mat(_drifted_batch(spark, batch_vecs, 1, 0.0))
-        walls = []
-        for r in range(runs):
-            t0 = time.perf_counter()
-            # same batch id each run: the replay path — identical work
-            append_ivfadc_batch(batch, 1, path, m=KW["m"])
-            walls.append(time.perf_counter() - t0)
-        out["sizes"][str(k)] = {
-            "n_stored_vectors": n,
-            "n_batch_vectors": batch_vecs,
-            "append_wall_s": round(min(walls), 3),
-        }
-        print(json.dumps({"append_cost": k, **out["sizes"][str(k)]}),
-              flush=True)
-        shutil.rmtree(tmp)
     return out
 
 
@@ -322,8 +189,7 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument(
         "--only", nargs="+",
-        default=["scan_pruning", "rolling_drift", "append_cost",
-                 "split_cost"],
+        default=["rolling_drift", "split_cost"],
     )
     args = ap.parse_args()
 
@@ -333,13 +199,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     sections = {
-        "scan_pruning": lambda: run_scan_pruning(
-            spark, args.sizes, args.runs
-        ),
         "rolling_drift": lambda: run_rolling_drift(
             spark, args.sizes, args.runs
         ),
-        "append_cost": lambda: run_append_cost(spark, args.sizes, args.runs),
         "split_cost": lambda: run_split_cost(spark, args.sizes, args.runs),
     }
     out_path = os.path.join(REPO, "SCALING_r16.json")

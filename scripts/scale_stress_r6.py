@@ -2,12 +2,9 @@
 SCALING_r06.json on the same tiled corpora as scale_stress.py:
 
 - ``incremental_dedup`` (q54 family): a FIXED batch checked against a
-  corpus growing 10x->50x, three regimes per size — fresh (no reuse),
-  and the full persisted-state contract (incremental_corpus_state bands +
-  sets written to parquet, batch joined against the reloaded artifacts).
-  The rolling-ingestion claim under test: with persisted state the
-  per-batch cost tracks the BATCH (near-flat curve), while the fresh
-  path re-aggregates the corpus per call (corpus-linear curve).
+  corpus growing 10x->50x; the fresh path re-aggregates the corpus per
+  call (corpus-linear curve). The persisted-state regime recorded in
+  SCALING_r06.json is no longer in the package.
 - ``tfidf_census`` (q52 family): census size (distinct terms — the tiled
   corpus renames vocabulary per tile, so it grows ~linearly) vs the
   broadcast budget, with the broadcast_census=False escape hatch timed
@@ -73,11 +70,8 @@ def build_fixed_batch(spark):
     )
 
 
-def run_incremental(spark, sf_dir: str, out_dir: str, runs: int) -> dict:
-    from candia_spark.operators.dedup import (
-        incremental_corpus_state,
-        incremental_near_dups,
-    )
+def run_incremental(spark, sf_dir: str, runs: int) -> dict:
+    from candia_spark.operators.dedup import incremental_near_dups
     from candia_spark.tables import load_table
 
     corpus = load_table(spark, sf_dir, "documents")
@@ -87,38 +81,17 @@ def run_incremental(spark, sf_dir: str, out_dir: str, runs: int) -> dict:
     out["fresh_sec"] = ss.timed(
         lambda: incremental_near_dups(batch, corpus, threshold=0.7), runs=runs
     )
-
-    # once-per-corpus-life artifact build (linear in the corpus, amortized
-    # over every batch that follows) — timed separately, runs once
-    ss.reclaim()
-    t0 = time.perf_counter()
-    bands_df, sets_df = incremental_corpus_state(corpus)
-    bands_path = os.path.join(out_dir, "state_bands")
-    sets_path = os.path.join(out_dir, "state_sets")
-    bands_df.write.mode("overwrite").parquet(bands_path)
-    sets_df.write.mode("overwrite").parquet(sets_path)
-    out["state_build_sec"] = round(time.perf_counter() - t0, 3)
-
-    rb = spark.read.parquet(bands_path)
-    rs = spark.read.parquet(sets_path)
-    out["state_batch_sec"] = ss.timed(
-        lambda: incremental_near_dups(
-            batch, None, threshold=0.7, corpus_bands=rb, corpus_sets=rs
-        ),
-        runs=runs,
-    )
-    out["n_pairs"] = incremental_near_dups(
-        batch, None, threshold=0.7, corpus_bands=rb, corpus_sets=rs
-    ).count()
+    out["n_pairs"] = incremental_near_dups(batch, corpus, threshold=0.7).count()
     return out
 
 
 def run_tfidf(spark, sf_dir: str, runs: int, with_escape_hatch: bool) -> dict:
-    from candia_spark.operators.curation import idf_census, top_tfidf_terms
+    from candia_spark.functions.text import tokens
+    from candia_spark.operators.curation import top_tfidf_terms
     from candia_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    out = {"n_terms": idf_census(docs).count()}
+    out = {"n_terms": docs.select(F.explode(tokens())).distinct().count()}
     out["broadcast_sec"] = ss.timed(lambda: top_tfidf_terms(docs), runs=runs)
     if with_escape_hatch:
         out["shuffle_join_sec"] = ss.timed(
@@ -226,7 +199,7 @@ def main() -> int:
         if "incremental" in args.only:
             ss.reclaim()
             sections["incremental"]["sizes"].append(
-                {**base, **run_incremental(spark, out_dir, out_dir, args.runs)}
+                {**base, **run_incremental(spark, out_dir, args.runs)}
             )
         if "tfidf" in args.only:
             ss.reclaim()
@@ -266,9 +239,6 @@ def main() -> int:
     if "incremental" in args.only:
         rows = sections["incremental"]["sizes"]
         if len(rows) >= 2:
-            sections["incremental"]["state_batch_sec_by_size"] = [
-                r["state_batch_sec"] for r in rows
-            ]
             sections["incremental"]["fresh_sec_by_size"] = [
                 r["fresh_sec"] for r in rows
             ]

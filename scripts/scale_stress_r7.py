@@ -122,7 +122,7 @@ def run_winnow(spark, out_dir: str, runs: int) -> dict:
     from candia_spark.operators.dedup import (
         winnow_fingerprint_pairs,
         winnow_fingerprints,
-        word_ngrams,
+        word_ngram_hashes,
     )
 
     docs = _docs(spark, out_dir).select("doc_id", "text")
@@ -131,7 +131,7 @@ def run_winnow(spark, out_dir: str, runs: int) -> dict:
         runs=runs,
     )
     n_fp = winnow_fingerprints(docs, n=3, window=4).count()
-    n_grams = word_ngrams(docs, n=3).count()
+    n_grams = word_ngram_hashes(docs, n=3).count()
     return {
         "winnow_pairs_sec": sec,
         "fp_index_rows": n_fp,

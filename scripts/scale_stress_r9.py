@@ -6,10 +6,10 @@
   compaction contract itself: folding a batch into the persisted state
   costs O(batch) — one batch split/minhash plus an anti-join against a
   narrow column scan of the stored table — while rebuilding the state
-  from scratch costs O(corpus). Both halves of the compaction job are
-  measured: ``compact_block_census`` (q80's device, against a
-  parquet-persisted block census) and ``compact_corpus_state`` (the
-  near-dedup bands/sets state). A widening rebuild/compact gap with
+  from scratch costs O(corpus). Measured: ``compact_block_census``
+  (q80's device, against a parquet-persisted block census); the
+  near-dedup state half recorded in SCALING_r09.json is no longer in
+  the package. A widening rebuild/compact gap with
   corpus size is the pass criterion; flat (or falling, as fixed
   overhead amortizes) compact seconds is the contract.
 - ``authority`` (verdict r8 next #6): integer-exact authority iteration
@@ -88,8 +88,6 @@ def run_compaction(spark, out_dir: str, runs: int) -> dict:
     from candia_spark.operators.dedup import (
         block_census,
         compact_block_census,
-        compact_corpus_state,
-        incremental_corpus_state,
     )
 
     corpus, batch = _split_corpus_batch(spark, out_dir)
@@ -113,41 +111,12 @@ def run_compaction(spark, out_dir: str, runs: int) -> dict:
         stored_census, batch, block_words=8
     ).count()
 
-    # --- near-dedup state half (compact_corpus_state) ------------------
-    state_dir = os.path.join(out_dir, "state")
-    t0 = time.perf_counter()
-    bands, sets = incremental_corpus_state(corpus)
-    bands.write.mode("overwrite").parquet(os.path.join(state_dir, "bands"))
-    sets.write.mode("overwrite").parquet(os.path.join(state_dir, "sets"))
-    rebuild_state_sec = round(time.perf_counter() - t0, 3)
-    stored_bands = spark.read.parquet(os.path.join(state_dir, "bands"))
-    stored_sets = spark.read.parquet(os.path.join(state_dir, "sets"))
-
-    # time both delta halves in one pass (they share the batch minhash
-    # subtree; ss.timed takes one DataFrame, so inline the same
-    # minima-over-runs loop with both noop writes inside the timer)
-    best = None
-    for _ in range(max(1, runs)):
-        ss.reclaim()
-        t0 = time.perf_counter()
-        b, s = compact_corpus_state(stored_bands, stored_sets, batch)
-        b.write.format("noop").mode("overwrite").save()
-        s.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    compact_state_sec = round(best, 3)
-    b, s = compact_corpus_state(stored_bands, stored_sets, batch)
-    delta_state_rows = s.count()
-
     return {
         "n_corpus_docs": n_corpus,
         "n_batch_docs": n_batch,
         "rebuild_census_sec": rebuild_census_sec,
         "compact_census_sec": compact_census_sec,
         "delta_census_rows": delta_census_rows,
-        "rebuild_state_sec": rebuild_state_sec,
-        "compact_state_sec": compact_state_sec,
-        "delta_state_doc_rows": delta_state_rows,
     }
 
 
@@ -303,18 +272,13 @@ def main() -> int:
     }
 
     if "compaction" in args.only:
-        # family warmup (harness doctrine): one tiny census + state
-        # build so the first size's minimum is not a JIT measurement
-        from candia_spark.operators.dedup import (
-            block_census,
-            incremental_corpus_state,
-        )
+        # family warmup (harness doctrine): one tiny census build so
+        # the first size's minimum is not a JIT measurement
+        from candia_spark.operators.dedup import block_census
         from candia_spark.tables import load_table
 
         warm = load_table(spark, ss.BASE_SF, "documents").limit(200)
         block_census(warm, block_words=8).count()
-        wb, wsets = incremental_corpus_state(warm)
-        wb.count(), wsets.count()
 
         for k in args.sizes:
             out_dir = os.path.join(ss.OUT_ROOT, f"tiles_r9_{k}")

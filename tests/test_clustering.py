@@ -83,31 +83,21 @@ def test_kmeans_plan_shape(spark):
 
 
 def test_semantic_dedup_finds_planted_neardups(spark):
-    from candia_spark.operators.clustering import semantic_dedup
+    from candia_spark.operators.clustering import _in_cluster_pairs
 
     base = [0.6, 0.8, 0.0, 0.0]
     near = [0.61, 0.79, 0.01, 0.0]        # cosine ~0.9999 with base
     far = [-0.8, 0.6, 0.0, 0.0]           # orthogonal-ish
     rows = [(0, base), (1, far), (10, near), (11, [0.0, 0.0, 1.0, 0.0])]
-    out = semantic_dedup(_vecs(spark, rows), threshold=0.95, k=2, iters=2).collect()
+    out = (
+        _in_cluster_pairs(_vecs(spark, rows), 2, 2, 1000, "embedding", "vec_id")
+        .filter(F.col("cos") >= 0.95)
+        .collect()
+    )
     assert len(out) == 1
     pair = out[0]
-    assert (pair["id_a"], pair["id_b"], pair["drop_id"]) == (0, 10, 10)
+    assert (pair["id_a"], pair["id_b"]) == (0, 10)
     assert pair["cos"] > 0.99
-    with pytest.raises(ValueError, match="threshold"):
-        semantic_dedup(_vecs(spark, rows), threshold=0.0)
-
-
-def test_semantic_dedup_threshold_is_integer_exact(spark):
-    """The >= threshold test must use the cross-multiplied integer form,
-    not a float boundary: a pair at exactly cos == t is kept."""
-    from candia_spark.operators.clustering import semantic_dedup
-
-    # colinear integer-friendly vectors: cos(a, b) == 1.0 exactly after
-    # quantization; threshold 1.0 keeps them only under exact arithmetic
-    rows = [(0, [0.5, 0.5]), (1, [0.25, 0.25]), (2, [-0.5, 0.5])]
-    out = semantic_dedup(_vecs(spark, rows), threshold=1.0, k=1, iters=1).collect()
-    assert [(r["id_a"], r["id_b"]) for r in out] == [(0, 1)]
 
 
 def test_in_cluster_pairs_shuffle_on_cluster_key_only(spark):
@@ -180,8 +170,8 @@ def test_semantic_dedup_with_hierarchical_clusters(spark):
     leaves passed via ``clusters`` find the same planted near-dup the flat
     path finds (the pair shares a leaf in both decompositions)."""
     from candia_spark.operators.clustering import (
+        _in_cluster_pairs,
         kmeans_hierarchical,
-        semantic_dedup,
     )
 
     base = [0.6, 0.8, 0.0, 0.0]
@@ -193,12 +183,13 @@ def test_semantic_dedup_with_hierarchical_clusters(spark):
     ]
     df = _vecs(spark, rows)
     hier = kmeans_hierarchical(df, k1=2, k2=2, iters1=2, iters2=2)
-    out = semantic_dedup(df, threshold=0.95, clusters=hier).collect()
+    out = (
+        _in_cluster_pairs(df, 8, 3, 1000, "embedding", "vec_id", clusters=hier)
+        .filter(F.col("cos") >= 0.95)
+        .collect()
+    )
     # both planted pairs: (0,10) cos~0.9999 and (11,12) cos~0.99995
-    assert sorted((r["id_a"], r["id_b"], r["drop_id"]) for r in out) == [
-        (0, 10, 10),
-        (11, 12, 12),
-    ]
+    assert sorted((r["id_a"], r["id_b"]) for r in out) == [(0, 10), (11, 12)]
 
 
 def test_kmeans_k_exceeding_corpus_degrades_gracefully(spark):

@@ -25,7 +25,7 @@ from candia_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash_signatures,
+    simhash_bits_md5,
 )
 from candia_spark.operators.similarity import (
     cosine_topk_bruteforce,
@@ -117,10 +117,13 @@ def test_minhash_lsh_precision_floor(near_dups):
 def test_simhash_near_dups_close(near_dups):
     """Planted near-dups differ in few simhash bits; unrelated docs in
     many. Compare hamming distances of pair (0,1) vs (0, last)."""
-    sigs = {r["doc_id"]: r["simhash"] for r in simhash_signatures(near_dups).collect()}
+    sigs = {
+        r["doc_id"]: int(r["sigbits"], 2)
+        for r in simhash_bits_md5(near_dups).collect()
+    }
 
     def ham(a, b):
-        return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
+        return bin(a ^ b).count("1")
 
     planted = [ham(sigs[i], sigs[i + 1]) for i in range(0, 60, 2)]
     unrelated = [ham(sigs[i], sigs[j]) for i in range(0, 20, 2) for j in range(61, 70)]
@@ -451,14 +454,10 @@ def test_auto_routing_two_term_decision(spark, monkeypatch):
     missed). Pinned here: a small flat-df corpus routes to plain (both
     terms false), a hot-head corpus routes to prefix (skew term), the
     mass term alone routes a flat corpus to prefix once the threshold is
-    crossed (exercised by shrinking the module constant), answers match
-    between modes, and the probe never overwrites the routing record."""
+    crossed (exercised by shrinking the module constant), and answers
+    match between modes."""
     import candia_spark.operators.dedup as dd
-    from candia_spark.operators.dedup import (
-        _jaccard_mass_is_skewed,
-        ngram_jaccard_pairs,
-        shingle_index,
-    )
+    from candia_spark.operators.dedup import ngram_jaccard_pairs
 
     def jaccard_record() -> dict:
         return telemetry.pop()["jaccard"]
@@ -510,13 +509,9 @@ def test_auto_routing_two_term_decision(spark, monkeypatch):
     }
     assert res == pinned and len(res) == 60 * 59 // 2
 
-    # the standalone probe classifies without touching the routing keys
-    # the pinned run recorded
-    assert _jaccard_mass_is_skewed(shingle_index(flat, n=2)) is False
     rec = jaccard_record()
     assert rec["mode"] == "plain"
     assert rec["auto"] is False
-    assert rec["skewed"] is False
 
 
 def test_prefix_filter_with_candidates_raises(spark):
@@ -701,7 +696,7 @@ def test_contamination_spans_coverage_and_heavy(spark):
 
 def test_deterministic_sample_reproducible_and_salted(spark):
     from candia_spark.operators.sampling import (
-        deterministic_sample,
+        sample_flag,
         sample_threshold,
         stratified_sample_counts,
     )
@@ -709,17 +704,21 @@ def test_deterministic_sample_reproducible_and_salted(spark):
     df = spark.range(5000).select(
         F.col("id").alias("doc_id"), (F.col("id") % 3).cast("string").alias("lang")
     )
-    s1 = {r["doc_id"] for r in deterministic_sample(df, 0.2, "doc_id").collect()}
-    s2 = {r["doc_id"] for r in deterministic_sample(df, 0.2, "doc_id").collect()}
+
+    def sampled(frac, salt=""):
+        return df.filter(sample_flag("doc_id", frac, salt))
+
+    s1 = {r["doc_id"] for r in sampled(0.2).collect()}
+    s2 = {r["doc_id"] for r in sampled(0.2).collect()}
     assert s1 == s2  # pure function of the row — no RNG state anywhere
     assert 0.15 < len(s1) / 5000 < 0.25
     other = {
         r["doc_id"]
-        for r in deterministic_sample(df, 0.2, "doc_id", salt="b").collect()
+        for r in sampled(0.2, salt="b").collect()
     }
     assert other != s1  # the salt is the re-roll knob
     # a smaller fraction of the SAME salt is a subset (threshold monotone)
-    s_small = {r["doc_id"] for r in deterministic_sample(df, 0.05, "doc_id").collect()}
+    s_small = {r["doc_id"] for r in sampled(0.05).collect()}
     assert s_small <= s1
     # audit counts agree with the materialized sample
     audit = {
@@ -732,8 +731,8 @@ def test_deterministic_sample_reproducible_and_salted(spark):
     # boundary fractions: 1.0 keeps EVERY row (the 16^4 bucket count
     # formats as a 5-char hex string that lexicographically inverts the
     # comparison — regression), 0.0 keeps none
-    assert deterministic_sample(df, 1.0, "doc_id").count() == 5000
-    assert deterministic_sample(df, 0.0, "doc_id").count() == 0
+    assert sampled(1.0).count() == 5000
+    assert sampled(0.0).count() == 0
 
 
 def test_dedup_corpus_end_to_end(spark):
@@ -900,145 +899,6 @@ def test_incremental_near_dups_persisted_index_round_trip(spark, tmp_path):
             )
         )
         assert from_disk == fresh and len(fresh) >= 2
-
-    # the FULL rolling contract: persist the banded-minhash table and the
-    # verify set arrays (incremental_corpus_state), reload both, and get
-    # identical output with corpus_df=None — per batch the corpus
-    # contributes only columnar scans of the two stored tables, no
-    # re-aggregation of any kind
-    from candia_spark.operators.dedup import incremental_corpus_state
-
-    bands_df, sets_df = incremental_corpus_state(corpus)
-    bands_path = str(tmp_path / "corpus_bands")
-    sets_path = str(tmp_path / "corpus_sets")
-    bands_df.write.mode("overwrite").parquet(bands_path)
-    sets_df.write.mode("overwrite").parquet(sets_path)
-    rb = spark.read.parquet(bands_path)
-    rs = spark.read.parquet(sets_path)
-    for rows in batches:
-        batch = spark.createDataFrame(rows, "doc_id long, text string")
-        fresh = sorted(
-            map(tuple, incremental_near_dups(batch, corpus, threshold=0.6).collect())
-        )
-        from_state = sorted(
-            map(
-                tuple,
-                incremental_near_dups(
-                    batch, None, threshold=0.6, corpus_bands=rb, corpus_sets=rs
-                ).collect(),
-            )
-        )
-        assert from_state == fresh and len(fresh) >= 2
-    # state halves must travel together
-    with pytest.raises(ValueError, match="together"):
-        incremental_near_dups(batch, None, corpus_bands=rb)
-
-    # geometry stamp (advice r6 #2): the state carries the n/num_hashes/
-    # bands it was built with THROUGH the parquet round-trip, and a call
-    # with a different geometry fails fast instead of silently comparing
-    # different shingle/band universes
-    for bad_kwargs, key in [
-        (dict(n=3), "n"),
-        (dict(num_hashes=64), "num_hashes"),
-        (dict(bands=8), "bands"),
-    ]:
-        with pytest.raises(ValueError, match=key):
-            incremental_near_dups(
-                batch, None, corpus_bands=rb, corpus_sets=rs, **bad_kwargs
-            )
-    # an UNSTAMPED state (other producer / pre-stamp artifact) still works:
-    # strip the metadata by rebuilding the columns, expect no raise
-    rb_plain = rb.select(
-        "corpus_id", "band_idx", (F.col("band_hash") + 0).alias("band_hash")
-    )
-    rs_plain = rs.select(
-        "corpus_id", F.concat(F.col("shingles")).alias("shingles")
-    )
-    unstamped = sorted(
-        map(
-            tuple,
-            incremental_near_dups(
-                batch, None, threshold=0.6,
-                corpus_bands=rb_plain, corpus_sets=rs_plain,
-            ).collect(),
-        )
-    )
-    assert unstamped == fresh
-
-
-def test_compact_corpus_state_matches_rebuild(spark, tmp_path):
-    """Verdict r7 #5 (corpus-state compaction, near-dedup half): the
-    (bands, sets) delta compact_corpus_state returns, appended to the
-    persisted incremental_corpus_state tables, equals the state rebuilt
-    from scratch over corpus+batch row-for-row; already-owned ids are
-    skipped (replay/idempotence); the geometry stamp travels on the
-    delta and mismatched geometry fails fast."""
-    from candia_spark.operators.dedup import (
-        compact_corpus_state,
-        incremental_corpus_state,
-        incremental_near_dups,
-    )
-    from candia_spark.tables import load_table
-
-    docs = (
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-        .select("doc_id", "text")
-        .limit(120)
-    )
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    batch = docs.filter(F.col("doc_id") % 2 == 1)
-    bands_path = str(tmp_path / "bands")
-    sets_path = str(tmp_path / "sets")
-    b0, s0 = incremental_corpus_state(corpus)
-    b0.write.mode("overwrite").parquet(bands_path)
-    s0.write.mode("overwrite").parquet(sets_path)
-    rb = spark.read.parquet(bands_path)
-    rs = spark.read.parquet(sets_path)
-    db, ds = compact_corpus_state(rb, rs, batch)
-    db.write.mode("append").parquet(bands_path)
-    ds.write.mode("append").parquet(sets_path)
-    cb = spark.read.parquet(bands_path)
-    cs = spark.read.parquet(sets_path)
-    fb, fs = incremental_corpus_state(docs)
-
-    def rows(df, arr=None):
-        out = []
-        for r in df.collect():
-            t = tuple(
-                tuple(v) if isinstance(v, list) else v for v in r
-            )
-            out.append(t)
-        return sorted(out)
-
-    assert rows(cb) == rows(fb)
-    assert rows(cs) == rows(fs)
-    # compacting a batch the state already owns yields an empty delta
-    db2, ds2 = compact_corpus_state(cb, cs, batch)
-    assert db2.count() == 0 and ds2.count() == 0
-    # geometry stamp: the delta (and hence the appended table) still
-    # carries the build parameters through parquet...
-    meta = [
-        f.metadata for f in cb.schema.fields if f.name == "band_hash"
-    ][0]
-    assert (meta["n"], meta["num_hashes"], meta["bands"]) == (2, 32, 16)
-    # ...and a mismatched compaction call fails fast instead of mixing
-    # shingle/band universes
-    with pytest.raises(ValueError, match="num_hashes"):
-        compact_corpus_state(cb, cs, batch, num_hashes=64)
-    # functional closure: a later batch checked against the compacted
-    # state equals the check against the rebuilt state
-    probe = spark.createDataFrame(
-        [(99_000_000 + r["doc_id"], r["text"] + " zz")
-         for r in docs.limit(3).collect()],
-        "doc_id long, text string",
-    )
-    got = sorted(map(tuple, incremental_near_dups(
-        probe, None, threshold=0.6, corpus_bands=cb, corpus_sets=cs
-    ).collect()))
-    want = sorted(map(tuple, incremental_near_dups(
-        probe, None, threshold=0.6, corpus_bands=fb, corpus_sets=fs
-    ).collect()))
-    assert got == want and len(got) >= 3
 
 
 def test_contamination_spans_rejects_bad_params(spark):
@@ -1360,14 +1220,10 @@ def test_exact_substring_dedup_vs_q55_profile_on_planted_spans(spark):
 def test_exact_substring_rolling_equals_full_rebuild(spark):
     """Rolling exact-substring dedup: rewriting a batch against the
     persisted gram_owner_census must equal the batch slice of a full
-    from-scratch run whenever corpus ids order before batch ids; and
-    stored + compact delta must equal the census of the union. The
-    closed compaction loop of the block/near-dup state families, on the
-    gram census."""
+    from-scratch run whenever corpus ids order before batch ids."""
     import random
 
     from candia_spark.operators.dedup import (
-        compact_gram_census,
         exact_substring_dedup,
         gram_owner_census,
     )
@@ -1409,17 +1265,6 @@ def test_exact_substring_rolling_equals_full_rebuild(spark):
         if r.doc_id >= 100
     }
     assert rolling == full
-
-    # compaction closes the loop: stored + delta == census(corpus ∪ batch)
-    delta = compact_gram_census(census, batch, k=k)
-    merged = {
-        (r.gram, r.owner_id) for r in census.unionByName(delta).collect()
-    }
-    rebuilt = {
-        (r.gram, r.owner_id)
-        for r in gram_owner_census(corpus.unionByName(batch), k=k).collect()
-    }
-    assert merged == rebuilt
 
 
 def test_decontaminate_fuzzy_catches_paraphrase_class(spark):

@@ -8,7 +8,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from candia_spark.operators.skew import salted_join, salted_sum
 from candia_spark.tables import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -98,39 +97,6 @@ def test_whole_stage_codegen_on_hot_path(spark):
     q.collect()  # AQE finalizes the physical plan only on execution
     # codegen'd stages render as "*(n) Operator" in the executed plan
     assert "*(1) HashAggregate" in plan_of(q)
-
-
-def test_salted_sum_matches_plain(spark):
-    l = load_table(spark, SF, "lineitem")
-    got = {
-        r["l_returnflag"]: (round(r["sum_l_quantity"], 4), r["count_l_orderkey"])
-        for r in salted_sum(
-            l,
-            ["l_returnflag"],
-            {"l_quantity": "sum", "l_orderkey": "count"},
-            buckets=8,
-            salt_from=["l_orderkey", "l_linenumber"],
-        ).collect()
-    }
-    want = {
-        r["l_returnflag"]: (round(r["s"], 4), r["c"])
-        for r in l.groupBy("l_returnflag")
-        .agg(F.sum("l_quantity").alias("s"), F.count("l_orderkey").alias("c"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_salted_join_matches_plain(spark):
-    l = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    o = load_table(spark, SF, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderstatus"
-    )
-    plain = l.join(o, "l_orderkey").count()
-    salted = salted_join(
-        l, o, on=["l_orderkey"], buckets=4, salt_from=["l_orderkey", "l_quantity"]
-    ).count()
-    assert plain == salted
 
 
 def test_q41_fragment_ions_plan_is_jvm_only(spark):
@@ -301,48 +267,6 @@ def test_q46_sampling_is_single_agg_pass(spark):
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Join" not in plan
 
-
-def test_incremental_state_path_has_no_corpus_aggregation(spark, tmp_path):
-    """The rolling-ingestion contract, pinned in the PLAN (round 6): with
-    PERSISTED corpus_bands/corpus_sets (parquet, as the artifact contract
-    prescribes), a batch's incremental_near_dups plan aggregates ONLY the
-    batch side — the stored corpus tables enter as plain parquet scans
-    into the candidate/verify joins. The fresh path re-aggregates the
-    corpus (minhash + set-collect on both sides); a regression that
-    sneaks a per-batch corpus re-aggregation back in raises the state
-    path's aggregate count back toward the fresh path's."""
-    import re
-
-    from candia_spark.operators.dedup import (
-        incremental_corpus_state,
-        incremental_near_dups,
-    )
-
-    corpus = load_table(spark, SF, "documents").select("doc_id", "text")
-    batch = spark.createDataFrame(
-        [(900001, "alpha beta gamma delta"), (900002, "zeta eta theta iota")],
-        "doc_id long, text string",
-    )
-    b, s = incremental_corpus_state(corpus)
-    b.write.mode("overwrite").parquet(str(tmp_path / "bands"))
-    s.write.mode("overwrite").parquet(str(tmp_path / "sets"))
-    bands = spark.read.parquet(str(tmp_path / "bands"))
-    sets_ = spark.read.parquet(str(tmp_path / "sets"))
-
-    def agg_count(df):
-        # count distinct aggregate operators (HashAggregate/ObjectHashAggregate/
-        # SortAggregate), each appearing as partial+final pairs
-        return len(re.findall(r"(?:ObjectHash|Sort|Hash)Aggregate", plan_of(df)))
-
-    fresh = incremental_near_dups(batch, corpus, threshold=0.5)
-    state = incremental_near_dups(
-        batch, None, threshold=0.5, corpus_bands=bands, corpus_sets=sets_
-    )
-    assert agg_count(state) < agg_count(fresh)
-    # batch side only: minhash agg + set-collect agg + candidate-pair
-    # distinct, each partial+final => 6 aggregate nodes ceiling; anything
-    # above means per-batch corpus re-aggregation crept back in
-    assert agg_count(state) <= 6
 
 def test_q96_dsir_bigram_plan_stays_jvm_side(spark):
     """The hashed-bigram DSIR chain (q96) must plan with zero Python

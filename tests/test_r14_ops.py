@@ -442,11 +442,7 @@ def test_phash_banding_recall_contract_distance5(spark):
     # cells, bit(r,c) = cell(r,c) > cell(r,c+1); flipping cell (r,0)
     # flips exactly bit (r,0), so rows {0,1,2,4,6} put >=1 flip in each
     # 2-row 16-bit band while leaving rows 3/5/7's 8-bit bands intact.
-    from candia_spark.operators.multimodal import (
-        dhash64,
-        incremental_phash_dups,
-        phash_near_dups,
-    )
+    from candia_spark.operators.multimodal import phash_near_dups
 
     base = bytes(100 if c % 2 == 0 else 50 for _ in range(8) for c in range(9))
     mod = bytearray(base)
@@ -461,12 +457,6 @@ def test_phash_banding_recall_contract_distance5(spark):
         (1, 2, 5)
     ]
     assert phash_near_dups(df, max_hamming=6, n_bands=4).collect() == []
-
-    store = dhash64(df.filter("doc_id = 1"))
-    batch = df.filter("doc_id = 2")
-    inc8 = incremental_phash_dups(batch, store, n_bands=8).collect()
-    assert [(r["id_a"], r["id_b"], r["hamming"]) for r in inc8] == [(1, 2, 5)]
-    assert incremental_phash_dups(batch, store, n_bands=4).collect() == []
     with pytest.raises(ValueError, match="n_bands"):
         phash_near_dups(df, n_bands=5).collect()
 

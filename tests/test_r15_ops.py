@@ -98,56 +98,6 @@ def test_wet_lf_only_file_trims_terminator_and_keeps_payload_newlines(
         assert got[key]["content_length"] == len(text.encode()), rid
 
 
-# --- WET ingest gates key on per-row surrogates (r14 ADVICE #5) --------------
-
-
-def test_wet_ingest_batch_duplicate_record_ids_gate_per_row(spark, tmp_path):
-    # two records SHARE a record_id but differ in text: each row must
-    # get the verdict of ITS OWN text, not a merged-census verdict.
-    from candia_spark.operators.curation import (
-        multiclass_classifier_weights,
-        quality_classifier_weights,
-    )
-    from candia_spark.streaming import write_wet_ingest_batch
-
-    batch = spark.createDataFrame(
-        [
-            ("<urn:uuid:dup>", "http://h/1", "2020-01-01T00:00:00Z", 20,
-             "good good fine the of", False),
-            ("<urn:uuid:dup>", "http://h/2", "2020-01-01T00:00:00Z", 19,
-             "bad bad bad der und", False),
-        ],
-        "record_id string, target_uri string, warc_date string, "
-        "content_length bigint, text string, _malformed boolean",
-    )
-    pos = spark.createDataFrame(
-        [(1, "good good fine")], "doc_id bigint, text string"
-    )
-    neg = spark.createDataFrame(
-        [(2, "bad bad good")], "doc_id bigint, text string"
-    )
-    qw = quality_classifier_weights(pos, neg)
-    lw = multiclass_classifier_weights(
-        spark.createDataFrame(
-            [("en", "the of and good fine"), ("de", "der und das bad")],
-            "label string, text string",
-        )
-    )
-    out_path = str(tmp_path / "dup_out")
-    write_wet_ingest_batch(
-        batch, 0, out_path, quality_weights=qw, langid_weights=lw,
-        threshold=(1, 2),
-    )
-    rows = spark.read.parquet(out_path).collect()
-    assert len(rows) == 2  # both rows kept, no conflation into one
-    by_uri = {r["target_uri"]: r for r in rows}
-    # the good-English row and the bad-German row must disagree on both
-    # gates — a merged census would give them one shared verdict
-    assert by_uri["http://h/1"]["predicted_label"] == "en"
-    assert by_uri["http://h/2"]["predicted_label"] == "de"
-    assert by_uri["http://h/1"]["keep"] != by_uri["http://h/2"]["keep"]
-
-
 # --- trained IVFADC: cells follow the PASSED centroid table (ADVICE #1) ------
 
 
@@ -552,42 +502,28 @@ def _rows_sorted(df):
 
 @pytest.mark.slow
 def test_rolling_ingestion_grand_equivalence(spark, tmp_path):
-    """THE cross-family rolling test: three WET batches arrive through
-    the streaming gate, and ALL FIVE persisted corpus-state families
-    (near-dup bands+sets, block census, gram census, phash signatures,
-    and — r16 — the IVFADC ANN index) roll forward batch by batch —
-    then every rolled state must equal its from-scratch rebuild over
-    the concatenated corpus, and the union of incremental near-dup
-    pair outputs must equal the full scan. Per-family tests pin each
-    contract alone; THIS test catches cross-family state-contract
-    drift (id ordering, append discipline, geometry stamps) that only
-    shows when one ingestion loop drives them all."""
-    from candia_spark.operators.curation import (
-        multiclass_classifier_weights,
-        quality_classifier_weights,
-    )
+    """THE cross-family rolling test: three WET batches arrive, and the
+    rolling families roll forward batch by batch — near-dups checked at
+    arrival against the corpus so far, the block census compacted, the
+    phash signature store appended, and the IVFADC ANN index encoding
+    each batch under its frozen pieces — then every rolled state must
+    equal its from-scratch rebuild over the concatenated corpus.
+    Per-family tests pin each contract alone; THIS test catches
+    cross-family drift (id ordering, append discipline, geometry stamps)
+    that only shows when one ingestion loop drives them all."""
     from candia_spark.operators.dedup import (
         block_census,
         compact_block_census,
-        compact_corpus_state,
-        compact_gram_census,
-        gram_owner_census,
-        incremental_corpus_state,
         incremental_near_dups,
     )
-    from candia_spark.operators.multimodal import (
-        dhash64,
-        incremental_phash_dups,
-        phash_near_dups,
-    )
+    from candia_spark.operators.multimodal import dhash64
     from candia_spark.sources.adapters import read_wet_records
-    from candia_spark.streaming import wet_ingest_stream
 
     # --- three WET batches with planted cross-batch structure: batch 1
-    # re-ingests a batch-0 text verbatim (near-dup + block + gram dup),
-    # batch 2 shares an 8-word block with batch 0, and payload bytes
-    # repeat across batches (phash dup). Ids are batch-ordered
-    # (b*1000 + j) — the rolling-ownership contract.
+    # re-ingests a batch-0 text verbatim (near-dup + block dup), batch 2
+    # shares an 8-word block with batch 0, and payload bytes repeat
+    # across batches. Ids are batch-ordered (b*1000 + j) — the
+    # rolling-ownership contract.
     texts = {
         0: [
             "alpha beta gamma delta epsilon zeta eta theta iota kappa",
@@ -621,30 +557,6 @@ def test_rolling_ingestion_grand_equivalence(spark, tmp_path):
             "".join(rec(b * 1000 + j, t) for j, t in enumerate(ts))
         )
 
-    # --- the streaming gate drives ingestion (one file per trigger)
-    pos = spark.createDataFrame(
-        [(1, "alpha beta gamma")], "doc_id bigint, text string"
-    )
-    neg = spark.createDataFrame(
-        [(2, "noise noise alpha")], "doc_id bigint, text string"
-    )
-    qw = quality_classifier_weights(pos, neg)
-    lw = multiclass_classifier_weights(
-        spark.createDataFrame(
-            [("en", "the quick brown fox"), ("xx", "zz yy ww")],
-            "label string, text string",
-        )
-    )
-    out_path = str(tmp_path / "gate_out")
-    wet_ingest_stream(
-        spark, str(in_dir), out_path, str(tmp_path / "ckpt"),
-        quality_weights=qw, langid_weights=lw, threshold=(0, 1),
-        max_files_per_trigger=1,
-    )
-    gated = spark.read.parquet(out_path)
-    assert gated.select("_batch_id").distinct().count() == 3
-    assert gated.count() == 7  # every record gated, none dropped
-
     def batch_docs(b):
         df = read_wet_records(spark, str(in_dir / f"{b}.wet"))
         return df.select(
@@ -658,47 +570,17 @@ def test_rolling_ingestion_grand_equivalence(spark, tmp_path):
     b0, b1, b2 = batch_docs(0), batch_docs(1), batch_docs(2)
     alldocs = b0.unionByName(b1).unionByName(b2)
 
-    # --- family 1: near-dup bands+sets state
-    bands_p, sets_p = str(tmp_path / "bands"), str(tmp_path / "sets")
-    bb, ss = incremental_corpus_state(b0)
-    bb.write.mode("overwrite").parquet(bands_p)
-    ss.write.mode("overwrite").parquet(sets_p)
+    # --- family 1: near-dups at arrival against the corpus so far
+    corpus = b0
     cross_hits = []
     for nb in (b1, b2):
-        cb = spark.read.parquet(bands_p)
-        cs = spark.read.parquet(sets_p)
         cross_hits += _rows_sorted(
-            incremental_near_dups(
-                nb, None, corpus_bands=cb, corpus_sets=cs
-            ).select("new_id", "corpus_id")
+            incremental_near_dups(nb, corpus).select("new_id", "corpus_id")
         )
-        db, ds = compact_corpus_state(cb, cs, nb)
-        db.write.mode("append").parquet(bands_p)
-        ds.write.mode("append").parquet(sets_p)
-    fb, fs = incremental_corpus_state(alldocs)
-    assert _rows_sorted(spark.read.parquet(bands_p)) == _rows_sorted(fb)
-    assert _rows_sorted(spark.read.parquet(sets_p)) == _rows_sorted(fs)
+        corpus = corpus.unionByName(nb)
     # the verbatim batch-1 re-ingest of a batch-0 text was caught at
-    # arrival time against the rolled state
+    # arrival time
     assert (1000, 0) in cross_hits
-    # functional closure: a LATER probe against the rolled state equals
-    # the probe against the from-scratch state
-    probe = spark.createDataFrame(
-        [(9000, texts[0][1])], "doc_id bigint, text string"
-    )
-    got = _rows_sorted(
-        incremental_near_dups(
-            probe, None,
-            corpus_bands=spark.read.parquet(bands_p),
-            corpus_sets=spark.read.parquet(sets_p),
-        ).select("new_id", "corpus_id", "jaccard")
-    )
-    want = _rows_sorted(
-        incremental_near_dups(
-            probe, None, corpus_bands=fb, corpus_sets=fs
-        ).select("new_id", "corpus_id", "jaccard")
-    )
-    assert got == want and (9000, 1, 1.0) in got
 
     # --- family 2: block census
     blocks_p = str(tmp_path / "blocks")
@@ -712,55 +594,24 @@ def test_rolling_ingestion_grand_equivalence(spark, tmp_path):
         block_census(alldocs, block_words=4)
     )
 
-    # --- family 3: gram census
-    grams_p = str(tmp_path / "grams")
-    gram_owner_census(b0, k=4).write.mode("overwrite").parquet(grams_p)
-    for nb in (b1, b2):
-        stored = spark.read.parquet(grams_p)
-        compact_gram_census(stored, nb, k=4).write.mode("append").parquet(
-            grams_p
-        )
-    assert _rows_sorted(spark.read.parquet(grams_p)) == _rows_sorted(
-        gram_owner_census(alldocs, k=4)
-    )
-
-    # --- family 4: phash signature store (append-only by contract)
+    # --- family 3: phash signature store (append-only by contract)
     sigs_p = str(tmp_path / "sigs")
     dhash64(b0).write.mode("overwrite").parquet(sigs_p)
-    ph_pairs = _rows_sorted(
-        phash_near_dups(b0, max_hamming=7, n_bands=8).select(
-            "id_a", "id_b"
-        )
-    )
     for nb in (b1, b2):
-        store = spark.read.parquet(sigs_p)
-        ph_pairs += _rows_sorted(
-            incremental_phash_dups(
-                nb, store, max_hamming=7, n_bands=8
-            ).select("id_a", "id_b")
-        )
         dhash64(nb).write.mode("append").parquet(sigs_p)
     assert _rows_sorted(spark.read.parquet(sigs_p)) == _rows_sorted(
         dhash64(alldocs)
     )
-    assert sorted(ph_pairs) == _rows_sorted(
-        phash_near_dups(alldocs, max_hamming=7, n_bands=8).select(
-            "id_a", "id_b"
-        )
-    )
 
-    # --- family 5 (r16): the rolling IVFADC ANN index — the same
-    # ingestion loop trains on batch 0 and rolls batches 1 and 2 into
-    # the partitioned store under the FROZEN pieces; the stored codes
-    # must equal the from-scratch frozen re-encode of the concatenated
-    # corpus. Embeddings derive in-plan from the text (md5 nibble
-    # lanes), so the leg rides the identical WET documents.
+    # --- family 4 (r16): the rolling IVFADC ANN index — the same
+    # ingestion loop trains on batch 0 and encodes batches 1 and 2
+    # under the FROZEN pieces; the rolled codes must equal the
+    # from-scratch frozen re-encode of the concatenated corpus.
+    # Embeddings derive in-plan from the text (md5 nibble lanes), so
+    # the leg rides the identical WET documents.
     from candia_spark.operators.similarity import (
-        append_ivfadc_batch,
         ivfadc_build_index,
         ivfadc_encode_batch,
-        read_ivfadc_index,
-        write_ivfadc_index,
     )
 
     def embed(df):
@@ -780,20 +631,16 @@ def test_rolling_ingestion_grand_equivalence(spark, tmp_path):
         )
 
     ann_kw = dict(m=2, codewords=4, coarse_k=2, coarse_iters=2, pq_iters=2)
-    ix_path = str(tmp_path / "ann_ix")
     idx = ivfadc_build_index(embed(b0), **ann_kw)
-    write_ivfadc_index(idx, ix_path)
-    for bid, nb in ((1, b1), (2, b2)):
-        append_ivfadc_batch(embed(nb), bid, ix_path, m=ann_kw["m"])
-    loaded = read_ivfadc_index(spark, ix_path)
-    rebuilt = ivfadc_encode_batch(
-        embed(alldocs), idx["centroids"], idx["cell_centroids"],
-        idx["codebook"], m=ann_kw["m"],
-    )
-    assert _rows_sorted(loaded["encoded_cells"]) == _rows_sorted(rebuilt)
-    # the reloaded pieces still carry their geometry stamp
+    frozen = (idx["centroids"], idx["cell_centroids"], idx["codebook"])
+    rolled = _rows_sorted(idx["encoded_cells"])
+    for nb in (b1, b2):
+        rolled += _rows_sorted(ivfadc_encode_batch(embed(nb), *frozen, m=ann_kw["m"]))
+    rebuilt = ivfadc_encode_batch(embed(alldocs), *frozen, m=ann_kw["m"])
+    assert sorted(rolled) == _rows_sorted(rebuilt)
+    # the pieces carry their geometry stamp
     cw_meta = next(
-        f.metadata for f in loaded["codebook"].schema.fields if f.name == "cw"
+        f.metadata for f in idx["codebook"].schema.fields if f.name == "cw"
     )
     assert cw_meta["m"] == ann_kw["m"] and cw_meta["residual"] == 1
 

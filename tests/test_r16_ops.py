@@ -168,110 +168,6 @@ def test_corpus_none_requires_all_pieces(spark):
         pq_topk_ivfadc_residual(None, qs, k=2, **_KW)
 
 
-# --- persisted index store: partitioned layout, append, scan pruning ---------
-
-
-@pytest.mark.slow
-def test_index_store_roundtrip_append_replay_ownership(spark, tmp_path):
-    from candia_spark.operators.similarity import (
-        append_ivfadc_batch,
-        ivfadc_build_index,
-        ivfadc_encode_batch,
-        read_ivfadc_index,
-        write_ivfadc_index,
-    )
-
-    emb = _corpus(spark)
-    base = emb.filter(F.col("vec_id") % 4 != 3)
-    batch = emb.filter(F.col("vec_id") % 4 == 3)
-    idx = ivfadc_build_index(base, **_KW)
-    path = str(tmp_path / "ix")
-    write_ivfadc_index(idx, path)
-
-    append_ivfadc_batch(batch, 1, path, m=_KW["m"])
-    stored = read_ivfadc_index(spark, path)["encoded_cells"]
-    rolled = idx["encoded_cells"].unionByName(
-        ivfadc_encode_batch(
-            batch, idx["centroids"], idx["cell_centroids"],
-            idx["codebook"], m=_KW["m"],
-        )
-    )
-    assert _rows(stored) == _rows(rolled)
-    n = stored.count()
-
-    # replaying the SAME batch id rewrites its own partitions only
-    append_ivfadc_batch(batch, 1, path, m=_KW["m"])
-    assert read_ivfadc_index(spark, path)["encoded_cells"].count() == n
-
-    # re-ingesting already-owned ids under a NEW batch id is skipped
-    # (the rolling ownership rule: duplicate (id, sub) rows would
-    # corrupt every ADC sum that touches them)
-    append_ivfadc_batch(batch, 2, path, m=_KW["m"])
-    assert read_ivfadc_index(spark, path)["encoded_cells"].count() == n
-
-    # batch id 0 is the base build's reserved partition
-    with pytest.raises(ValueError, match="batch_id 0"):
-        append_ivfadc_batch(batch, 0, path, m=_KW["m"])
-
-    # geometry stamps survive the parquet round-trip
-    loaded = read_ivfadc_index(spark, path)
-    meta = {
-        f.name: f.metadata
-        for f in loaded["codebook"].schema.fields
-        if f.name == "cw"
-    }
-    assert meta["cw"]["m"] == _KW["m"]
-    assert meta["cw"]["residual"] == 1
-
-
-@pytest.mark.slow
-def test_search_index_scan_pruning_plan_and_equivalence(spark, tmp_path):
-    # VERDICT r15 missing #2 done-criteria: the physical plan shows a
-    # PartitionFilters bucket IN (...) on the encoded_cells scan, and
-    # the pruned search equals both the unpruned and the in-memory one.
-    import re
-
-    from candia_spark.operators.similarity import (
-        ivfadc_build_index,
-        ivfadc_search_index,
-        pq_topk_ivfadc_residual,
-        write_ivfadc_index,
-    )
-
-    emb = _corpus(spark)
-    qs = emb.filter(F.col("vec_id") % 19 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    idx = ivfadc_build_index(emb, **_KW)
-    path = str(tmp_path / "ix")
-    write_ivfadc_index(idx, path)
-
-    skw = dict(m=_KW["m"], codewords=_KW["codewords"])
-    pruned = ivfadc_search_index(spark, path, qs, k=3, nprobe=1, **skw)
-    plan = _plan_of(pruned)
-    # the probed-bucket union reaches the scan as a partition filter —
-    # rendered as `bucket IN (...)` for wide unions or OR-equalities
-    # after OptimizeIn for narrow ones; both prune directories
-    pf = [
-        m.group(1)
-        for m in re.finditer(r"PartitionFilters: \[([^\]]+)\]", plan)
-        if "bucket" in m.group(1)
-        and ("IN" in m.group(1) or "=" in m.group(1))
-    ]
-    assert pf, plan[:2000]
-
-    unpruned = ivfadc_search_index(
-        spark, path, qs, k=3, nprobe=1, prune_scan=False, **skw
-    )
-    in_mem = pq_topk_ivfadc_residual(
-        None, qs, k=3, nprobe=1, centroids=idx["centroids"],
-        cell_centroids=idx["cell_centroids"], codebook=idx["codebook"],
-        encoded_cells=idx["encoded_cells"], **_KW,
-    )
-    got = _rows(pruned)
-    assert got == _rows(unpruned) == _rows(in_mem) and got
-
-
 # --- geometry stamps -------------------------------------------------------
 
 
@@ -491,11 +387,23 @@ def test_recall_audit_rank_column_is_cut_not_raised(spark):
 # --- blocklist phrase table (ADVICE r15) -------------------------------------
 
 
-def test_blocklist_phrase_table_matches_inline_list(spark):
-    from candia_spark.operators.curation import (
-        blocklist_filter,
-        blocklist_phrase_table,
+def _phrase_table(spark, phrases):
+    """The persistable phrase table ``blocklist_filter(phrases_df=)``
+    takes: normalized distinct phrases with their word counts, stamped
+    ``{"normalized": 1}``."""
+    from candia_spark.operators.curation import _normalize_phrases
+
+    return spark.createDataFrame(
+        [(p, len(p.split(" "))) for p in _normalize_phrases(phrases)],
+        "phrase string, n_words int",
+    ).select(
+        F.col("phrase").alias("phrase", metadata={"normalized": 1}),
+        F.col("n_words"),
     )
+
+
+def test_blocklist_phrase_table_matches_inline_list(spark):
+    from candia_spark.operators.curation import blocklist_filter
 
     docs = spark.createDataFrame(
         [
@@ -507,7 +415,7 @@ def test_blocklist_phrase_table_matches_inline_list(spark):
         "doc_id bigint, text string",
     )
     phrases = ["bad word", "Multi-Word Phrase"]
-    pt = blocklist_phrase_table(spark, phrases)
+    pt = _phrase_table(spark, phrases)
     want = _rows(blocklist_filter(docs, phrases, engine="join"))
     assert _rows(blocklist_filter(docs, engine="join", phrases_df=pt)) == want
     # a reloaded table (no n_words column) still works — lengths derive
@@ -523,15 +431,12 @@ def test_blocklist_phrase_table_matches_inline_list(spark):
 
 
 def test_blocklist_phrase_table_arg_and_stamp_guards(spark):
-    from candia_spark.operators.curation import (
-        blocklist_filter,
-        blocklist_phrase_table,
-    )
+    from candia_spark.operators.curation import blocklist_filter
 
     docs = spark.createDataFrame(
         [(1, "x")], "doc_id bigint, text string"
     )
-    pt = blocklist_phrase_table(spark, ["bad word"])
+    pt = _phrase_table(spark, ["bad word"])
     with pytest.raises(ValueError, match="not both"):
         blocklist_filter(docs, ["x"], engine="join", phrases_df=pt)
     with pytest.raises(ValueError, match="engine='join'"):
@@ -683,82 +588,55 @@ def test_dhash_real_leg_strict_stub_leg_lenient(spark):
             decode_image(bad)
 
 
-# --- fully-persisted exact re-rank (the fifth index piece) -------------------
+# --- exact re-rank from the index pieces (the fifth piece) ------------------
 
 
 @pytest.mark.slow
-def test_persisted_rerank_path_never_touches_floats(spark, tmp_path):
-    # the build already quantizes the corpus once; persisting that as
-    # the index's fifth piece lets ivfadc_search_index run the full
-    # IVFADC+R stage from stored integers — rolled by appends, equal to
-    # the in-memory re-rank, candidate-pruned via semi-join.
+def test_rerank_from_index_pieces_never_touches_floats(spark):
+    # the build already quantizes the corpus once; handing that to the
+    # re-rank with the other index pieces runs the full IVFADC+R stage
+    # from stored integers — equal to the corpus path, candidate-pruned
+    # via semi-join.
     from candia_spark.operators.similarity import (
-        append_ivfadc_batch,
         ivfadc_build_index,
-        ivfadc_search_index,
         pq_topk_rerank,
-        read_ivfadc_index,
-        write_ivfadc_index,
     )
 
     emb = _corpus(spark)
-    base = emb.filter(F.col("vec_id") % 4 != 3)
-    batch = emb.filter(F.col("vec_id") % 4 == 3)
     qs = emb.filter(F.col("vec_id") % 9 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    idx = ivfadc_build_index(base, **_KW)
+    idx = ivfadc_build_index(emb, **_KW)
     assert "quantized_corpus" in idx
-    path = str(tmp_path / "ix")
-    write_ivfadc_index(idx, path)
-    append_ivfadc_batch(batch, 1, path, m=_KW["m"])
-    loaded = read_ivfadc_index(spark, path)
-    # the quantized piece rolled with the append
-    assert loaded["quantized_corpus"].count() == emb.count()
-    stored = ivfadc_search_index(
-        spark, path, qs, k=3, nprobe=2, m=_KW["m"],
-        codewords=_KW["codewords"], rerank_shortlist=10,
-    )
-    mem = pq_topk_rerank(
+    pieces = pq_topk_rerank(
         None, qs, k=3, shortlist=10, nprobe=2,
-        centroids=loaded["centroids"],
-        cell_centroids=loaded["cell_centroids"],
-        codebook=loaded["codebook"],
-        encoded_cells=loaded["encoded_cells"],
-        quantized_corpus=loaded["quantized_corpus"], **_KW,
+        centroids=idx["centroids"],
+        cell_centroids=idx["cell_centroids"],
+        codebook=idx["codebook"],
+        encoded_cells=idx["encoded_cells"],
+        quantized_corpus=idx["quantized_corpus"], **_KW,
     )
-    got = _rows(stored)
+    mem = pq_topk_rerank(emb, qs, k=3, shortlist=10, nprobe=2, **_KW)
+    got = _rows(pieces)
     assert got == _rows(mem) and got
     # the exact stage still reads candidates only, not the whole store
-    assert "LeftSemi" in _plan_of(stored)
+    assert "LeftSemi" in _plan_of(pieces)
     with pytest.raises(ValueError, match="corpus is required"):
         pq_topk_rerank(None, qs, k=3, shortlist=10)
 
 
-def test_real_codec_leg_resize_and_features(spark):
+def test_real_codec_leg_features(spark):
     import numpy as np
 
     from candia_spark.operators.multimodal import (
         extract_features,
         real_image_features,
-        resize_plumbing,
     )
 
     px = _pixels()  # 16 x 18
     docs = spark.createDataFrame(
         [(1, _bmp24(px))], "doc_id bigint, payload binary"
     )
-    # real resize: independent in-test area-average on //3 gray
-    got = resize_plumbing(docs, target_h=4, target_w=4, decoder="real").collect()[0]
-    assert got["src_side"] == 16 and got["height"] == 4
-    gray = np.array([[sum(p) // 3 for p in row] for row in px], dtype=np.float64)
-    ys = np.linspace(0, 16, 5).round().astype(int)
-    xs = np.linspace(0, 18, 5).round().astype(int)
-    want = np.zeros((4, 4))
-    for r in range(4):
-        for c in range(4):
-            want[r, c] = gray[ys[r]:ys[r+1], xs[c]:xs[c+1]].mean()
-    assert bytes(got["resized"]) == want.round().clip(0, 255).astype(np.uint8).tobytes()
     # real features: chunk means of the decoded pixel stream, via the
     # pluggable decoder slot
     feats = extract_features(
@@ -767,87 +645,9 @@ def test_real_codec_leg_resize_and_features(spark):
     flat = np.array([sum(p) for row in px for p in row], dtype=np.float64)
     want_f = [c.mean() for c in np.array_split(flat, 4)]
     assert feats == pytest.approx(want_f)
-    # strictness + arg guard
+    # strictness
     junk = spark.createDataFrame(
         [(1, b"junk bytes")], "doc_id bigint, payload binary"
     )
     with pytest.raises(Exception, match="decode_image supports"):
-        resize_plumbing(junk, decoder="real").collect()
-    with pytest.raises(ValueError, match="decoder must be"):
-        resize_plumbing(junk, decoder="pil")
-    with pytest.raises(Exception, match="decode_image supports"):
         extract_features(junk, feature_dim=4, decoder=real_image_features).collect()
-    # stub legs unchanged by the new parameter
-    assert resize_plumbing(junk).count() == 1
-
-
-@pytest.mark.slow
-def test_compact_ivfadc_index_blue_green(spark, tmp_path):
-    # rolling appends accumulate one small file per (bucket, batch);
-    # compaction rewrites to dest with one file per bucket under
-    # _batch_id=0, search-identical, stamps intact, self-overwrite
-    # refused.
-    import os
-
-    from candia_spark.operators.similarity import (
-        append_ivfadc_batch,
-        compact_ivfadc_index,
-        ivfadc_build_index,
-        ivfadc_search_index,
-        read_ivfadc_index,
-        write_ivfadc_index,
-    )
-
-    emb = _corpus(spark)
-    b0 = emb.filter(F.col("vec_id") % 3 == 0)
-    b1 = emb.filter(F.col("vec_id") % 3 == 1)
-    b2 = emb.filter(F.col("vec_id") % 3 == 2)
-    qs = emb.filter(F.col("vec_id") % 9 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
-    write_ivfadc_index(ivfadc_build_index(b0, **_KW), src)
-    append_ivfadc_batch(b1, 1, src, m=_KW["m"])
-    append_ivfadc_batch(b2, 2, src, m=_KW["m"])
-
-    with pytest.raises(ValueError, match="DIFFERENT path"):
-        compact_ivfadc_index(spark, src, src + "/")
-    compact_ivfadc_index(spark, src, dest)
-
-    skw = dict(m=_KW["m"], codewords=_KW["codewords"])
-    a = ivfadc_search_index(spark, src, qs, k=3, nprobe=2, **skw)
-    b = ivfadc_search_index(spark, dest, qs, k=3, nprobe=2, **skw)
-    got = _rows(a)
-    assert got == _rows(b) and got
-
-    def parts(path):
-        out = []
-        for d in os.listdir(f"{path}/encoded_cells"):
-            if d.startswith("bucket="):
-                out += [
-                    (d, sub)
-                    for sub in os.listdir(f"{path}/encoded_cells/{d}")
-                    if sub.startswith("_batch_id=")
-                ]
-        return out
-
-    # src carries three batch generations; dest exactly one
-    assert {p[1] for p in parts(src)} == {
-        "_batch_id=0", "_batch_id=1", "_batch_id=2"
-    }
-    assert {p[1] for p in parts(dest)} == {"_batch_id=0"}
-    # rows and stamps survived; the quantized piece compacted too
-    loaded = read_ivfadc_index(spark, dest)
-    assert loaded["encoded_cells"].count() == emb.count() * _KW["m"]
-    assert loaded["quantized_corpus"].count() == emb.count()
-    cw_meta = next(
-        f.metadata for f in loaded["codebook"].schema.fields if f.name == "cw"
-    )
-    assert cw_meta["residual"] == 1
-    # a replayed pre-compaction batch id is a no-op on the compacted
-    # store (every id owned by partition 0)
-    append_ivfadc_batch(b1, 1, dest, m=_KW["m"])
-    assert (
-        read_ivfadc_index(spark, dest)["encoded_cells"].count()
-        == emb.count() * _KW["m"]
-    )

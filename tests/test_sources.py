@@ -412,75 +412,6 @@ def test_strip_modifications(spark):
     assert got == ["PEPTIDE", "SEQVAL"]
 
 
-def test_documents_jsonl_round_trip(spark, tmp_path):
-    """JSONL corpus interchange: write the parquet documents table as
-    JSON-Lines, read it back with the explicit schema, and get the exact
-    same rows; malformed lines land in _corrupt_record, not an error."""
-    from candia_spark.sources.adapters import (
-        read_documents_jsonl,
-        write_documents_jsonl,
-    )
-    from candia_spark.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    out = str(tmp_path / "docs_jsonl")
-    write_documents_jsonl(docs, out)
-    # collect full rows: Spark disallows queries referencing ONLY the
-    # internal corrupt-record column of a raw JSON scan
-    back_rows = read_documents_jsonl(spark, out).collect()
-    assert all(r["_corrupt_record"] is None for r in back_rows)
-    a = sorted(map(tuple, docs.collect()))
-    b = sorted(
-        (r["doc_id"], r["text"], r["lang"], r["source"], r["n_chars"])
-        for r in back_rows
-    )
-    assert a == b
-    # malformed line -> _corrupt_record row, clean rows still parse
-    bad = tmp_path / "bad.jsonl"
-    bad.write_text('{"doc_id": 1, "text": "ok", "lang": "en", "source": "s", "n_chars": 2}\nnot json at all\n')
-    mixed = read_documents_jsonl(spark, str(bad)).collect()
-    assert sum(1 for r in mixed if r["_corrupt_record"] is not None) == 1
-    assert sum(1 for r in mixed if r["_corrupt_record"] is None) == 1
-    # read -> write round-trip drops the reader-internal diagnostic
-    # column (ADVICE r5): the emitted JSONL contains clean records only
-    out2 = str(tmp_path / "docs_jsonl_rt")
-    write_documents_jsonl(read_documents_jsonl(spark, out), out2)
-    rt = spark.read.text(out2).collect()
-    assert rt and all("_corrupt_record" not in r["value"] for r in rt)
-    back2 = read_documents_jsonl(spark, out2)
-    assert sorted(
-        (r["doc_id"], r["text"], r["lang"], r["source"], r["n_chars"])
-        for r in back2.collect()
-    ) == a
-
-
-def test_documents_orc_round_trip(spark, tmp_path):
-    """ORC corpus interchange: footer-carried schema (no inference, no
-    DDL), distributed read/write, values and types preserved exactly —
-    the no-conversion on-ramp for Hive-lineage corpora."""
-    from candia_spark.sources.adapters import (
-        read_documents_orc,
-        write_documents_orc,
-    )
-    from candia_spark.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    p = str(tmp_path / "docs_orc")
-    write_documents_orc(docs, p)
-    back = read_documents_orc(spark, p)
-    assert back.schema == docs.schema
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, docs.collect()))
-    # column pruning + predicate pushdown reach the ORC scan
-    plan = (
-        back.filter(back["doc_id"] < 10)
-        .select("doc_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,10)]" in plan
-
-
 def test_temperature_sample_upweights_small_sources(spark):
     """sqrt-temperature mixing: a source's drawn share must sit BETWEEN
     its corpus share and the uniform share (the whole point of

@@ -11,19 +11,18 @@ from pyspark.sql import functions as F
 
 from candia_spark.functions.text import (
     fingerprint,
-    lang_id,
+    lang_id_from_distinct,
     quality_score,
     regex_token_count,
     token_count,
     top_bigram_fraction,
+    tokens,
     top_token_fraction,
 )
 from candia_spark.operators.multimodal import (
     _fake_decode,
     binary_metadata,
     extract_features,
-    frame_sample_plumbing,
-    resize_plumbing,
 )
 
 
@@ -43,7 +42,10 @@ def docs(spark):
 def test_lang_id(docs):
     got = {
         r["doc_id"]: r["pred"]
-        for r in docs.select("doc_id", lang_id("text").alias("pred")).collect()
+        for r in docs.select(
+            "doc_id",
+            lang_id_from_distinct(F.array_distinct(tokens("text"))).alias("pred"),
+        ).collect()
     }
     assert got == {0: "en", 1: "de", 2: "es", 3: "fr", 4: "und", 5: "und"}
 
@@ -180,43 +182,6 @@ def test_extract_features_plumbing(payloads):
     assert by_id[0]["features"][0] == 3.5
     assert by_id[2]["features"] == [0.0] * 8
     assert all(r["modality"] == "image" for r in rows)
-
-
-def test_frame_sample_plumbing(payloads):
-    rows = frame_sample_plumbing(payloads, n_frames=4).collect()
-    frames0 = sorted(
-        (r["frame_idx"], r["frame_bytes"], r["frame_digest"])
-        for r in rows
-        if r["doc_id"] == 0
-    )
-    assert [f[0] for f in frames0] == [0, 1, 2, 3]
-    assert sum(f[1] for f in frames0) == 64
-    assert sum(f[2] for f in frames0) == sum(range(64))
-    # empty payload still yields n_frames rows of zero bytes
-    assert sum(1 for r in rows if r["doc_id"] == 2) == 4
-
-
-def test_resize_plumbing(payloads):
-    rows = resize_plumbing(payloads, target_h=4, target_w=4).collect()
-    by_id = {r["doc_id"]: r for r in rows}
-    assert set(by_id) == {0, 1, 2}
-    # 64 bytes -> 8x8 grid; 4x4 area-mean of an 8x8 of 0..63: each output
-    # cell is the mean of a 2x2 block, e.g. top-left = mean(0,1,8,9) = 4.5
-    # -> rounds to 4 (numpy banker's rounding: 4.5 -> 4)
-    r0 = by_id[0]
-    assert (r0["src_side"], r0["height"], r0["width"]) == (8, 4, 4)
-    px = np.frombuffer(bytes(r0["resized"]), dtype=np.uint8).reshape(4, 4)
-    src = np.arange(64, dtype=np.float64).reshape(8, 8)
-    expect = src.reshape(4, 2, 4, 2).mean(axis=(1, 3)).round().astype(np.uint8)
-    assert np.array_equal(px, expect)
-    # constant image stays constant through resize
-    p1 = np.frombuffer(bytes(by_id[1]["resized"]), dtype=np.uint8)
-    assert by_id[1]["src_side"] == 4 and (p1 == 255).all()
-    # empty payload -> 1x1 zero source, all-zero output, no crash
-    assert np.frombuffer(bytes(by_id[2]["resized"]), dtype=np.uint8).sum() == 0
-    # determinism across executions
-    again = {r["doc_id"]: bytes(r["resized"]) for r in resize_plumbing(payloads, target_h=4, target_w=4).collect()}
-    assert again == {k: bytes(v["resized"]) for k, v in by_id.items()}
 
 
 def test_custom_decoder_injection(payloads):
@@ -368,52 +333,6 @@ def test_dhash64_null_payload_is_empty(spark):
     )
     got = {r.doc_id: (r.n_bytes, r.h_hi, r.h_lo) for r in dhash64(df).collect()}
     assert got[1] == (0, 0, 0) and got[2] == (0, 0, 0)
-
-
-def test_incremental_phash_equals_batch_slice_of_full_run(spark):
-    """Rolling image near-dedup: the batch paired against (stored
-    signatures ∪ batch) must equal exactly the batch-involving slice
-    of a full phash_near_dups run over corpus ∪ batch — corpus-internal
-    pairs excluded (found at their own arrival time), batch-vs-corpus
-    and batch-vs-batch included."""
-    import random
-
-    from candia_spark.operators.multimodal import (
-        dhash64,
-        incremental_phash_dups,
-        phash_near_dups,
-    )
-
-    rng = random.Random(17)
-
-    def payload():
-        return bytes(rng.randrange(256) for _ in range(150))
-
-    corpus_rows = [(i, payload()) for i in range(10)]
-    corpus_rows.append((10, corpus_rows[0][1]))  # corpus-internal dup
-    batch_rows = [(100 + i, payload()) for i in range(6)]
-    batch_rows.append((106, corpus_rows[3][1]))  # batch-vs-corpus dup
-    batch_rows.append((107, batch_rows[0][1]))   # batch-vs-batch dup
-
-    corpus = spark.createDataFrame(corpus_rows, "doc_id bigint, payload binary")
-    batch = spark.createDataFrame(batch_rows, "doc_id bigint, payload binary")
-
-    stored = dhash64(corpus)
-    inc = {
-        (r.id_a, r.id_b): r.hamming
-        for r in incremental_phash_dups(batch, stored, max_hamming=8).collect()
-    }
-    batch_ids = {r[0] for r in batch_rows}
-    full = {
-        (r.id_a, r.id_b): r.hamming
-        for r in phash_near_dups(
-            corpus.unionByName(batch), max_hamming=8
-        ).collect()
-        if r.id_a in batch_ids or r.id_b in batch_ids
-    }
-    assert inc == full
-    assert (3, 106) in inc and (100, 107) in inc  # the planted pairs
-    assert (0, 10) not in inc  # corpus-internal pair excluded
 
 
 def test_canonical_url_rules_by_hand(spark):

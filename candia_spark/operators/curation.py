@@ -2678,7 +2678,6 @@ def blocklist_filter(
     text_col: str = "text",
     id_col: str = "doc_id",
     engine: str = "inline",
-    phrases_df: DataFrame | None = None,
 ) -> DataFrame:
     """C4-style blocklist gate (Raffel et al. 2020 dropped any page
     containing a "List of Dirty, Naughty ..." phrase): flag documents
@@ -2723,52 +2722,17 @@ def blocklist_filter(
       Contract difference on DUPLICATE ids: the inline engine verdicts
       each ROW; the join engine's keyed agg merges rows sharing an id
       (the WET-ingest conflation class) — feed it unique ids (or a
-      per-row surrogate) when rows can collide.
-
-    Repeated gates against one big list should build the phrase table
-    ONCE — (phrase, n_words) rows of the normalized distinct phrases,
-    ``phrase`` stamped ``{"normalized": 1}``, typically persisted to
-    parquet — and pass it as ``phrases_df=`` (join engine only — the
-    inline engine compiles phrases into the plan, which requires the
-    driver-side list): the list then never re-ships through the driver
-    per call (ADVICE r15). A ``phrases_df`` whose ``phrase`` field
-    carries a ``normalized`` stamp other than 1 raises (a foreign
-    un-normalized table would silently miss punctuated matches);
-    tables without a stamp pass — best-effort on provenance, strict on
-    detected mismatch."""
+      per-row surrogate) when rows can collide."""
     if engine not in ("inline", "join"):
         raise ValueError(f"engine must be 'inline' or 'join', got {engine!r}")
-    if phrases_df is not None:
-        if phrases:
-            raise ValueError(
-                "pass phrases OR phrases_df, not both — the table would "
-                "silently shadow the list"
-            )
-        if engine != "join":
-            raise ValueError(
-                "phrases_df requires engine='join': the inline engine "
-                "compiles each phrase into the plan, which needs the "
-                "driver-side list"
-            )
-        for field in phrases_df.schema.fields:
-            if (
-                field.name == "phrase"
-                and field.metadata
-                and int(field.metadata.get("normalized", 1)) != 1
-            ):
-                raise ValueError(
-                    "phrases_df is stamped as NOT normalized — build it "
-                    "from phrases normalized as the text is, so phrase "
-                    "and text share one normalization"
-                )
-    elif not phrases:
+    if not phrases:
         raise ValueError("phrases must be a non-empty list")
     # Phrases get the SAME normalization as the document text (lowercase,
     # non-alphanumerics -> space, collapse, strip) — a punctuated phrase
     # like 'x-rated' must match its normalized document form, and
     # first_hit ordering is over the NORMALIZED forms (sort after
     # normalizing, not before lowercasing).
-    norm = _normalize_phrases(phrases) if phrases else []
+    norm = _normalize_phrases(phrases)
     t = F.concat(
         F.lit(" "),
         F.trim(
@@ -2786,28 +2750,10 @@ def blocklist_filter(
     )
     base = df.select(F.col(id_col), t.alias("__t"))
     if engine == "join":
-        if phrases_df is not None:
-            ptable = phrases_df.select("phrase")
-            # the n-gram builder needs the DISTINCT word-count set — a
-            # handful of integers, read off the list-sized table (from
-            # the stamped n_words column when present, else split)
-            nw = (
-                F.col("n_words")
-                if "n_words" in phrases_df.columns
-                else F.size(F.split("phrase", " "))
-            )
-            lengths = sorted(
-                int(r["__nw"])
-                for r in phrases_df.select(
-                    nw.cast("int").alias("__nw")
-                ).distinct().collect()
-            )
-        else:
-            spark = df.sparkSession
-            ptable = spark.createDataFrame(
-                [(p,) for p in norm], "phrase string"
-            )
-            lengths = sorted({len(p.split(" ")) for p in norm})
+        ptable = df.sparkSession.createDataFrame(
+            [(p,) for p in norm], "phrase string"
+        )
+        lengths = sorted({len(p.split(" ")) for p in norm})
         # Tokens projected into a BOUND column (r16 optimization round,
         # guide §1.2): inlined, the split expression sits inside the
         # per-position n-gram lambda below and re-splits the document

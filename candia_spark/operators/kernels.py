@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
-    LongType,
     StructField,
     StructType,
 )

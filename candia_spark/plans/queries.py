@@ -39,7 +39,6 @@ from candia_spark.operators import (
     asof_join,
     assign_scan_cycles,
     band_join,
-    bucketize,
     cross_index,
     explode_index,
     greedy_ppm_partition,
@@ -8938,8 +8937,9 @@ _DRIVER_WINDOW_TAIL = [
     # already and stay: q125 (recall-audit depth guard), q127/q130
     # (residual family delegation to ivfadc_build_index + rerank
     # pushdown), q119/q122/q124 (geometry asserts + broadcast_lut on
-    # the PQ search paths), q121/q129 (blocklist phrases_df plumbing),
-    # q101 (dhash64 decoder param; default leg plan-identical). Parked:
+    # the PQ search paths), q121/q129 (blocklist phrase-table
+    # plumbing, since removed), q101 (dhash64 decoder param; default
+    # leg plan-identical). Parked:
     # q131's seat: q40's limit-then-rank heavy-hitters device returned
     # to the window at r14 for exactly this plan shape and has two
     # rounds of driver-grade certification (r14-r15); the SAME

@@ -34,7 +34,6 @@ from __future__ import annotations
 import base64
 import io
 import re
-import struct
 import zlib
 from collections.abc import Iterator
 from xml.etree import ElementTree

@@ -384,70 +384,6 @@ def test_recall_audit_rank_column_is_cut_not_raised(spark):
     assert got[0]["n_overlap"] == 1  # vec_id 0 (rank 1)
 
 
-# --- blocklist phrase table (ADVICE r15) -------------------------------------
-
-
-def _phrase_table(spark, phrases):
-    """The persistable phrase table ``blocklist_filter(phrases_df=)``
-    takes: normalized distinct phrases with their word counts, stamped
-    ``{"normalized": 1}``."""
-    from candia_spark.operators.curation import _normalize_phrases
-
-    return spark.createDataFrame(
-        [(p, len(p.split(" "))) for p in _normalize_phrases(phrases)],
-        "phrase string, n_words int",
-    ).select(
-        F.col("phrase").alias("phrase", metadata={"normalized": 1}),
-        F.col("n_words"),
-    )
-
-
-def test_blocklist_phrase_table_matches_inline_list(spark):
-    from candia_spark.operators.curation import blocklist_filter
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a Bad-Word here"),
-            (2, "clean text entirely"),
-            (3, "multi word phrase inside"),
-            (4, "badword joined is no hit"),
-        ],
-        "doc_id bigint, text string",
-    )
-    phrases = ["bad word", "Multi-Word Phrase"]
-    pt = _phrase_table(spark, phrases)
-    want = _rows(blocklist_filter(docs, phrases, engine="join"))
-    assert _rows(blocklist_filter(docs, engine="join", phrases_df=pt)) == want
-    # a reloaded table (no n_words column) still works — lengths derive
-    # in-plan from the phrase strings
-    assert (
-        _rows(
-            blocklist_filter(
-                docs, engine="join", phrases_df=pt.select("phrase")
-            )
-        )
-        == want
-    )
-
-
-def test_blocklist_phrase_table_arg_and_stamp_guards(spark):
-    from candia_spark.operators.curation import blocklist_filter
-
-    docs = spark.createDataFrame(
-        [(1, "x")], "doc_id bigint, text string"
-    )
-    pt = _phrase_table(spark, ["bad word"])
-    with pytest.raises(ValueError, match="not both"):
-        blocklist_filter(docs, ["x"], engine="join", phrases_df=pt)
-    with pytest.raises(ValueError, match="engine='join'"):
-        blocklist_filter(docs, engine="inline", phrases_df=pt)
-    un_normalized = spark.createDataFrame(
-        [("Bad-Word",)], "phrase string"
-    ).select(F.col("phrase").alias("phrase", metadata={"normalized": 0}))
-    with pytest.raises(ValueError, match="NOT normalized"):
-        blocklist_filter(docs, engine="join", phrases_df=un_normalized)
-
-
 # --- real image codec leg (VERDICT r15 missing #5) ---------------------------
 
 

@@ -17,7 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def _configure(spark: SparkSession) -> SparkSession:
-    """Apply session confs the engine relies on (the driver owns the session)."""
+    """Apply session confs the engine relies on (the driver owns the session),
+    and keep py4j's lookups (``session.keep_py4j_lookups``), which needs no
+    conf and so reaches the driver's session too."""
+    from candia_spark.session import keep_py4j_lookups
+
+    keep_py4j_lookups()
     try:
         # On Spark <= 4.0 this makes events.parquet (TIMESTAMP(NANOS)) read
         # as long nanos; on 4.1+ it silently no-ops and the column reads as

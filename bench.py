@@ -2,11 +2,13 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 "sf": ...}. Stderr carries one more JSON line, {"telemetry": {"q73":
-{"authority": {...}, "codegen": {"compiles": N}}, ...}}: the routing
-decisions each query's operators recorded (``candia_spark.telemetry``)
-and the classes Janino compiled during its runs, keyed by short name. A
-rise in compiles on a repeated plan shows a codegen-cache miss as a
-number rather than as unexplained wall time.
+{"authority": {...}, "codegen": {"compiles": N}, "jobs": J}, ...}}: the
+routing decisions each query's operators recorded
+(``candia_spark.telemetry``), the classes Janino compiled during its runs
+and its Spark jobs per run, keyed by short name. A rise in compiles on a
+repeated plan shows a codegen-cache miss as a number rather than as
+unexplained wall time, and the job count is the deterministic counter
+beside each timing.
 
 ``--runs N`` (default 1) times every query N times and reports the
 per-query MINIMUM — the stable statistic on a box with ±20% run-to-run
@@ -63,6 +65,38 @@ def result_line(
     return json.dumps(out, separators=(",", ":"))
 
 
+def time_query(spark, name, build, sf_dir, runs, timings, errors) -> dict:
+    """Run one query ``runs`` times under its own job group and return its
+    stderr telemetry entry: the routing its operators recorded against the
+    group (``candia_spark.telemetry``), the classes compiled during its
+    runs, and its Spark jobs per run, read from the status tracker (no
+    job). Its minimum time goes into ``timings``; an error goes into
+    ``errors`` and never stops the bench (round 3 lost ALL perf evidence
+    to a single AnalysisException)."""
+    from candia_spark import telemetry
+    from candia_spark.session import codegen_compiles
+
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    compiles = codegen_compiles(spark)
+    entry: dict = {}
+    runs = max(1, runs)
+    for _run in range(runs):
+        t0 = time.perf_counter()
+        try:
+            # Force full evaluation of every output column, not just a
+            # count.
+            build(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            elapsed = round(time.perf_counter() - t0, 3)
+            timings[name] = min(timings.get(name, elapsed), elapsed)
+        except Exception as exc:  # noqa: BLE001 — isolate, record, continue
+            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+        entry.update(telemetry.pop(name))
+    entry["codegen"] = {"compiles": codegen_compiles(spark) - compiles}
+    entry["jobs"] = len(sc.statusTracker().getJobIdsForGroup(name)) / runs
+    return entry
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument(
@@ -73,7 +107,7 @@ def main() -> int:
     )
     cli = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from candia_spark.session import codegen_compiles, get_spark
+    from candia_spark.session import get_spark
     from candia_spark.plans.queries import QUERY_REGISTRY
 
     spark = get_spark(app_name="candia_spark_bench")
@@ -179,36 +213,13 @@ def main() -> int:
     except Exception:
         pass
 
-    # Per-query routing telemetry: each query runs under its own job
-    # group, and the operators record their decisions against it.
-    from candia_spark import telemetry
-
-    sc = spark.sparkContext
     telemetry_by_query: dict[str, dict] = {}
 
-    # Per-query fault isolation: one broken query must never cost the
-    # round its timings (round 3 lost ALL perf evidence to a single
-    # AnalysisException). Errors are recorded in the JSON instead.
     for name in names + extra:
-        sc.setJobGroup(name, name)
-        compiles = codegen_compiles(spark)
-        for _run in range(max(1, cli.runs)):
-            t0 = time.perf_counter()
-            try:
-                df = QUERY_REGISTRY[name].spark(spark, sf_dir)
-                # Force full evaluation of every output column, not just
-                # a count.
-                df.write.format("noop").mode("overwrite").save()
-                elapsed = round(time.perf_counter() - t0, 3)
-                timings[name] = min(timings.get(name, elapsed), elapsed)
-            except Exception as exc:  # noqa: BLE001 — isolate, record, continue
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            recorded = telemetry.pop(name)
-            if recorded:
-                telemetry_by_query[short(name)] = recorded
-        telemetry_by_query.setdefault(short(name), {})["codegen"] = {
-            "compiles": codegen_compiles(spark) - compiles
-        }
+        telemetry_by_query[short(name)] = time_query(
+            spark, name, QUERY_REGISTRY[name].spark, sf_dir, cli.runs,
+            timings, errors,
+        )
 
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])

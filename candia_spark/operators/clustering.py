@@ -43,6 +43,8 @@ members of headroom at scale=1000 with unit-norm embeddings).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -74,61 +76,60 @@ def _quantized(
     return df.select(
         F.col(id_col).alias("__vid"),
         *[F.col(c) for c in carry],
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.round(x.cast("double") * scale, 0).cast("long"),
+        F.expr(
+            f"transform(`{vec_col}`, x -> "
+            f"CAST(round(CAST(x AS DOUBLE) * {int(scale)}, 0) AS BIGINT))"
         ).alias("qv"),
-    ).withColumn(
-        "n2",
-        F.aggregate(
-            F.transform(F.col("qv"), lambda v: v * v),
-            F.lit(0).cast("long"),
-            lambda a, v: a + v,
-        ),
-    )
+    ).withColumn("n2", F.expr(_N2))
 
 
-def _argmin_struct(c, label_field: str, int_sum: bool = False):
-    """(key, label) struct for the lexicographic argmin over one element
-    ``c = struct(<label>, sv, n)`` of a broadcast centroid array. The
-    decimal-exact distance convention lives HERE, once, for both the flat
-    and hierarchical loops: per-term bigint is exact (see module docstring
-    margins) and the SUM runs in decimal(38,0) so large clusters cannot
-    wrap.
+# the squared norm of the quantized vector qv, in bigint
+_N2 = "aggregate(transform(qv, v -> v * v), CAST(0 AS BIGINT), (a, v) -> a + v)"
+
+
+def _argmin_keys(
+    label: str, int_sum: bool = False, arr: str = "cs", vec: str = "qv",
+    sums: str = "sv",
+):
+    """One (k, <label>) struct per element ``c = struct(<label>, <sums>,
+    n)`` of the broadcast centroid array ``arr``, keyed by the distance of
+    the row's integer vector ``vec`` to that centroid; ``array_min`` of it
+    is the lexicographic argmin (ties to the smallest label). The
+    decimal-exact distance convention lives HERE, once, for the flat and
+    hierarchical loops, the IVF probe and the PQ codebook trainer:
+    per-term bigint is exact (see module docstring margins) and the SUM
+    runs in decimal(38,0) so large clusters cannot wrap.
 
     ``int_sum=True`` accumulates in plain bigint instead — ONLY valid
     when the caller has proven no term or partial sum can reach 2^63
-    (see :func:`_int_safe_cond`): terms are non-negative, so the partial
+    (see :func:`_static_int_safe`): terms are non-negative, so the partial
     sums are bounded by the final sum and one bound covers the whole
     fold. Both forms produce the identical exact integer, and
     double(exact int) rounds identically from either representation, so
     the argmin key — and every assignment — is bit-identical. The only
     difference is speed: decimal(38,0) accumulation runs on
     java.math.BigDecimal, roughly an order of magnitude more per term
-    than long arithmetic."""
+    than long arithmetic.
+
+    ``arr`` is SQL, so a caller can filter the array first. One SQL
+    expression: built from ``F.*`` calls it took about 30 py4j round
+    trips per build."""
     if int_sum:
-        d = F.aggregate(
-            F.zip_with(
-                F.col("qv"),
-                c["sv"],
-                lambda x, s: (c["n"] * x - s) * (c["n"] * x - s),
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
+        term, zero = "(c.n * x - s) * (c.n * x - s)", "CAST(0 AS BIGINT)"
     else:
-        d = F.aggregate(
-            F.zip_with(
-                F.col("qv"),
-                c["sv"],
-                lambda x, s: (c["n"] * x - s).cast("decimal(18,0)")
-                * (c["n"] * x - s).cast("decimal(18,0)"),
-            ),
-            F.lit(0).cast("decimal(38,0)"),
-            lambda acc, v: acc + v,
+        term = (
+            "CAST(c.n * x - s AS DECIMAL(18,0)) * "
+            "CAST(c.n * x - s AS DECIMAL(18,0))"
         )
-    key = d.cast("double") / (c["n"] * c["n"]).cast("double")
-    return F.struct(key.alias("k"), c[label_field].alias(label_field))
+        zero = "CAST(0 AS DECIMAL(38,0))"
+    d = (
+        f"aggregate(zip_with({vec}, c.{sums}, (x, s) -> {term}), {zero}, "
+        "(acc, v) -> acc + v)"
+    )
+    return (
+        f"transform({arr}, c -> named_struct('k', CAST({d} AS DOUBLE) / "
+        f"CAST(c.n * c.n AS DOUBLE), '{label}', c.{label}))"
+    )
 
 
 # Gate for the bigint distance branch, decided DRIVER-SIDE per call
@@ -301,6 +302,13 @@ def _raise_overflow_margin(n, q, s, dim) -> None:
         )
 
 
+# (nmax, max|s|) of each re-centered table a training run hands out,
+# observed on the cut that made it: kmeans_probe_cells' bigint gate reads
+# them here instead of running a job over the table. Keyed by the
+# DataFrame object (identity), so any other table misses and is measured.
+_TABLE_MARGINS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def _farthest_point_seeds(
     q: DataFrame, k: int, int_sum: bool = False
 ) -> DataFrame:
@@ -441,14 +449,7 @@ def _assignments(
         # nothing — and an absurd quantization scale cannot overflow the
         # eager n2 squares before the margin validation gets to raise
         q, got = cut(q.select("__vid", "qv"), *_quantization_stat_aggs())
-        q = q.withColumn(
-            "n2",
-            F.aggregate(
-                F.transform(F.col("qv"), lambda v: v * v),
-                F.lit(0).cast("long"),
-                lambda a, v: a + v,
-            ),
-        )
+        q = q.withColumn("n2", F.expr(_N2))
         stats = (got["n_rows"], got["qmax"], got["dim"])
         _raise_quantization_margins(*stats, materialize, iters)
     else:
@@ -487,6 +488,15 @@ def _assignments(
     cent = seeds  # (cluster, sv: array<long> integer sums, n: member count)
     assign = None
     cent_out = None
+    margin = None  # the overflow stats observed on the last re-centering
+    # array_min over (key, cluster) structs = lexicographic argmin with
+    # the smallest-cluster tie-break; the final multiprobe pass takes the
+    # top-p of the SAME total order (array_sort of the same structs).
+    # Built once: only the broadcast row under "cs" changes per pass.
+    keyed = _argmin_keys("cluster", int_sum)
+    best = F.expr(f"array_min({keyed}).cluster").alias("cluster")
+    if probes > 1:
+        ranked = F.expr(f"explode(slice(array_sort({keyed}), 1, {probes}))")
     for it in range(iters):
         if it == iters - 1:
             # the centroid table the FINAL pass assigns against —
@@ -495,36 +505,27 @@ def _assignments(
             # __smax/__qmax overflow-guard columns (ADVICE r14) — the
             # documented (cluster, sv, n) contract must hold for
             # persisted centroid tables regardless of iters.
-            if _return_centroids:
-                return cent.select("cluster", "sv", "n")
-            if _return_both:
+            if _return_centroids or _return_both:
                 cent_out = cent.select("cluster", "sv", "n")
+                if margin is not None:
+                    _TABLE_MARGINS[cent_out] = (margin["n"], margin["s"])
+            if _return_centroids:
+                return cent_out
         # all centroids in ONE broadcast row -> assignment is a map: the
         # k distances and their argmin evaluate inside each corpus row
         carr = cent.agg(
             F.collect_list(F.struct("cluster", "sv", "n")).alias("cs")
         )
         joined = q.crossJoin(F.broadcast(carr))
-        # array_min over (key, cluster) structs = lexicographic argmin
-        # with the smallest-cluster tie-break
-        keyed = F.transform(
-            F.col("cs"), lambda c: _argmin_struct(c, "cluster", int_sum)
-        )
         if probes > 1 and it == iters - 1:
-            # final pass only: top-p of the SAME total order (array_sort
-            # of the same structs array_min reduces), exploded to one
-            # row per probed cluster
-            ranked = F.slice(F.array_sort(keyed), 1, probes)
+            # final pass only: exploded to one row per probed cluster
             assign = joined.select(
-                "__vid", "qv", "n2", F.explode(ranked).alias("__pk")
+                "__vid", "qv", "n2", ranked.alias("__pk")
             ).select(
                 "__vid", "qv", "n2", F.col("__pk")["cluster"].alias("cluster")
             )
         else:
-            best = F.array_min(keyed)
-            assign = joined.select(
-                "__vid", "qv", "n2", best["cluster"].alias("cluster")
-            )
+            assign = joined.select("__vid", "qv", "n2", best)
         if it < iters - 1:
             cent = _recenter(assign, ["cluster"])
             if materialize:
@@ -533,8 +534,8 @@ def _assignments(
                 # iteration i's broadcast re-derives every earlier
                 # iteration from lineage: O(iters^2) corpus scans); the
                 # overflow-margin check rides the same job
-                cent, got = cut(cent, *_overflow_margin_aggs())
-                _raise_overflow_margin(**got)
+                cent, margin = cut(cent, *_overflow_margin_aggs())
+                _raise_overflow_margin(**margin)
     if not keep_vectors:
         assign = assign.select("__vid", "cluster")
     if materialize:
@@ -562,10 +563,18 @@ def kmeans_train_assign(
     returned table by construction — so callers that previously ran
     ``kmeans_centroids`` followed by a probe re-assignment (the
     trained-IVFADC builders) save one full corpus quantize + argmin
-    pass while keeping cell/probe consistency bit-identical."""
+    pass while keeping cell/probe consistency bit-identical.
+
+    The table comes back materialized: after a re-centering it is the
+    loop's own cut, and with ``iters=1`` (the lazy seed scan) it is cut
+    here."""
+    from candia_spark.operators.materialize import cut
+
     assign, cent = _assignments(
         df, k, iters, scale, vec_col, id_col, _return_both=True
     )
+    if iters < 2:
+        cent, _ = cut(cent)
     return (
         cent,
         assign.select(F.col("__vid").alias(id_col), "cluster"),
@@ -639,6 +648,18 @@ def kmeans_centroids(
     )
 
 
+def _table_margin(centroids: DataFrame) -> tuple:
+    """nmax and max|s| of a centroid table no training run registered:
+    one collect of its k rows."""
+    rows = centroids.select(
+        "n", F.array_max(F.transform("sv", lambda v: F.abs(v))).alias("s")
+    ).collect()
+    return (
+        max((r["n"] for r in rows if r["n"] is not None), default=None),
+        max((r["s"] for r in rows if r["s"] is not None), default=None),
+    )
+
+
 def kmeans_probe_cells(
     queries: DataFrame,
     centroids: DataFrame,
@@ -655,8 +676,8 @@ def kmeans_probe_cells(
     assignment map, so probing and cell assignment share one total
     order (array_sort of the very structs array_min reduces — the
     multiprobe device). Centroids ride one broadcast row; the probe
-    pass is a pure map over the query batch, exploded to
-    (id, cluster) rows.
+    pass is a pure map over the query batch (over its cut when
+    ``int_sum`` is derived here), exploded to (id, cluster) rows.
 
     Output: (id, cluster, *carry), nprobe rows per query. ``carry``
     names extra ``queries`` columns replicated onto each probe row —
@@ -671,50 +692,44 @@ def kmeans_probe_cells(
     )
     q = _quantized(queries, scale, vec_col, id_col, carry=carry)
     if int_sum is None:
-        # derive the bigint-branch gate from one tiny job: the k-row
-        # centroid stats cross-joined with the query batch's
-        # max|component| into a single collect. The worst per-term
-        # |n*x - s| <= nmax * qmax_query + smax — exact Python ints, so
-        # no margin factor; a failed bound just keeps the decimal
-        # branch, which is always correct. The query-side aggregate is
-        # one narrow columnar pass — marginal next to the k-distance
-        # probe map it gates, at any batch size.
-        row = (
-            q.agg(
-                F.max(
-                    F.array_max(F.transform("qv", lambda v: F.abs(v)))
-                ).alias("qmax"),
-                F.max(F.size("qv")).alias("dim"),
-            )
-            .crossJoin(
-                centroids.agg(
-                    F.max("n").alias("nmax"),
-                    F.max(
-                        F.array_max(F.transform("sv", lambda v: F.abs(v)))
-                    ).alias("smax"),
-                )
-            )
-            .collect()[0]
+        # derive the bigint-branch gate from one cut: the query side's
+        # max|component| and dim ride a cut of the quantized batch,
+        # which the probe map below then reads instead of the batch, and
+        # the centroid side's nmax and max|s| are the ones the training
+        # run observed on the cut that made the table (a table from
+        # anywhere else is collected whole: k rows, broadcast material
+        # anyway). The worst per-term |n*x - s| <= nmax * qmax + smax —
+        # exact Python ints, so no margin factor; a failed bound keeps
+        # the decimal branch, which is always correct. (The aggregates
+        # per side, cross-joined into one collect, cost five jobs under
+        # AQE.)
+        from candia_spark.operators.materialize import cut
+
+        q, got = cut(
+            q.drop("n2"),
+            F.max(
+                F.array_max(F.transform("qv", lambda v: F.abs(v)))
+            ).alias("qmax"),
+            F.max(F.size("qv")).alias("dim"),
         )
-        qmax = int(row["qmax"] or 0)
-        dim = max(int(row["dim"] or 1), 1)
-        nmax = int(row["nmax"] or 1)
-        smax = int(row["smax"] or 0)
+        nmax, smax = _TABLE_MARGINS.get(centroids) or _table_margin(centroids)
+        qmax = int(got["qmax"] or 0)
+        dim = max(int(got["dim"] or 1), 1)
+        nmax = int(nmax or 1)
+        smax = int(smax or 0)
         worst = nmax * qmax + smax
         int_sum = dim * worst * worst < 2**63 and nmax <= _N_SQUARED_LIMIT
     carr = centroids.agg(
         F.collect_list(F.struct("cluster", "sv", "n")).alias("cs")
     )
-    keyed = F.transform(
-        F.col("cs"), lambda c: _argmin_struct(c, "cluster", int_sum)
-    )
-    ranked = F.slice(F.array_sort(keyed), 1, nprobe)
+    keyed = _argmin_keys("cluster", int_sum)
     return (
         q.crossJoin(F.broadcast(carr))
         .select(
             F.col("__vid").alias(id_col),
             *[F.col(c) for c in carry],
-            F.explode(ranked).alias("__p"),
+            F.expr(f"explode(slice(array_sort({keyed}), 1, {nprobe}))")
+            .alias("__p"),
         )
         .select(
             id_col,
@@ -964,22 +979,16 @@ def kmeans_hierarchical(
         )
     )
     assign = None
+    # same argmin/distance convention as the flat loop (one shared
+    # implementation: _argmin_keys, same static bigint gate), labeled by
+    # the sub id
+    best = F.expr(f"array_min({_argmin_keys('sub', int_sum)}).sub")
     for it in range(iters2):
         cmap = cent.groupBy("super").agg(
             F.collect_list(F.struct("sub", "sv", "n")).alias("cs")
         )
         joined = sup.join(F.broadcast(cmap), "super")
-        # same argmin/distance convention as the flat loop (one shared
-        # implementation: _argmin_struct, same static bigint gate),
-        # labeled by the sub id
-        best = F.array_min(
-            F.transform(
-                F.col("cs"), lambda c: _argmin_struct(c, "sub", int_sum)
-            )
-        )
-        assign = joined.select(
-            "__vid", "super", "qv", best["sub"].alias("sub")
-        )
+        assign = joined.select("__vid", "super", "qv", best.alias("sub"))
         if it < iters2 - 1:
             cent, got = cut(
                 _recenter(assign, ["super", "sub"]), *_overflow_margin_aggs()

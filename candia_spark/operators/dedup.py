@@ -698,15 +698,14 @@ def _minhash_agg(
     string hashing, so this is ~k-fold cheaper than hashing the string k
     times at identical uniformity.
     """
+    # one SQL string per column: built from F.* calls, each column cost
+    # about eight py4j round trips
     hashed = index.select(
         F.col(id_col),
-        *[
-            F.xxhash64(F.col("shingle"), F.lit(i)).alias(f"h{i}")
-            for i in range(num_hashes)
-        ],
+        *[F.expr(f"xxhash64(shingle, {i}) AS h{i}") for i in range(num_hashes)],
     )
     return hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
+        *[F.expr(f"min(h{i}) AS h{i}") for i in range(num_hashes)]
     )
 
 
@@ -864,21 +863,15 @@ def _band_table(
             f"bands ({bands}) must evenly divide num_hashes ({num_hashes})"
         )
     rows_per_band = num_hashes // bands
+    band_hashes = ", ".join(
+        "xxhash64(" + ", ".join(
+            f"h{b * rows_per_band + r}" for r in range(rows_per_band)
+        ) + ")"
+        for b in range(bands)
+    )
     return agg.select(
         F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        *[
-                            F.col(f"h{b * rows_per_band + r}")
-                            for r in range(rows_per_band)
-                        ]
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_hash"),
+        F.expr(f"posexplode(array({band_hashes}))").alias("band_idx", "band_hash"),
     )
 
 

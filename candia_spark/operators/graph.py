@@ -373,6 +373,15 @@ def authority_scores(
     # (verdict r8 wrong #2): max(score) is observed on the job that
     # materializes the score table, so reading it costs ZERO extra jobs
     # — one job per iteration, guard or no guard.
+    # The iteration's columns are built once: each F.* call is a py4j
+    # round trip, and only the score table changes between iterations.
+    as_src = F.col(id_col).alias("src")
+    contrib_cols = (F.col("dst").alias(id_col), F.expr(contrib_expr).alias("c"))
+    in_mass = F.sum("c").alias("in_mass")
+    next_score = (
+        base_expr + F.coalesce(F.col("in_mass"), F.lit(0)).cast("bigint")
+    ).alias("score")
+    max_score_agg = F.max("score").alias("mx")
     for it in range(iters):
         if not static_safe:
             # iteration 0 reuses the exact init bound for free
@@ -380,24 +389,13 @@ def authority_scores(
                 max_score = int(score_stats["mx"] or 0)
                 dynamic_checks += 1
             _check_score_margin(max_score, num, maxw, n_nodes, init)
-        contrib = ed.join(
-            scores.select(F.col(id_col).alias("src"), "score"), "src"
-        ).select(
-            F.col("dst").alias(id_col),
-            F.expr(contrib_expr).alias("c"),
+        contrib = ed.join(scores.select(as_src, "score"), "src").select(
+            *contrib_cols
         )
-        sums = contrib.groupBy(id_col).agg(F.sum("c").alias("in_mass"))
-        nxt = n.join(sums, id_col, "left").select(
-            F.col(id_col),
-            (
-                base_expr
-                + F.coalesce(F.col("in_mass"), F.lit(0)).cast("bigint")
-            ).alias("score"),
-        )
+        sums = contrib.groupBy(id_col).agg(in_mass)
+        nxt = n.join(sums, id_col, "left").select(id_col, next_score)
         guard = not static_safe and it < iters - 1
-        scores, score_stats = cut(
-            nxt, *([F.max("score").alias("mx")] if guard else [])
-        )
+        scores, score_stats = cut(nxt, *([max_score_agg] if guard else []))
     if exchange_free:
         ed.unpersist()
     telemetry.record("authority", dynamic_checks=dynamic_checks)

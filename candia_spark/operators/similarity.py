@@ -30,14 +30,18 @@ def _dot(a, b):
     )
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+def _norm_sql(col: str) -> str:
+    """SQL for the L2 norm of array column ``col`` in double, summed in
+    lane order."""
+    return (
+        f"sqrt(aggregate(transform(`{col}`, x -> CAST(x AS DOUBLE) * "
+        "CAST(x AS DOUBLE)), 0.0D, (acc, v) -> acc + v))"
     )
+
+
+def _norm(col: str):
+    # one SQL expression: one py4j call to build instead of about ten
+    return F.expr(_norm_sql(col))
 
 
 def cosine_topk_bruteforce(
@@ -63,12 +67,12 @@ def cosine_topk_bruteforce(
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).alias("__qvec"),
-        _norm(F.col(vec_col)).alias("__qnorm"),
+        _norm(vec_col).alias("__qnorm"),
     )
     c = corpus.select(
         F.col(id_col),
         F.col(vec_col).alias("__cvec"),
-        _norm(F.col(vec_col)).alias("__cnorm"),
+        _norm(vec_col).alias("__cnorm"),
     )
     scored = (
         F.broadcast(q)
@@ -166,7 +170,7 @@ def train_spherical_centroids(
 
 def _centroid_scores(vec_col: str, centroids: np.ndarray):
     """Array column of <normalized vec, centroid_i> for every centroid."""
-    norm = _norm(F.col(vec_col))
+    norm = _norm(vec_col)
     return F.array(
         *[
             _dot(F.col(vec_col), F.array(*[F.lit(float(v)) for v in c])) / norm
@@ -233,13 +237,13 @@ def cosine_topk_ivf(
         F.col(query_id_col),
         F.col("bucket"),
         F.col(vec_col).alias("__qvec"),
-        _norm(F.col(vec_col)).alias("__qnorm"),
+        _norm(vec_col).alias("__qnorm"),
     )
     c = cb.select(
         F.col(id_col),
         F.col("bucket"),
         F.col(vec_col).alias("__cvec"),
-        _norm(F.col(vec_col)).alias("__cnorm"),
+        _norm(vec_col).alias("__cnorm"),
     )
     scored = q.join(c, "bucket").withColumn(
         "cosine",
@@ -283,13 +287,13 @@ def cosine_topk_lsh(
         F.col(query_id_col),
         F.col("bucket"),
         F.col(vec_col).alias("__qvec"),
-        _norm(F.col(vec_col)).alias("__qnorm"),
+        _norm(vec_col).alias("__qnorm"),
     )
     c = cb.select(
         F.col(id_col),
         F.col("bucket"),
         F.col(vec_col).alias("__cvec"),
-        _norm(F.col(vec_col)).alias("__cnorm"),
+        _norm(vec_col).alias("__cnorm"),
     )
     scored = q.join(c, "bucket").withColumn(
         "cosine",
@@ -343,7 +347,7 @@ def cosine_dup_pairs(
     base = df.select(
         F.col(id_col),
         F.col(vec_col).alias("__v"),
-        _norm(F.col(vec_col)).alias("__n"),
+        _norm(vec_col).alias("__n"),
     )
     b = hyperplane_lsh_bucket(base, planes, vec_col="__v", out_col="__bucket")
     if multiprobe:
@@ -518,7 +522,7 @@ def mmr_select(
     # id_a < id_b self-join — Q * shortlist^2 / 2 rows, broadcast-sized
     emb = corpus.select(
         F.col(id_col), F.col(vec_col).alias("__v"),
-        _norm(F.col(vec_col)).alias("__n"),
+        _norm(vec_col).alias("__n"),
     )
     se = sl.join(emb, id_col).select(
         query_id_col, F.col(id_col), "__v", "__n"
@@ -757,7 +761,8 @@ def quantize_int8(
     a gate.
 
     Zero-norm vectors raise loudly in-plan (the mmr_select contract —
-    ADVICE r11 made silent zero-norm drops a defect class).
+    ADVICE r11 made silent zero-norm drops a defect class); an empty
+    array has no lane to divide and quantizes to ``[]``.
 
     Output: (id, qvec). ``scale`` defaults to 127 (int8 range).
     ``carry`` names extra ``df`` columns appended unchanged after
@@ -767,23 +772,23 @@ def quantize_int8(
     from candia_spark.operators.clustering import _check_carry
 
     _check_carry(carry, {id_col, "qvec"}, "quantize_int8")
-    norm = _norm(F.col(vec_col))
-    safe = F.when(
-        norm == 0.0,
-        F.raise_error(
-            F.format_string(
-                "quantize_int8: zero-norm vector (id %s) — cosine is "
-                "undefined; filter or fix upstream",
-                F.col(id_col).cast("string"),
-            )
-        ).cast("double"),
-    ).otherwise(norm)
+    # an empty array has norm 0 but nothing to divide: it stays []. The
+    # norm enters the lambda as a repeated lane, evaluated once per row:
+    # referenced inside the lambda it would be re-evaluated for every lane
+    # (lambdas get no common-subexpression elimination), O(d^2) per
+    # vector, and a separate projection is inlined back by CollapseProject
+    vec, norm = f"`{vec_col}`", _norm_sql(vec_col)
+    safe = (
+        f"CASE WHEN {norm} = 0.0D AND size({vec}) > 0 THEN CAST(raise_error("
+        "format_string('quantize_int8: zero-norm vector (id %s) — cosine is "
+        f"undefined; filter or fix upstream', CAST(`{id_col}` AS STRING))) "
+        f"AS DOUBLE) ELSE {norm} END"
+    )
     return df.select(
         F.col(id_col),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") / safe * F.lit(int(scale)))
-            .cast("bigint"),
+        F.expr(
+            f"zip_with({vec}, array_repeat({safe}, size({vec})), (x, s) -> "
+            f"CAST(floor(CAST(x AS DOUBLE) / s * {int(scale)}) AS BIGINT))"
         ).alias("qvec"),
         *[F.col(c) for c in carry],
     )
@@ -995,20 +1000,14 @@ def _subspaces(
     from candia_spark.operators.clustering import _check_carry
 
     _check_carry(carry, {id_col, vec_field, "sub", "sv", "__e"}, "_subspaces")
-    d_over_m = F.floor(F.size(vec_field) / F.lit(m)).cast("int")
+    d_over_m = f"CAST(floor(size(`{vec_field}`) / {int(m)}) AS INT)"
     return q.select(
         F.col(id_col),
         *[F.col(c) for c in carry],
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.struct(
-                    s.cast("bigint").alias("sub"),
-                    F.slice(vec_field, s * d_over_m + 1, d_over_m).alias(
-                        "sv"
-                    ),
-                ),
-            )
+        F.expr(
+            f"explode(transform(sequence(0, {int(m) - 1}), s -> named_struct("
+            f"'sub', CAST(s AS BIGINT), 'sv', "
+            f"slice(`{vec_field}`, s * {d_over_m} + 1, {d_over_m}))))"
         ).alias("__e"),
     ).select(
         F.col(id_col),
@@ -1077,6 +1076,7 @@ def _pq_codebook_kmeans_q(
         raise ValueError(
             f"m, codewords, iters must be positive, got {m}/{codewords}/{iters}"
         )
+    from candia_spark.operators.clustering import _argmin_keys
     from candia_spark.operators.materialize import cut
 
     subs = _subspaces(
@@ -1120,51 +1120,24 @@ def _pq_codebook_kmeans_q(
         "sub", "code", F.col("sv").alias("csum"),
         F.lit(1).cast("bigint").alias("n"),
     )
+    # the per-row argmin over the row's own subspace, in the q57
+    # decimal-exact distance form shared with the flat k-means (per-term
+    # bigint is exact: |v| <= 127 bounds n*v - s by 255n; the sum runs in
+    # decimal(38,0), or in bigint when the static bound above proved no
+    # term or partial sum can reach 2^63). Built once: only the broadcast
+    # row under "cs" changes per pass.
+    keyed = _argmin_keys(
+        "code", int_sum, arr="filter(cs, c -> c.sub = sub)", vec="sv",
+        sums="csum",
+    )
+    best = F.expr(f"array_min({keyed}).code").alias("code")
     for _ in range(iters):
         # all m*K centroids in ONE broadcast row; assignment is a map
         carr = cent.agg(
             F.collect_list(F.struct("sub", "code", "csum", "n")).alias("cs")
         )
         joined = subs.crossJoin(F.broadcast(carr))
-        mine = F.filter(F.col("cs"), lambda c: c["sub"] == F.col("sub"))
-
-        def _key(c):
-            # the q57 decimal-exact distance form: per-term bigint is
-            # exact (|v| <= 127 bounds n*v - s by 255n), the sum runs in
-            # decimal(38,0), the comparable key divides by n^2 in
-            # double. The bigint branch (the clustering _argmin_struct
-            # int_sum device) computes the identical exact integer in
-            # long arithmetic instead of BigDecimal — taken only when
-            # the static bound above proved no term or partial sum can
-            # reach 2^63.
-            if int_sum:
-                d = F.aggregate(
-                    F.zip_with(
-                        F.col("sv"),
-                        c["csum"],
-                        lambda x, s: (c["n"] * x - s) * (c["n"] * x - s),
-                    ),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, v: acc + v,
-                )
-            else:
-                d = F.aggregate(
-                    F.zip_with(
-                        F.col("sv"),
-                        c["csum"],
-                        lambda x, s: (c["n"] * x - s).cast("decimal(18,0)")
-                        * (c["n"] * x - s).cast("decimal(18,0)"),
-                    ),
-                    F.lit(0).cast("decimal(38,0)"),
-                    lambda acc, v: acc + v,
-                )
-            key = d.cast("double") / (c["n"] * c["n"]).cast("double")
-            return F.struct(key.alias("k"), c["code"].alias("code"))
-
-        best = F.array_min(F.transform(mine, _key))
-        assign = joined.select(
-            "__vid", "sub", "sv", best["code"].alias("code")
-        )
+        assign = joined.select("__vid", "sub", "sv", best)
         long_form = assign.select(
             "sub", "code", F.posexplode("sv").alias("pos", "v")
         )
@@ -1200,11 +1173,12 @@ def _pq_codebook_kmeans_q(
     )
 
 
-def _l2_int(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
+def _l2_int(a: str, b: str):
+    """Squared L2 distance of integer array columns ``a`` and ``b``, in
+    bigint."""
+    return F.expr(
+        f"aggregate(zip_with(`{a}`, `{b}`, (x, y) -> (x - y) * (x - y)), "
+        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
     )
 
 
@@ -1258,7 +1232,7 @@ def _pq_encode_q(
         *[F.col(c) for c in carry],
         "sub",
         F.struct(
-            _l2_int(F.col("sv"), F.col("cw")).alias("d"),
+            _l2_int("sv", "cw").alias("d"),
             F.col("code").alias("code"),
         ).alias("__dc"),
     )
@@ -1325,7 +1299,7 @@ def pq_topk_adc(
         query_id_col,
         "sub",
         "code",
-        _l2_int(F.col("sv"), F.col("cw")).alias("__d"),
+        _l2_int("sv", "cw").alias("__d"),
     )
     scored = enc.join(F.broadcast(lut), ["sub", "code"]).groupBy(
         query_id_col, id_col
@@ -1540,7 +1514,6 @@ def pq_topk_ivf_trained(
             corpus, k=coarse_k, iters=coarse_iters, scale=coarse_scale,
             vec_col=vec_col, id_col=id_col,
         )
-        cent, _ = cut(cent)
         cells = cells.select(id_col, F.col("cluster").alias("bucket"))
     else:
         cent, _ = cut(
@@ -1598,7 +1571,7 @@ def pq_topk_ivf_trained(
     qsubs = _subspaces(qz, m, query_id_col)
     lut = qsubs.join(F.broadcast(cb), "sub").select(
         query_id_col, "sub", "code",
-        _l2_int(F.col("sv"), F.col("cw")).alias("__d"),
+        _l2_int("sv", "cw").alias("__d"),
     )
     lutp = probes.join(lut, query_id_col).select(
         query_id_col, "bucket", "sub", "code", "__d"
@@ -1707,7 +1680,7 @@ def pq_topk_ivf(
     )
     qsubs = _subspaces(qz, m, query_id_col)
     lut = qsubs.join(F.broadcast(cb), "sub").select(
-        query_id_col, "sub", "code", _l2_int(F.col("sv"), F.col("cw")).alias("__d")
+        query_id_col, "sub", "code", _l2_int("sv", "cw").alias("__d")
     )
     lutp = probes.join(lut, query_id_col).select(
         query_id_col, "bucket", "sub", "code", "__d"
@@ -1979,7 +1952,6 @@ def ivfadc_build_index(
             corpus, k=coarse_k, iters=coarse_iters, scale=coarse_scale,
             vec_col=vec_col, id_col=id_col,
         )
-        cent, _ = cut(cent)
         cells = cells.select(id_col, F.col("cluster").alias("bucket"))
     q = quantize_int8(corpus.select(id_col, vec_col), vec_col, id_col, scale)
     if max_cell_frac is not None:
@@ -2385,7 +2357,7 @@ def pq_topk_ivfadc_residual(
     )
     lut = qsubs.join(F.broadcast(cb), "sub").select(
         query_id_col, "bucket", "sub", "code",
-        _l2_int(F.col("sv"), F.col("cw")).alias("__d"),
+        _l2_int("sv", "cw").alias("__d"),
     )
     scored = enc.join(
         _lut_side(lut, broadcast_lut), ["bucket", "sub", "code"]

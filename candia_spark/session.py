@@ -32,13 +32,69 @@ applies scale-aware defaults everywhere:
 
 Both are static confs, fixed when the session starts, so a session built
 elsewhere (the plain one ``__spark_entry__.entry`` is handed) gets neither.
+
+One more saving is not a conf and so reaches every session in the
+process: :func:`keep_py4j_lookups` stores py4j's resolved classes,
+packages and static methods, which pyspark otherwise looks up again, one
+driver-JVM round trip each, on every ``F.*`` call and every ``_to_seq``.
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j import java_gateway
 from pyspark.sql import SparkSession
+
+
+def keep_py4j_lookups() -> None:
+    """Make py4j keep each class, package and static-method lookup.
+
+    ``JVMView``, ``JavaPackage`` and ``JavaClass`` resolve every attribute
+    read with a reflection command to the JVM and return a fresh proxy;
+    pyspark reads ``_jvm.org.apache.spark.sql.functions.col``,
+    ``_jvm.PythonUtils.toSeq`` and the like on every call. The wrapper
+    stores a resolved ``JavaClass``, ``JavaPackage`` or static-method
+    ``JavaMember`` in the instance's ``__dict__``, so the next read of the
+    name is a plain attribute hit and never reaches ``__getattr__``.
+
+    - A static field's value is never stored (it can change), nor is a
+      failed lookup.
+    - The store lives on the view and its proxies, so a new gateway (a
+      stopped and restarted session) starts empty.
+    - A view only resolves a bare name such as ``PythonUtils`` against
+      its imports, so ``java_import`` drops what that view stored.
+
+    Installed once per process; calling it again does nothing.
+    """
+    if getattr(java_gateway.JavaClass.__getattr__, "_keeps_lookups", False):
+        return
+    kept = (
+        java_gateway.JavaClass, java_gateway.JavaPackage, java_gateway.JavaMember
+    )
+
+    def keeping(lookup):
+        def __getattr__(self, name):
+            value = lookup(self, name)
+            if isinstance(value, kept):
+                self.__dict__[name] = value
+            return value
+
+        __getattr__._keeps_lookups = True
+        return __getattr__
+
+    for cls in (java_gateway.JVMView, java_gateway.JavaPackage, java_gateway.JavaClass):
+        cls.__getattr__ = keeping(cls.__getattr__)
+    java_import = java_gateway.java_import
+
+    def forgetting_import(jvm_view, import_str):
+        for name, value in list(vars(jvm_view).items()):
+            if isinstance(value, kept):
+                del jvm_view.__dict__[name]
+        return java_import(jvm_view, import_str)
+
+    java_gateway.java_import = forgetting_import
+
 
 # Generated-code cache entries (Spark's default is 100). Distinct classes
 # compiled with an effectively unbounded cache, on 4 cores: one perfbench
@@ -63,6 +119,7 @@ def get_spark(
     preset in the environment and this function leaves it alone.
     ``extra_conf`` overrides any key set here.
     """
+    keep_py4j_lookups()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"

@@ -490,3 +490,53 @@ def test_cluster_purity_null_labels_excluded(spark):
         for r in cluster_purity(df, k=2, iters=2).collect()
     ]
     assert out == [(2, "web", 2)]
+
+
+def test_probe_gate_costs_two_jobs_and_keeps_its_branch(spark, sf_smoke):
+    """``int_sum=None`` derives the bigint-branch gate in at most two jobs
+    before the consumer's action: the embeddings' fan-out and a cut of the
+    quantized batch observing its max|component| and dim, with the
+    centroid side's stats taken from the training run (the cross-joined
+    aggregates it replaced cost five). It picks the branch the bound
+    nmax * qmax + smax gives, also for a table no training run made,
+    whose k rows it collects instead."""
+    from candia_spark.operators.clustering import (
+        _N_SQUARED_LIMIT,
+        kmeans_centroids,
+        kmeans_probe_cells,
+    )
+    from candia_spark.tables import load_table
+
+    emb = load_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
+    qs = emb.filter(F.col("vec_id") % 7 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cent = kmeans_centroids(emb, k=8, iters=2)
+    qv = F.transform(
+        "embedding", lambda x: F.round(x.cast("double") * 1000, 0).cast("long")
+    )
+    side = qs.select(qv.alias("qv")).agg(
+        F.max(F.array_max(F.transform("qv", F.abs))).alias("qmax"),
+        F.max(F.size("qv")).alias("dim"),
+    ).first()
+    cside = cent.agg(
+        F.max("n").alias("nmax"),
+        F.max(F.array_max(F.transform("sv", F.abs))).alias("smax"),
+    ).first()
+    worst = cside["nmax"] * side["qmax"] + cside["smax"]
+    bigint = side["dim"] * worst * worst < 2**63 and cside["nmax"] <= _N_SQUARED_LIMIT
+
+    sc = spark.sparkContext
+    sc.setJobGroup("probe_gate", "probe_gate")
+    try:
+        probes = kmeans_probe_cells(qs, cent, nprobe=3)
+        jobs = len(sc.statusTracker().getJobIdsForGroup("probe_gate"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 1 <= jobs <= 2
+    assert ("decimal(38,0)" not in _plan_of(probes)) == bigint
+    forced = kmeans_probe_cells(qs, cent, nprobe=3, int_sum=bigint)
+    assert sorted(map(tuple, probes.collect())) == sorted(map(tuple, forced.collect()))
+    derived = kmeans_probe_cells(qs, cent.select("cluster", "sv", "n"), nprobe=3)
+    assert ("decimal(38,0)" not in _plan_of(derived)) == bigint

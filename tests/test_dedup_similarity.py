@@ -1415,3 +1415,54 @@ def test_cosine_topk_int8_zero_norm_raises(spark):
     )
     with pytest.raises(Exception, match="zero-norm"):
         quantize_int8(df).collect()
+
+
+def test_quantize_int8_matches_floor_reference(spark):
+    """floor(x / ||x|| * 127) per lane against a numpy reference on seeded
+    random float32 vectors, the norm summed in the engine's lane order."""
+    import math
+
+    from candia_spark.operators.similarity import quantize_int8
+
+    vecs = np.random.default_rng(7).standard_normal((50, 64)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<float>",
+    )
+    got = {r.vec_id: r.qvec for r in quantize_int8(df).collect()}
+    for i, v in enumerate(vecs):
+        x = v.astype(np.float64)
+        norm = math.sqrt(sum(t * t for t in x.tolist()))
+        assert got[i] == np.floor(x / norm * 127).astype(np.int64).tolist()
+
+
+def test_quantize_int8_empty_array_stays_empty(spark):
+    """An empty vector has nothing to divide, so it quantizes to [] rather
+    than reaching the zero-norm guard."""
+    from candia_spark.operators.similarity import quantize_int8
+
+    df = spark.createDataFrame(
+        [(1, []), (2, [3.0, 4.0])], "vec_id bigint, embedding array<float>"
+    )
+    got = {r.vec_id: r.qvec for r in quantize_int8(df).collect()}
+    assert got == {1: [], 2: [76, 101]}
+
+
+def test_quantize_int8_lambda_holds_no_norm(spark):
+    """The norm is evaluated once per row, outside the per-lane lambda:
+    inside it, the 64-lane ``aggregate`` ran once per lane (lambdas get no
+    common-subexpression elimination), O(d^2) per vector."""
+    from candia_spark.operators.similarity import quantize_int8
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0])], "vec_id bigint, embedding array<float>"
+    )
+    plan = quantize_int8(df)._jdf.queryExecution().analyzed()
+    exprs = plan.expressions()
+    (qvec,) = [
+        exprs.apply(i) for i in range(exprs.size())
+        if exprs.apply(i).name() == "qvec"
+    ]
+    body = qvec.child().function().toString()
+    assert "lambda" in body
+    assert "aggregate" not in body.lower()

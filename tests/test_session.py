@@ -1,10 +1,14 @@
-"""The two static settings ``session.get_spark`` fixes for every session:
-a generated-code cache that holds the program's working set, and PySpark's
-DataFrame debugging off."""
+"""The two static settings ``session.get_spark`` fixes for every session
+(a generated-code cache that holds the program's working set, and PySpark's
+DataFrame debugging off), and the py4j lookups it keeps."""
 
 from __future__ import annotations
 
 import py4j.clientserver
+import pytest
+from py4j import java_gateway
+from py4j.java_gateway import JavaClass, JavaMember, JavaPackage, JVMView
+from py4j.protocol import Py4JError
 from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
@@ -61,3 +65,59 @@ def test_column_calls_skip_the_debugging_wrapper(spark, monkeypatch):
     build()
     monkeypatch.undo()
     assert len(calls) <= 60
+
+
+def _reflection_commands(monkeypatch, build) -> list[str]:
+    """The py4j reflection lookups (``r`` commands) ``build()`` sends."""
+    calls = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
+    try:
+        build()
+    finally:
+        monkeypatch.undo()
+    return [c for c in calls if c.startswith("r\n")]
+
+
+def test_warm_column_calls_send_no_reflection_lookup(spark, monkeypatch):
+    """pyspark resolves ``_jvm.org.apache.spark.sql.functions``,
+    ``PythonUtils`` and each static method by name on every call; with the
+    lookups kept, a warm 20-call expression sends none of them."""
+
+    def build():
+        e = F.col("id")
+        for i in range(9):
+            e = e + F.lit(i)
+        return e.alias("x")
+
+    build()
+    assert _reflection_commands(monkeypatch, build) == []
+
+
+def test_static_field_and_failed_lookup_are_not_kept(spark):
+    integer = spark._jvm.java.lang.Integer
+    assert integer.MAX_VALUE == 2**31 - 1
+    assert "MAX_VALUE" not in vars(integer)
+    integer.parseInt
+    assert isinstance(vars(integer)["parseInt"], JavaMember)
+    with pytest.raises(Py4JError):
+        integer.noSuchMember
+    assert "noSuchMember" not in vars(integer)
+
+
+def test_new_view_starts_empty_and_import_forgets(spark, monkeypatch):
+    jvm = spark._jvm
+    jvm.java.lang
+    assert isinstance(vars(jvm)["java"], JavaPackage)
+    fresh = spark.sparkContext._gateway.new_jvm_view("candia_test_view")
+    assert isinstance(fresh, JVMView) and fresh._gateway_client is jvm._gateway_client
+    assert not any(isinstance(v, (JavaClass, JavaPackage)) for v in vars(fresh).values())
+    assert len(_reflection_commands(monkeypatch, lambda: fresh.java)) == 1
+    java_gateway.java_import(fresh, "java.util.ArrayDeque")
+    assert "java" not in vars(fresh)
+    assert isinstance(fresh.ArrayDeque, JavaClass)

@@ -85,20 +85,22 @@ def deoverlap_first_wins(
     Scale: a single-partition analytic window over a dimension-sized table —
     deliberate and cheap. Never apply to a fact table.
     """
+    return windows.withColumn(
+        "__jlo", first_wins_lower_bound(lo_col, hi_col)
+    ).filter(F.col("__jlo") < F.col(hi_col))
+
+
+def first_wins_lower_bound(lo_col: str = "lo", hi_col: str = "hi") -> Column:
+    """Each window's first-wins join-lower-bound, ``max(lo_i, running max of
+    earlier hi)`` over the windows sorted by (lo, hi)
+    (:func:`deoverlap_first_wins`). A window whose bound is not below its
+    ``hi`` is shadowed by earlier windows and wins no point."""
     w = Window.orderBy(F.col(lo_col), F.col(hi_col)).rowsBetween(
         Window.unboundedPreceding, -1
     )
-    return (
-        windows.withColumn(
-            "__jlo",
-            F.greatest(
-                F.col(lo_col).cast("double"),
-                F.coalesce(F.max(F.col(hi_col)).over(w), F.col(lo_col)).cast(
-                    "double"
-                ),
-            ),
-        )
-        .filter(F.col("__jlo") < F.col(hi_col))
+    return F.greatest(
+        F.col(lo_col).cast("double"),
+        F.coalesce(F.max(F.col(hi_col)).over(w), F.col(lo_col)).cast("double"),
     )
 
 

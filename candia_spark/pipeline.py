@@ -3,7 +3,7 @@
 DataFrame -> DataFrame functions under ONE SparkSession.
 
 Stage map (reference process boundary -> here a function call):
- 1. mzml2csv            -> sources.mzml (read + window assign) (S1-S3,F1,F2,J1)
+ 1. mzml2csv            -> sources.mzml + assign_swath_windows (S1-S3,F1,F2,J1)
  2. adjust_swaths       -> adjust_swath_windows              (W1,J2)
  3. split to slices     -> slice_scan_map                    (W2,S5)
  4. tensorize           -> tensorize_slices: one grouped map (W3,W4,A1,A5,J4,J8)
@@ -27,16 +27,26 @@ materialization barriers sit after slicing (the optional parquet slice
 store) and after decomposition (``materialize.cut``, so the fleet runs
 once however many stages read the factors) — both shrink or re-key the
 data, exactly where the reference writes its stage files. The tiny
-header window set is cut too, because stages 1 and 2 both broadcast it.
+SWATH window dimension is built once, with its adjusted bounds and its
+first-wins join bound, and cut: stages 1 and 2 are one broadcast join of
+the points against it, and the export's window centres read it too, so
+no per-row-sized plan re-runs the header walk or the dimension's
+single-partition analytic windows.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from candia_spark import telemetry
 from candia_spark.operators.kernels import (
@@ -49,6 +59,7 @@ from candia_spark.operators.relational import (
     bucketize,
     cross_index,
     explode_index,
+    first_wins_lower_bound,
     groupwise_argmax,
 )
 from candia_spark.operators.sequential import tensorize_slice
@@ -86,28 +97,24 @@ class CandiaConfig:
         return list(range(self.parafac_min_comp, self.parafac_max_comp + 1))
 
 
-# --- stage 2: SWATH window adjustment (W1 + J2) ---------------------------
+# --- stages 1-2: window assignment and adjustment (J1 + W1 + J2) ----------
 
-def adjust_swath_windows(
-    scan_map: DataFrame, windows: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """De-overlap the isolation windows and re-annotate every point with
-    its adjusted bounds (adjust_swaths.R:26-43).
+def adjust_swath_windows(windows: DataFrame) -> DataFrame:
+    """The SWATH window dimension: each header window's original bounds,
+    its de-overlapped bounds (adjust_swaths.R:26-43) and its first-wins
+    join lower bound ``__jlo`` (msproc.py:164-170).
 
-    ``windows`` is the header window set (``swath_lower``,
-    ``swath_upper``; ``sources.mzml.extract_swath_windows``), the same one
-    stage 1 assigned the points to, as the reference adjusts the intervals
-    file mzml2csv writes from the headers (candia:16-18,
-    msproc.py:568-574). The point table is therefore read once. The one
-    case where this differs from adjusting the points' own distinct
-    bounds: a header window that no surviving point falls in still takes
-    part in the lead/lag adjustment of its neighbours, as in the
-    reference.
+    ``windows`` is the distinct header window set (``swath_lower``,
+    ``swath_upper``; ``sources.mzml.header_windows``), as the reference
+    adjusts the intervals file mzml2csv writes from the headers
+    (candia:16-18, msproc.py:568-574). Every header window takes part in
+    its neighbours' lead/lag adjustment, also one that another window
+    shadows or that no surviving point falls in, as in the reference.
 
-    Returns the adjusted points and the window table (original and
-    adjusted bounds). The window table is tiny: it is broadcast-joined
-    back on the original bounds."""
-    adj = adjust_overlapping_windows(
+    Scale: two single-partition analytic windows over a dimension-sized
+    table. The caller cuts it once; :func:`assign_swath_windows` and the
+    export's window centres read the cut."""
+    return adjust_overlapping_windows(
         windows.select(
             F.col("swath_lower").alias("lo"), F.col("swath_upper").alias("hi")
         ),
@@ -119,13 +126,29 @@ def adjust_swath_windows(
         F.col("hi").alias("prec_isolation_window_end"),
         F.col("lower_adj").alias("swath_lower_adjusted"),
         F.col("upper_adj").alias("swath_upper_adjusted"),
+        first_wins_lower_bound("lo", "hi").alias("__jlo"),
     )
-    adjusted = scan_map.join(
-        F.broadcast(adj),
-        on=["prec_isolation_window_start", "prec_isolation_window_end"],
-        how="left",
+
+
+def assign_swath_windows(points: DataFrame, windows: DataFrame) -> DataFrame:
+    """Attach to each point its SWATH window's original and adjusted bounds
+    and drop out-of-SWATH points, in one broadcast range join against the
+    window dimension (:func:`adjust_swath_windows`). A point matches the
+    window whose ``[__jlo, hi)`` holds its precursor m/z, so the first
+    window by lower bound wins (msproc.py:164-170) and the point table
+    never shuffles."""
+    end = F.col("prec_isolation_window_end")
+    winners = windows.filter(F.col("__jlo") < end)
+    prec = F.col("prec_mz")
+    return points.join(
+        F.broadcast(winners), (prec >= F.col("__jlo")) & (prec < end)
+    ).select(
+        "prec_isolation_window_start",
+        "prec_isolation_window_end",
+        *points.columns,
+        "swath_lower_adjusted",
+        "swath_upper_adjusted",
     )
-    return adjusted, adj
 
 
 # --- stage 3: slicing (W2 + S5) -------------------------------------------
@@ -139,13 +162,24 @@ def slice_scan_map(
     — partitionBy alone yields one directory per slice and scales)."""
     sliced = bucketize(scan_map, "rt", window_size_sec, out_col="rt_window")
     if out_path is not None:
+        parts = ["swath_lower_adjusted", "rt_window"]
         (
-            sliced.repartition("swath_lower_adjusted", "rt_window")
-            .write.partitionBy("swath_lower_adjusted", "rt_window")
+            sliced.repartition(*parts)
+            .write.partitionBy(*parts)
             .mode("overwrite")
             .parquet(out_path)
         )
-        sliced = sliced.sparkSession.read.parquet(out_path)
+        # the store's schema given up front (the written columns, then the
+        # partition columns as discovery infers them from the directory
+        # names), so the read-back runs no footer-reading job
+        schema = StructType(
+            [f for f in sliced.schema if f.name not in parts]
+            + [
+                StructField("swath_lower_adjusted", DoubleType()),
+                StructField("rt_window", IntegerType()),
+            ]
+        )
+        sliced = sliced.sparkSession.read.schema(schema).parquet(out_path)
     return sliced
 
 
@@ -220,7 +254,7 @@ def decompose(
 
 # --- stage 6: model / spectrum index (J7 + W9 + W10) ----------------------
 
-def index_models(spark: SparkSession, factors: DataFrame) -> tuple[DataFrame, DataFrame]:
+def index_models(factors: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Model index = cross of observed (swath, rt_window) slices with the
     decomposed ncomp range; spectrum index = one row per component
     (models.py:61-117): globally unique scan ids by deterministic order."""
@@ -260,26 +294,28 @@ def select_best_models(peaks: DataFrame) -> DataFrame:
 
 # --- stage 9: sample modes + CV (A7 + J3) ---------------------------------
 
-def collect_sample_modes(
-    factors: DataFrame, best: DataFrame, spectrum_index: DataFrame | None = None
-) -> DataFrame:
+def collect_sample_modes(factors: DataFrame, best: DataFrame) -> DataFrame:
     """Sample-mode abundances of the best models with per-component
-    coefficient of variation (collect_sample_modes.py:65-95)."""
+    coefficient of variation (collect_sample_modes.py:65-95). The CV and
+    the sample count are window aggregates over each component's rows, so
+    the sample modes are not joined back onto their own aggregate."""
     slice_cols = ["swath_lower_adjusted", "rt_window"]
-    sample_modes = factors.filter(F.col("mode") == 0).join(
-        F.broadcast(best.select(*slice_cols, "ncomp")), on=slice_cols + ["ncomp"]
+    comp = Window.partitionBy(*slice_cols, "ncomp", "comp")
+    return (
+        factors.filter(F.col("mode") == 0)
+        .join(F.broadcast(best.select(*slice_cols, "ncomp")), on=slice_cols + ["ncomp"])
+        .select(
+            *slice_cols,
+            "ncomp",
+            "comp",
+            F.col("row_idx").alias("sample_no"),
+            F.col("value").alias("abundance"),
+            (F.stddev_pop("value").over(comp) / F.avg("value").over(comp)).alias(
+                "cv_across_samples"
+            ),
+            F.count(F.lit(1)).over(comp).alias("n_samples"),
+        )
     )
-    cv = sample_modes.groupBy(*slice_cols, "ncomp", "comp").agg(
-        (F.stddev_pop("value") / F.avg("value")).alias("cv_across_samples"),
-        F.count(F.lit(1)).alias("n_samples"),
-    )
-    return sample_modes.selectExpr(
-        *slice_cols,
-        "ncomp",
-        "comp",
-        "row_idx as sample_no",
-        "value as abundance",
-    ).join(cv, on=slice_cols + ["ncomp", "comp"])
 
 
 # --- stage 10: spectra export (S9 + K5) -----------------------------------
@@ -414,32 +450,30 @@ def run_pipeline(
     """Stages 1-9 (+10 when ``mzxml_out`` is set). Returns the per-stage
     DataFrames for inspection/persistence.
 
-    The header window set is cut first (one header walk, its row count
-    recorded as telemetry op ``windows``). The run is eager through stage
-    5: the decomposition fleet runs once, inside this call, through
-    ``materialize.cut``, and the returned ``factors`` and stages 6-10 read
-    the cut rows instead of re-running the fleet once per consumer. The
-    cut's row and partition counts are recorded as telemetry op ``fleet``.
-    On the cut's persist leg (executors may be removed) the factors stay
-    cached until the session's cache is cleared, as every persist-leg cut
-    does."""
-    from candia_spark.sources.mzml import (
-        assign_windows,
-        extract_swath_windows,
-        read_mzml_points,
-    )
+    The SWATH window dimension is built from the mzML headers and cut
+    first (one header walk; its row count, the number of distinct header
+    windows, is recorded as telemetry op ``windows``). One broadcast join
+    against the cut gives every point its original and adjusted window
+    bounds (stages 1 and 2), and the export's window centres read the same
+    cut. The run is eager through stage 5: the decomposition fleet runs
+    once, inside this call, through ``materialize.cut``, and the returned
+    ``factors`` and stages 6-10 read the cut rows instead of re-running the
+    fleet once per consumer. The cut's row and partition counts are
+    recorded as telemetry op ``fleet``. On the cut's persist leg (executors
+    may be removed) the factors stay cached until the session's cache is
+    cleared, as every persist-leg cut does."""
+    from candia_spark.sources.mzml import header_windows, read_mzml_points
 
-    # one header window set feeds both the point assignment and the
-    # adjustment, so the points are parsed once; it is cut so the header
-    # walk runs once too, not under each of the two broadcasts
     windows, win_stats = cut(
-        extract_swath_windows(spark, mzml_paths), F.count(F.lit(1)).alias("rows")
+        adjust_swath_windows(header_windows(spark, mzml_paths)),
+        F.count(F.lit(1)).alias("rows"),
     )
     telemetry.record("windows", rows=win_stats["rows"])
-    scan_map = assign_windows(
-        read_mzml_points(spark, mzml_paths, cfg.min_scan_intensity), windows
+    points = read_mzml_points(spark, mzml_paths, cfg.min_scan_intensity)
+    adjusted = assign_swath_windows(points, windows)
+    scan_map = adjusted.select(
+        *points.columns, "prec_isolation_window_start", "prec_isolation_window_end"
     )
-    adjusted, adjusted_windows = adjust_swath_windows(scan_map, windows)
     sliced = slice_scan_map(adjusted, cfg.window_size_sec, slice_store_path)
     tensor_long, mz_dim = tensorize_slices(
         sliced, cfg.mass_tol_ppm, cfg.min_tensor_points
@@ -451,7 +485,7 @@ def run_pipeline(
     telemetry.record(
         "fleet", rows=stats["rows"], partitions=factors.rdd.getNumPartitions()
     )
-    model_index, spectrum_index = index_models(spark, factors)
+    model_index, spectrum_index = index_models(factors)
     peaks = time_mode_peaks(factors, cfg)
     best = select_best_models(peaks)
     sample_modes = collect_sample_modes(factors, best)
@@ -469,7 +503,7 @@ def run_pipeline(
         "sample_modes": sample_modes,
     }
     if mzxml_out is not None:
-        centers = adjusted_windows.select(
+        centers = windows.select(
             "swath_lower_adjusted",
             (
                 (F.col("swath_lower_adjusted") + F.col("swath_upper_adjusted")) / 2

@@ -313,9 +313,9 @@ def read_mzml_points(
     return _path_frame(spark, paths).mapInPandas(parse, POINT_SCHEMA)
 
 
-def extract_swath_windows(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Distinct SWATH isolation windows across files, sorted by lower bound
-    (msproc.py:524-556, 568-574)."""
+def header_windows(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Distinct SWATH isolation windows across files, in no order
+    (msproc.py:524-556): one header walk per file, then a distinct."""
     def extract(iterator):
         import pandas as pd
 
@@ -324,12 +324,13 @@ def extract_swath_windows(spark: SparkSession, paths: list[str]) -> DataFrame:
                 wins = sorted(_windows_for_file(path))
                 yield pd.DataFrame(wins, columns=["swath_lower", "swath_upper"])
 
-    return (
-        _path_frame(spark, paths)
-        .mapInPandas(extract, WINDOW_SCHEMA)
-        .distinct()
-        .orderBy("swath_lower")
-    )
+    return _path_frame(spark, paths).mapInPandas(extract, WINDOW_SCHEMA).distinct()
+
+
+def extract_swath_windows(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Distinct SWATH isolation windows across files, sorted by lower bound
+    (msproc.py:524-556, 568-574)."""
+    return header_windows(spark, paths).orderBy("swath_lower")
 
 
 def assign_windows(points: DataFrame, windows: DataFrame) -> DataFrame:

@@ -19,6 +19,8 @@ import pytest
 from candia_spark import telemetry
 from candia_spark.pipeline import (
     CandiaConfig,
+    adjust_swath_windows,
+    assign_swath_windows,
     decompose,
     select_best_models,
     time_mode_peaks,
@@ -123,15 +125,114 @@ def _has_header_walk(df) -> bool:
     )
 
 
+def _plan_nodes(df) -> list[str]:
+    """The operator name of each node of the optimized plan."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln.lstrip(" :+-").split(" ", 1)[0] for ln in plan.splitlines()]
+
+
 def test_header_windows_are_walked_once(spark, result):
-    """Stage 1's assignment and stage 2's adjustment both read the cut
-    window set: no plan after the cut holds the header walk, which the
-    lazy window set's plan does. The cut's row count is recorded."""
+    """Stages 1 and 2 read the cut window dimension: no plan after the cut
+    holds the header walk, which the lazy window set's plan does. Above
+    the cut, the adjusted points are one join of the parsed points against
+    the cut, and the dimension's analytic ``Window`` nodes sit under the
+    cut, not above it. The cut's row count is recorded."""
     assert _has_header_walk(extract_swath_windows(spark, ["unread.mzML"]))
     for name in ("scan_map", "adjusted"):
         assert not _has_header_walk(result[name]), name
+    nodes = _plan_nodes(result["adjusted"])
+    assert "Window" not in nodes, nodes
+    assert nodes.count("Join") == 1 and nodes.count("LogicalRDD") == 1, nodes
     n_windows = REGEN.SYNTHETIC_SHAPE["n_windows"]
     assert result["_telemetry"]["windows"] == {"rows": n_windows}
+
+
+def test_window_dimension_join_matches_clip_then_adjust(spark):
+    """Stages 1-2 on hand-made windows, one of them shadowed by an earlier
+    one: the one join against the window dimension gives each point the
+    same window and adjusted bounds as the first-wins interval join
+    followed by a join with the adjusted windows (``mzml.assign_windows``,
+    then ``adjust_overlapping_windows``), and the shadowed window still
+    moves its neighbours' adjusted bounds."""
+    from candia_spark.operators.relational import adjust_overlapping_windows
+    from candia_spark.sources.mzml import POINT_SCHEMA, WINDOW_SCHEMA, assign_windows
+
+    bounds = ["prec_isolation_window_start", "prec_isolation_window_end"]
+    windows = spark.createDataFrame(
+        [(100.0, 120.0), (105.0, 110.0), (118.0, 130.0), (130.0, 140.0)],
+        WINDOW_SCHEMA,
+    )
+    prec = [99.0, 100.0, 107.0, 118.0, 119.5, 120.0, 129.99, 130.0, 139.0, 140.0]
+    points = spark.createDataFrame(
+        [("s", i, 2, 1.0, 50.0, 1.0, p) for i, p in enumerate(prec)], POINT_SCHEMA
+    )
+    dim = adjust_swath_windows(windows)
+    got = assign_swath_windows(points, dim).toPandas()
+    adj = adjust_overlapping_windows(
+        windows.toDF("lo", "hi"), "lo", "hi", digits=2
+    ).toDF(*bounds, "swath_upper_adjusted", "swath_lower_adjusted")
+    want = (
+        assign_windows(points, windows)
+        .join(adj, on=bounds, how="left")
+        .select(*got.columns)
+        .toPandas()
+    )
+    assert list(got["spectrum_index"].sort_values()) == [1, 2, 3, 4, 5, 6, 7, 8]
+    pd.testing.assert_frame_equal(
+        _sorted(got, ["spectrum_index"]), _sorted(want, ["spectrum_index"])
+    )
+    # the shadowed window's lower bound 105 ends the first window early
+    first = got[got["prec_isolation_window_start"] == 100.0]
+    assert set(first["swath_upper_adjusted"]) == {112.5}
+
+
+# Spark jobs in one warm run_pipeline pass on this fixture plus the
+# sample-modes collect, measured on 4 cores: 22 while the window set was cut
+# before its adjustment and first-wins clip (4 jobs for the cut, 5 more over
+# the cut rows), the slice store was read back by inferring its schema (1)
+# and stage 9 joined the sample modes back onto their CV (2 exchanges); 15
+# since: the cut 3, store write 3, read-back 0, tensorize and fleet 3,
+# stages 6-9 6.
+MAX_PASS_JOBS = 15
+
+
+def test_a_warm_pass_runs_at_most_the_measured_jobs(spark, result, tmp_path):
+    group = "synthetic_pipeline_jobs"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        REGEN.run_synthetic(spark, str(tmp_path))["sample_modes"].collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        telemetry.pop(group)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= MAX_PASS_JOBS
+
+
+def test_sample_mode_cv_matches_pandas(result):
+    """Stage 9: each best model's sample modes with the population CV and
+    the sample count of their component, recomputed in pandas from the
+    run's factors and best models."""
+    keys = SLICE + ["ncomp", "comp"]
+    factors = result["factors"].toPandas()
+    best = result["best_models"].toPandas()[SLICE + ["ncomp"]]
+    modes = factors[factors["mode"] == 0].merge(best, on=SLICE + ["ncomp"])
+    by_comp = modes.groupby(keys)["value"]
+    want = modes[keys].assign(
+        sample_no=modes["row_idx"],
+        abundance=modes["value"],
+        cv_across_samples=by_comp.transform(lambda v: v.std(ddof=0) / v.mean()),
+        n_samples=by_comp.transform("size"),
+    )
+    got = result["sample_modes"]
+    assert got.columns == list(want.columns)
+    assert [f.dataType.simpleString() for f in got.schema][-4:] == [
+        "int", "double", "double", "bigint"
+    ]
+    order = keys + ["sample_no"]
+    got = _sorted(got.toPandas(), order)
+    want = _sorted(want, order)
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want, check_dtype=False, rtol=1e-12)
 
 
 def test_fleet_cut_is_recorded_under_the_job_group(spark, result):

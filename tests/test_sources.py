@@ -67,6 +67,16 @@ def test_swath_windows(spark):
     assert w0["swath_upper"] > w0["swath_lower"]
 
 
+def test_swath_windows_sorted_on_synthetic_input(spark, tmp_path):
+    """Two files: their windows' distinct comes back in hash order, not by
+    lower bound (measured: 425, 450, 400 without the sort)."""
+    paths = _synthetic_mzmls(tmp_path, 2)
+    wins = extract_swath_windows(spark, paths).collect()
+    assert {tuple(w) for w in wins} == _windows_for_file(paths[0])
+    lowers = [w["swath_lower"] for w in wins]
+    assert len(lowers) >= 2 and lowers == sorted(lowers)
+
+
 def _synthetic_mzml(out_dir) -> str:
     """One sample of perfbench's seeded DIA mzML, 3 isolation windows."""
     return _synthetic_mzmls(out_dir, 1)[0]
